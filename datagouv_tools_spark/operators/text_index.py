@@ -179,30 +179,13 @@ def foreach_batch_text_index_appender(index: TextBandIndex, run_key: str):
     (output-first), and the crash window between the two writes is
     healed by ``anti_join_existing``'s one-partition membership probe.
     """
-    from pyspark.sql import functions as F
-
-    ledger = f"{index.path}/applied_batches"
-
-    def applied(spark) -> set[int]:
-        jp = spark._jvm.org.apache.hadoop.fs.Path(ledger)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jp):
-            return set()
-        return {
-            int(r["batch_id"])
-            for r in spark.read.parquet(ledger)
-            .filter(F.col("run_key") == run_key)
-            .collect()
-        }
+    from datagouv_tools_spark.streaming.store import apply_once
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if int(batch_id) in applied(spark):
-            return
-        text_index_append(index, batch, anti_join_existing=True)
-        spark.createDataFrame(
-            [(run_key, int(batch_id))], "run_key string, batch_id bigint"
-        ).write.mode("append").parquet(ledger)
+        apply_once(
+            batch.sparkSession, index.path, run_key, batch_id,
+            lambda: text_index_append(index, batch, anti_join_existing=True),
+        )
 
     return apply
 
@@ -213,7 +196,7 @@ def stream_text_index_append(
     """Start the continuous text-index maintenance stream (availableNow
     drains the backlog and stops; a production stream runs a
     processing-time trigger with the same callback)."""
-    from datagouv_tools_spark.streaming.index_ingest import run_key_for_checkpoint
+    from datagouv_tools_spark.streaming.store import run_key_for_checkpoint
 
     return (
         doc_stream.writeStream.foreachBatch(

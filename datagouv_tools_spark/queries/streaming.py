@@ -401,7 +401,7 @@ def orders_join_ivm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from datagouv_tools_spark.streaming.join_maintain import (
-        foreach_batch_join_maintainer,
+        join_maintain_batch,
         read_join_store,
     )
 
@@ -417,9 +417,11 @@ def orders_join_ivm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_join_maintainer(
+            lambda b, i: join_maintain_batch(
+                b,
                 f"{tmp}/store",
                 tmp,
+                i,
                 ["o_orderkey"],
                 ["o_orderpriority"],
                 ["l_linenumber", "l_extendedprice"],
@@ -714,8 +716,8 @@ def user_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from datagouv_tools_spark.streaming.scd2_maintain import (
-        foreach_batch_scd2_maintainer,
         read_intervals,
+        scd2_batch,
     )
 
     src = _scd2_stream_fixture(spark, sf_dir)
@@ -730,8 +732,9 @@ def user_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_scd2_maintainer(
-                f"{tmp}/base", f"{tmp}/intervals", n_buckets=8
+            lambda b, i: scd2_batch(
+                b.sparkSession, b, f"{tmp}/base", f"{tmp}/intervals",
+                n_buckets=8,
             )
         )
         .option("checkpointLocation", f"{tmp}/ckpt")

@@ -8,8 +8,8 @@ emits exactly these rows), ingest accounting, per-source admission
 tallies. State is one row per counter key, bounded by the key set the
 caller chooses, never by data volume.
 
-Replay discipline is the CMS's (``streaming/sketch_maintain.py``,
-whose versioned-store plumbing this module reuses): ADD is not
+Replay discipline is the CMS's (``streaming/sketch_maintain.py``;
+both fold through ``streaming/store.fold_versioned``): ADD is not
 idempotent, so every committed version carries the (run_key, batch id)
 tag that wrote it and a redelivered batch skips; the versioned layout
 means no crash window ever exposes missing or half-merged state.
@@ -20,14 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datagouv_tools_spark.streaming.sketch_maintain import (
-    _commit_version,
-    _read_current,
-)
+from datagouv_tools_spark.streaming import store
 
 __all__ = [
     "counter_maintain_batch",
-    "foreach_batch_counter_maintainer",
     "read_counters",
 ]
 
@@ -39,64 +35,18 @@ def counter_maintain_batch(
     batch_id: int,
 ) -> None:
     """Fold one micro-batch of (key string, val bigint) increments into
-    the counter store."""
-    spark = increments.sparkSession
-    stored = _read_current(spark, store_path)
-    if stored is not None:
-        tag = stored.select("__run", "__seq").first()
-        if (
-            tag is not None
-            and tag["__run"] == run_key
-            and int(tag["__seq"]) >= batch_id
-        ):
-            return
-        old = stored.select("key", F.col("val").alias("__ov"))
-    else:
-        old = None
-    inc = (
-        increments.groupBy("key")
-        .agg(F.sum("val").alias("__iv"))
+    the counter store. Wire a stream with ``foreachBatch(lambda b, i:
+    counter_maintain_batch(to_increments(b), path, run_key, i))``."""
+    store.fold_versioned(
+        increments.groupBy("key").agg(F.sum("val").alias("val")),
+        store_path, ["key"], "val", run_key, batch_id,
     )
-    if old is not None:
-        merged = old.join(inc, "key", "full_outer").select(
-            "key",
-            (
-                F.coalesce("__ov", F.lit(0)) + F.coalesce("__iv", F.lit(0))
-            ).cast("bigint").alias("val"),
-        )
-    else:
-        merged = inc.select("key", F.col("__iv").cast("bigint").alias("val"))
-    out = merged.withColumn("__run", F.lit(run_key)).withColumn(
-        "__seq", F.lit(int(batch_id)).cast("bigint")
-    )
-    _commit_version(out, store_path)
-
-
-def foreach_batch_counter_maintainer(
-    store_path: str,
-    checkpoint: str,
-    to_increments,
-):
-    """``writeStream.foreachBatch`` callback: ``to_increments(batch) ->
-    DataFrame(key, val)`` maps each micro-batch to its counter
-    contributions (e.g. ``bm25_counter_increments`` partially
-    applied)."""
-    from datagouv_tools_spark.streaming.index_ingest import run_key_for_checkpoint
-
-    rk = run_key_for_checkpoint(checkpoint)
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        counter_maintain_batch(
-            to_increments(batch), store_path, rk, int(batch_id)
-        )
-
-    return run
 
 
 def read_counters(spark, store_path: str) -> dict[str, int]:
     """The maintained counters as a plain dict (bounded by the key
     set — safe to collect)."""
-    cur = _read_current(spark, store_path)
+    cur = store.read_committed(spark, store_path)
     if cur is None:
         return {}
     return {

@@ -4,9 +4,8 @@ The training-data ingestion shape: documents arrive as a stream, and a
 document is admitted exactly once — the first time its normalized
 fingerprint (functions/text.fingerprint_md5) is seen — no matter how
 often crawlers re-deliver it. State is a persistent, bucket-partitioned
-parquet fingerprint store (same layout discipline as
-streaming/upsert.py), so per-batch cost scales with the buckets the
-batch touches, not with corpus history.
+parquet fingerprint store (``streaming/store.py``), so per-batch cost
+scales with the buckets the batch touches, not with corpus history.
 
 Per micro-batch (``foreachBatch``):
 
@@ -39,12 +38,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datagouv_tools_spark.functions.text import fingerprint_md5
+from datagouv_tools_spark.streaming import store
+from datagouv_tools_spark.streaming.util import fan_out_batch
 
-__all__ = ["dedup_gate_batch", "foreach_batch_dedup_gate"]
-
-
-def _bucket(col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+__all__ = ["dedup_gate_batch"]
 
 
 def dedup_gate_batch(
@@ -62,7 +59,8 @@ def dedup_gate_batch(
 
     ``batch_id`` must be the streaming micro-batch id (stable across
     checkpointed replays); it partitions the output so a replay
-    rewrites only its own slice.
+    rewrites only its own slice. Wire it into a stream as
+    ``foreachBatch(lambda b, i: dedup_gate_batch(b, ..., batch_id=i))``.
 
     ``ttl_epochs``: same store-compaction contract as
     ``neardup_gate_batch`` — the store gains an
@@ -72,104 +70,30 @@ def dedup_gate_batch(
     dirs are vacuumed. A document re-delivered more than T epochs
     after its admission is re-admitted (sliding-window exactly-once).
     Choose the mode at store creation; the two layouts don't mix."""
-    from datagouv_tools_spark.streaming.neardup_gate import (
-        _vacuum_expired_epochs,
-    )
-
-    from datagouv_tools_spark.streaming.util import fan_out_batch
-
     spark = batch.sparkSession
     batch = fan_out_batch(batch)
     epoch_now = batch_id // max(1, epoch_batches)
     min_epoch = None if ttl_epochs is None else epoch_now - ttl_epochs + 1
     fp = (
         batch.withColumn("__fp", fingerprint_md5(text_col))
-        .withColumn("__bucket", _bucket("__fp", n_buckets))
+        .withColumn("__bucket", store.bucket(["__fp"], n_buckets))
     )
     # deterministic min-id representative per fingerprint within the batch
     best = fp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
     fp = fp.join(best, ["__fp", id_col], "left_semi")
-    touched = [r["__bucket"] for r in fp.select("__bucket").distinct().collect()]
+    touched = store.touched_buckets(fp)
     if not touched:
         return
 
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    store_exists = fs.exists(jpath)
-    if store_exists:
-        known = spark.read.parquet(store_path).filter(
-            F.col("__bucket").isin(touched)
-        )
-        if min_epoch is not None:
-            known = known.filter(F.col("__epoch") >= min_epoch)
-        admitted = fp.join(known, "__fp", "left_anti")
-    else:
-        admitted = fp
+    known = store.read_buckets(spark, store_path, touched, min_epoch)
+    admitted = fp if known is None else fp.join(known, "__fp", "left_anti")
 
-    # 1) output first (see module docstring for the replay argument).
-    # Dynamic overwrite is a per-WRITE option (never a session-conf
-    # toggle): safe under concurrent streams sharing the session.
-    admitted.withColumn("__batch", F.lit(batch_id)).write.option(
-        "partitionOverwriteMode", "dynamic"
-    ).mode("overwrite").partitionBy("__batch").parquet(out_path)
+    # 1) output first (see module docstring for the replay argument)
+    store.write_partitions(
+        admitted.withColumn("__batch", F.lit(batch_id)), out_path, "__batch"
+    )
     # 2) then the store: touched buckets ∪ new fingerprints, distinct
-    new_fps = admitted.select("__fp", "__bucket")
-    if min_epoch is None:
-        if store_exists:
-            merged = (
-                spark.read.parquet(store_path)
-                .filter(F.col("__bucket").isin(touched))
-                .select("__fp", "__bucket")
-                .unionByName(new_fps)
-                .distinct()
-            )
-        else:
-            merged = new_fps.distinct()
-        part_cols = ["__bucket"]
-    else:
-        new_fps = new_fps.withColumn("__epoch", F.lit(epoch_now))
-        if store_exists:
-            merged = (
-                spark.read.parquet(store_path)
-                .filter(
-                    F.col("__bucket").isin(touched)
-                    & (F.col("__epoch") == epoch_now)
-                )
-                .select("__fp", "__bucket", "__epoch")
-                .unionByName(new_fps)
-                .distinct()
-            )
-        else:
-            merged = new_fps.distinct()
-        part_cols = ["__bucket", "__epoch"]
-    # materialize the merged slice BEFORE overwriting the same
-    # path: with a direct-write/object-store committer, a write
-    # that still lazily reads its own target could lose touched
-    # buckets on task failure (then previously-admitted dups would
-    # be re-admitted). Bounded: touched buckets only.
-    merged = merged.localCheckpoint()
-    merged.write.option("partitionOverwriteMode", "dynamic").mode(
-        "overwrite"
-    ).partitionBy(*part_cols).parquet(store_path)
-    if min_epoch is not None:
-        _vacuum_expired_epochs(spark, store_path, min_epoch)
-
-
-def foreach_batch_dedup_gate(
-    store_path: str,
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 16,
-    ttl_epochs: int | None = None,
-    epoch_batches: int = 1,
-):
-    """``writeStream.foreachBatch`` callback wiring ``dedup_gate_batch``."""
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        dedup_gate_batch(
-            batch, store_path, out_path, text_col, id_col, n_buckets,
-            batch_id, ttl_epochs, epoch_batches,
-        )
-
-    return run
+    store.merge_buckets(
+        admitted.select("__fp", "__bucket"), store_path, touched,
+        epoch=epoch_now, min_epoch=min_epoch,
+    )

@@ -10,8 +10,9 @@ embeddings, an ingest topic of new documents).
 Replay semantics (streaming checkpoints re-deliver batches
 at-least-once):
 
-- A tiny ``applied_batches`` parquet ledger under the index path records
-  every fully-applied (run_key, micro-batch id) pair; a redelivered
+- A tiny ``applied_batches`` parquet ledger under the index path
+  (``streaming/store.py``) records every fully-applied (run_key,
+  micro-batch id) pair; a redelivered
   batch id from the SAME checkpoint is skipped outright, so normal
   checkpoint recovery appends nothing twice. Batch ids are only unique
   per checkpoint, so the ledger is namespaced by a run key derived from
@@ -33,11 +34,15 @@ at-least-once):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from datagouv_tools_spark.operators.ann_index import AnnIndex, index_append
+from datagouv_tools_spark.streaming.store import (
+    applied_batch_ids,
+    apply_once,
+    run_key_for_checkpoint,
+)
 
 __all__ = [
     "applied_batch_ids",
@@ -47,43 +52,6 @@ __all__ = [
 ]
 
 
-def run_key_for_checkpoint(checkpoint: str) -> str:
-    """Stable ledger namespace for one logical stream: micro-batch ids
-    are unique only WITHIN a checkpoint, so the ledger keys on
-    (run_key, batch_id). A restart with a fresh checkpoint gets a fresh
-    run_key — its batches 0,1,... are new work, not replays — while a
-    recovery on the same checkpoint keeps the run_key and the ledger
-    skip applies. (Crash-window duplicates across run_keys are still
-    healed by index_append's anti-join.)"""
-    import hashlib
-
-    return hashlib.md5(checkpoint.encode()).hexdigest()[:16]
-
-
-def applied_batch_ids(
-    spark: SparkSession, index_path: str, run_key: str
-) -> set[int]:
-    """Batch ids of ``run_key``'s stream already fully applied to the
-    index at ``index_path``.
-
-    Existence-probed through the Hadoop FS API (works on any scheme the
-    reader itself accepts — local, hdfs://, s3a://), not a local-path
-    check: per ADVICE r4 on streaming/source.py, os.path probes break
-    the moment the store lives on an object store."""
-    ledger = f"{index_path}/applied_batches"
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(ledger)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return set()
-    rows = (
-        spark.read.parquet(ledger)
-        .filter(F.col("run_key") == run_key)
-        .collect()
-    )
-    return {int(r["batch_id"]) for r in rows}
-
-
 def foreach_batch_index_appender(index: AnnIndex, run_key: str):
     """A ``foreachBatch`` function appending each micro-batch to
     ``index`` exactly once per (run_key, batch id) — ledger-skipped on
@@ -91,14 +59,11 @@ def foreach_batch_index_appender(index: AnnIndex, run_key: str):
     replays and cross-run duplicates."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if int(batch_id) in applied_batch_ids(spark, index.path, run_key):
-            return
-        if not batch.isEmpty():
-            index_append(index, batch, anti_join_existing=True)
-        spark.createDataFrame(
-            [(run_key, int(batch_id))], "run_key string, batch_id bigint"
-        ).write.mode("append").parquet(f"{index.path}/applied_batches")
+        def append() -> None:
+            if not batch.isEmpty():
+                index_append(index, batch, anti_join_existing=True)
+
+        apply_once(batch.sparkSession, index.path, run_key, batch_id, append)
 
     return apply
 

@@ -35,58 +35,16 @@ payload columns (the other side's NULL).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datagouv_tools_spark.operators.incremental import maintain_join
+from datagouv_tools_spark.streaming import store
 
 __all__ = [
     "join_maintain_batch",
-    "foreach_batch_join_maintainer",
     "read_join_store",
 ]
-
-
-def _fs(spark, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _versions(spark, root: str) -> list[tuple[int, str, bool]]:
-    fs, jroot = _fs(spark, root)
-    if not fs.exists(jroot):
-        return []
-    out = []
-    for st in fs.listStatus(jroot):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            p = f"{root}/{name}"
-            ok = fs.exists(
-                spark._jvm.org.apache.hadoop.fs.Path(f"{p}/_COMMIT")
-            )
-            out.append((int(name[1:]), p, ok))
-    return out
-
-
-def _read_tag(spark, path: str) -> dict:
-    fs, _ = _fs(spark, path)
-    jtag = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/tag.json")
-    stream = fs.open(jtag)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(raw.decode("utf-8"))
-
-
-def _current(spark, root: str) -> tuple[str, dict] | None:
-    committed = [(n, p) for n, p, ok in _versions(spark, root) if ok]
-    if not committed:
-        return None
-    path = max(committed)[1]
-    return path, _read_tag(spark, path)
 
 
 def read_join_store(
@@ -94,19 +52,19 @@ def read_join_store(
 ) -> DataFrame | None:
     """The named relation (``a`` / ``b`` / ``view``) of the highest
     committed version, or None before the first commit."""
-    cur = _current(spark, root)
+    cur = store.current_version(spark, root, "_COMMIT")
     if cur is None:
         return None
-    path = f"{cur[0]}/{relation}"
+    path = f"{cur}/{relation}"
     spark.catalog.refreshByPath(path)
     return spark.read.parquet(path)
 
 
-def _signed_apply(store: DataFrame, delta: DataFrame, op_col: str) -> DataFrame:
+def _signed_apply(base: DataFrame, delta: DataFrame, op_col: str) -> DataFrame:
     """Post-batch base snapshot: net the batch per FULL row, evict net
     deletes, append net inserts — the base-store half of the view's
     signed algebra (a replayed-within-batch insert+delete nets out)."""
-    cols = store.columns
+    cols = base.columns
     net = (
         delta.select(
             *cols,
@@ -120,7 +78,7 @@ def _signed_apply(store: DataFrame, delta: DataFrame, op_col: str) -> DataFrame:
     )
     removals = net.filter(F.col("__net") < 0).select(*cols)
     additions = net.filter(F.col("__net") > 0).select(*cols)
-    return store.join(F.broadcast(removals), cols, "left_anti").unionByName(
+    return base.join(F.broadcast(removals), cols, "left_anti").unionByName(
         additions
     )
 
@@ -142,20 +100,16 @@ def join_maintain_batch(
     excluded). The view's columns are key + a_cols + b_cols.
     """
     spark = batch.sparkSession
-    versions = _versions(spark, root)  # one listing serves both uses
-    committed = [(n, p) for n, p, ok in versions if ok]
-    if committed:
-        path = max(committed)[1]
-        tag = _read_tag(spark, path)
-        if tag.get("run") == run_key and int(tag.get("seq", -1)) >= batch_id:
+    path = store.current_version(spark, root, "_COMMIT")
+    if path is not None:
+        tag = store.read_tag(spark, path)
+        if store.already_applied(tag.get("run"), tag.get("seq", -1), run_key, batch_id):
             return  # redelivered batch: already committed
         a_old = spark.read.parquet(f"{path}/a")
         b_old = spark.read.parquet(f"{path}/b")
         view = spark.read.parquet(f"{path}/view")
-        nxt = max(n for n, _, _ in versions) + 1
     else:
         a_old = b_old = view = None
-        nxt = 0
 
     da = batch.filter(F.col(side_col) == "a").select(
         *key_cols, *a_cols, op_col
@@ -172,66 +126,20 @@ def join_maintain_batch(
     new_b = _signed_apply(b_old, db, op_col)
     new_view = maintain_join(view, a_old, b_old, da, db, key_cols, op_col)
 
-    target = f"{root}/v{nxt}"
-    # The three relation writes are independent jobs over the SAME
-    # committed v{N-1} inputs — submit them concurrently (Spark's
-    # scheduler interleaves their stages across the executor pool;
-    # atomicity is unaffected because the _COMMIT marker still goes
-    # last, after ALL three have landed).
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(
-                lambda df, p: df.write.mode("overwrite").parquet(p),
-                df,
-                f"{target}/{rel}",
-            )
-            for df, rel in ((new_a, "a"), (new_b, "b"), (new_view, "view"))
-        ]
-        for f in futs:
-            f.result()
-    fs, _ = _fs(spark, root)
-    tag_path = spark._jvm.org.apache.hadoop.fs.Path(f"{target}/tag.json")
-    out = fs.create(tag_path, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps({"run": run_key, "seq": batch_id}).encode("utf-8")
-            )
-        )
-    finally:
-        out.close()
-    commit = spark._jvm.org.apache.hadoop.fs.Path(f"{target}/_COMMIT")
-    fs.create(commit, True).close()
-    # prune only AFTER the new version is committed
-    for n, p, _ok in _versions(spark, root):
-        if n != nxt:
-            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(p), True)
+    def write(target: str) -> None:
+        # The three relation writes are independent jobs over the SAME
+        # committed v{N-1} inputs — submit them concurrently (Spark's
+        # scheduler interleaves their stages across the executor pool;
+        # atomicity is unaffected because the _COMMIT marker still goes
+        # last, after ALL three have landed).
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futs = [
+                pool.submit(df.write.mode("overwrite").parquet, f"{target}/{rel}")
+                for df, rel in ((new_a, "a"), (new_b, "b"), (new_view, "view"))
+            ]
+            for f in futs:
+                f.result()
 
-
-def foreach_batch_join_maintainer(
-    root: str,
-    run_key: str,
-    key_cols: list[str],
-    a_cols: list[str],
-    b_cols: list[str],
-    side_col: str = "side",
-    op_col: str = "op",
-):
-    """``foreachBatch`` adapter: ``writeStream.foreachBatch(this)``."""
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        join_maintain_batch(
-            batch,
-            root,
-            run_key,
-            int(batch_id),
-            key_cols,
-            a_cols,
-            b_cols,
-            side_col,
-            op_col,
-        )
-
-    return apply
+    store.commit_version(spark, root, write, tag=(run_key, batch_id))

@@ -46,35 +46,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datagouv_tools_spark.streaming import store
+from datagouv_tools_spark.streaming.util import fan_out_batch
+
 __all__ = [
     "embdup_gate_batch",
-    "foreach_batch_embdup_gate",
-    "foreach_batch_neardup_gate",
-    "foreach_batch_simdup_gate",
     "neardup_gate_batch",
     "simdup_gate_batch",
 ]
-
-
-def _store_bucket(n_store_buckets: int):
-    return F.pmod(
-        F.xxhash64(F.col("band_idx"), F.col("band_hash")), F.lit(n_store_buckets)
-    ).cast("int")
-
-
-def _vacuum_expired_epochs(spark, store_path: str, min_epoch: int) -> None:
-    """Physically drop ``__epoch`` partition dirs older than
-    ``min_epoch`` — TTL expiry is a directory delete, never a rewrite."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return
-    glob = jvm.org.apache.hadoop.fs.Path(f"{store_path}/__bucket=*/__epoch=*")
-    for st in fs.globStatus(glob):
-        p = st.getPath()
-        if int(p.getName().split("=", 1)[1]) < min_epoch:
-            fs.delete(p, True)
 
 
 def neardup_gate_batch(
@@ -112,7 +91,6 @@ def neardup_gate_batch(
     retention trade a 100 TB ingest gate makes to bound state. Choose
     the mode at store creation; the two layouts don't mix."""
     from datagouv_tools_spark.operators.dedup import _band_entries
-    from datagouv_tools_spark.streaming.util import fan_out_batch
 
     batch = fan_out_batch(batch)
     entries = _band_entries(
@@ -157,7 +135,6 @@ def embdup_gate_batch(
     raise n_bands for recall; exact-threshold semantics need the
     batch-side verify (``cosine_pairs_lsh``)."""
     from datagouv_tools_spark.operators.similarity import lsh_band_buckets
-    from datagouv_tools_spark.streaming.util import fan_out_batch
 
     batch = fan_out_batch(batch)
     entries = lsh_band_buckets(
@@ -194,20 +171,15 @@ def _banded_admission_batch(
     spark = batch.sparkSession
     epoch_now = batch_id // max(1, epoch_batches)
     min_epoch = None if ttl_epochs is None else epoch_now - ttl_epochs + 1
-    entries = entries.withColumn("__bucket", _store_bucket(n_store_buckets))
-    touched = [r["__bucket"] for r in entries.select("__bucket").distinct().collect()]
+    entries = entries.withColumn(
+        "__bucket", store.bucket(["band_idx", "band_hash"], n_store_buckets)
+    )
+    touched = store.touched_buckets(entries)
     if not touched:
         return
 
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    store_exists = fs.exists(jpath)
-    if store_exists:
-        known = spark.read.parquet(store_path).filter(
-            F.col("__bucket").isin(touched)
-        )
-        if min_epoch is not None:
-            known = known.filter(F.col("__epoch") >= min_epoch)
+    known = store.read_buckets(spark, store_path, touched, min_epoch)
+    if known is not None:
         known = known.select("band_idx", "band_hash").withColumn(
             "__known", F.lit(True)
         )
@@ -237,125 +209,16 @@ def _banded_admission_batch(
     admitted = batch.join(verdict, id_col, "left_semi")
 
     # 1) output first (module docstring: the replay argument)
-    admitted.withColumn("__batch", F.lit(batch_id)).write.option(
-        "partitionOverwriteMode", "dynamic"
-    ).mode("overwrite").partitionBy("__batch").parquet(out_path)
-    # 2) then the store: touched buckets ∪ admitted docs' bands
-    new_bands = (
-        entries.join(verdict, id_col, "left_semi")
-        .select("band_idx", "band_hash", "__bucket")
-        .distinct()
+    store.write_partitions(
+        admitted.withColumn("__batch", F.lit(batch_id)), out_path, "__batch"
     )
-    if min_epoch is None:
-        if store_exists:
-            merged = (
-                spark.read.parquet(store_path)
-                .filter(F.col("__bucket").isin(touched))
-                .select("band_idx", "band_hash", "__bucket")
-                .unionByName(new_bands)
-                .distinct()
-            )
-        else:
-            merged = new_bands
-        part_cols = ["__bucket"]
-    else:
-        # merge within the CURRENT epoch's slice only — older
-        # epochs are immutable and never rewritten
-        new_bands = new_bands.withColumn("__epoch", F.lit(epoch_now))
-        if store_exists:
-            merged = (
-                spark.read.parquet(store_path)
-                .filter(
-                    F.col("__bucket").isin(touched)
-                    & (F.col("__epoch") == epoch_now)
-                )
-                .select("band_idx", "band_hash", "__bucket", "__epoch")
-                .unionByName(new_bands)
-                .distinct()
-            )
-        else:
-            merged = new_bands
-        part_cols = ["__bucket", "__epoch"]
-    # materialize before overwriting the path being read (see
-    # dedup_gate: direct-write committers could otherwise corrupt
-    # touched buckets on task failure). Bounded: touched buckets
-    # (current epoch only, under TTL).
-    merged = merged.localCheckpoint()
-    merged.write.option("partitionOverwriteMode", "dynamic").mode(
-        "overwrite"
-    ).partitionBy(*part_cols).parquet(store_path)
-    if min_epoch is not None:
-        _vacuum_expired_epochs(spark, store_path, min_epoch)
-
-
-def foreach_batch_neardup_gate(
-    store_path: str,
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    token_hash: str = "xxhash64",
-    n_store_buckets: int = 16,
-    ttl_epochs: int | None = None,
-    epoch_batches: int = 1,
-):
-    """``writeStream.foreachBatch`` callback wiring ``neardup_gate_batch``."""
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        neardup_gate_batch(
-            batch,
-            store_path,
-            out_path,
-            text_col,
-            id_col,
-            k,
-            bands,
-            seed,
-            token_hash,
-            n_store_buckets,
-            batch_id,
-            ttl_epochs,
-            epoch_batches,
-        )
-
-    return run
-
-
-def foreach_batch_embdup_gate(
-    store_path: str,
-    out_path: str,
-    vec_col: str = "embedding",
-    id_col: str = "doc_id",
-    dim: int = 64,
-    n_bands: int = 10,
-    band_bits: int = 10,
-    seed: int = 42,
-    n_store_buckets: int = 16,
-    ttl_epochs: int | None = None,
-    epoch_batches: int = 1,
-):
-    """``writeStream.foreachBatch`` callback wiring ``embdup_gate_batch``."""
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        embdup_gate_batch(
-            batch,
-            store_path,
-            out_path,
-            vec_col,
-            id_col,
-            dim,
-            n_bands,
-            band_bits,
-            seed,
-            n_store_buckets,
-            batch_id,
-            ttl_epochs,
-            epoch_batches,
-        )
-
-    return run
+    # 2) then the store: touched buckets ∪ admitted docs' bands
+    store.merge_buckets(
+        entries.join(verdict, id_col, "left_semi").select(
+            "band_idx", "band_hash", "__bucket"
+        ),
+        store_path, touched, epoch=epoch_now, min_epoch=min_epoch,
+    )
 
 
 def simdup_gate_batch(
@@ -385,7 +248,6 @@ def simdup_gate_batch(
     with how the differing bits spread). Same store, replay ordering,
     TTL/epoch compaction, and flood bounds as the sibling gates."""
     from datagouv_tools_spark.operators.dedup import simhash64
-    from datagouv_tools_spark.streaming.util import fan_out_batch
 
     batch = fan_out_batch(batch)
     n_bits = 64 if token_hash == "xxhash64" else 60
@@ -410,26 +272,3 @@ def simdup_gate_batch(
         entries, batch, store_path, out_path, id_col,
         n_store_buckets, batch_id, ttl_epochs, epoch_batches,
     )
-
-
-def foreach_batch_simdup_gate(
-    store_path: str,
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bands: int = 4,
-    token_hash: str = "xxhash64",
-    n_store_buckets: int = 16,
-    ttl_epochs: int | None = None,
-    epoch_batches: int = 1,
-):
-    """``writeStream.foreachBatch`` callback wiring ``simdup_gate_batch``."""
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        simdup_gate_batch(
-            batch, store_path, out_path, text_col, id_col,
-            n_bands, token_hash, n_store_buckets, int(batch_id),
-            ttl_epochs, epoch_batches,
-        )
-
-    return run

@@ -42,19 +42,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datagouv_tools_spark.operators.incremental import aggregate_base
+from datagouv_tools_spark.streaming import store
 
 __all__ = [
     "maintain_rollup_batch",
-    "foreach_batch_rollup_maintainer",
     "read_rollup",
     "delta_maintain_batch",
-    "foreach_batch_delta_maintainer",
     "read_delta_rollup",
 ]
 
-
-def _bucket(key_cols: list[str], n: int):
-    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n)).cast("int")
+# the "store holds partitions" probe, under the name the rollup's
+# randomized-history tests use
+_has_buckets = store.has_data
 
 
 def _net_batch(
@@ -140,73 +139,6 @@ def _net_batch(
     return ins, repl, dels
 
 
-def _exists(spark, path: str) -> bool:
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(jpath)
-
-
-def _has_buckets(spark, path: str) -> bool:
-    """True when the store holds at least one ``__bucket=`` partition.
-    A history that deletes EVERY row leaves the root dir behind with no
-    partitions — reading that with spark.read.parquet raises
-    UNABLE_TO_INFER_SCHEMA (found by the randomized-history sweep), so
-    emptiness is a first-class store state, not an error."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return False
-    for st in fs.listStatus(jpath):
-        if st.getPath().getName().startswith("__bucket="):
-            return True
-    return False
-
-
-def _overwrite_partitions(
-    df: DataFrame,
-    path: str,
-    touched: list[int],
-    with_rows: set[int] | None = None,
-) -> None:
-    """Dynamic partition overwrite of the touched ``__bucket`` dirs.
-    ``df`` MUST already be materialized (localCheckpoint) when its plan
-    reads the same path — the caller holds that invariant so ONE
-    checkpoint serves both store writes.
-
-    Dynamic overwrite only rewrites partitions PRESENT in the written
-    data — a touched bucket whose every row was deleted would silently
-    keep its stale files (resurrecting a fully-deleted group), so those
-    buckets are removed explicitly. A caller that can PROVE every
-    touched bucket holds rows (append-only state like the SCD2 event
-    base: the batch itself puts rows in every touched bucket) passes
-    ``with_rows=touched`` and skips the distinct-collect job."""
-    spark = df.sparkSession
-    if with_rows is None:
-        with_rows = {
-            r["__bucket"] for r in df.select("__bucket").distinct().collect()
-        }
-    else:
-        with_rows = set(with_rows)
-    if with_rows:
-        # per-WRITE dynamic overwrite (not a session-conf toggle): safe
-        # under concurrent writer threads / concurrent streams sharing
-        # the session
-        df.write.option(
-            "partitionOverwriteMode", "dynamic"
-        ).mode("overwrite").partitionBy("__bucket").parquet(path)
-    elif not _exists(spark, path):
-        # nothing to write and no store yet: creating an empty parquet
-        # dir would just break later schema inference
-        return
-    fs_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    for b in touched:
-        if b not in with_rows:
-            fs.delete(
-                spark._jvm.org.apache.hadoop.fs.Path(f"{path}/__bucket={b}"), True
-            )
-
-
 def maintain_rollup_batch(
     delta: DataFrame,
     base_path: str,
@@ -235,23 +167,16 @@ def maintain_rollup_batch(
     redelivered updates.
     """
     spark = delta.sparkSession
-    keyed = delta.withColumn("__bucket", _bucket(key_cols, n_buckets))
-    touched = [r["__bucket"] for r in keyed.select("__bucket").distinct().collect()]
+    keyed = delta.withColumn("__bucket", store.bucket(key_cols, n_buckets))
+    touched = store.touched_buckets(keyed)
     if not touched:
         return
 
     data_cols = [*key_cols, id_col, value_col, "__bucket"]
-    if _has_buckets(spark, base_path):
-        # the previous batch overwrote these partitions; drop any cached
-        # file listing or the scan resolves to deleted part-files
-        spark.catalog.refreshByPath(base_path)
-        base_slice = (
-            spark.read.parquet(base_path)
-            .filter(F.col("__bucket").isin(touched))
-            .select(*data_cols)
-        )
-    else:
-        base_slice = keyed.select(*data_cols).filter(F.lit(False))
+    base_slice = store.read_buckets(spark, base_path, touched)
+    if base_slice is None:
+        base_slice = keyed.filter(F.lit(False))
+    base_slice = base_slice.select(*data_cols)
 
     ins, repl, dels = _net_batch(
         keyed, data_cols, id_col, op_col, delete_op, seq_col
@@ -272,52 +197,19 @@ def maintain_rollup_batch(
         .unionByName(eff_ins)
         .localCheckpoint(eager=True)
     )
-    _overwrite_partitions(new_base_slice, base_path, touched)
+    store.replace_buckets(new_base_slice, base_path, touched)
 
     new_rollup_slice = aggregate_base(new_base_slice, key_cols, value_col).withColumn(
-        "__bucket", _bucket(key_cols, n_buckets)
+        "__bucket", store.bucket(key_cols, n_buckets)
     )
-    _overwrite_partitions(new_rollup_slice, rollup_path, touched)
-
-
-def foreach_batch_rollup_maintainer(
-    base_path: str,
-    rollup_path: str,
-    key_cols: list[str],
-    id_col: str,
-    value_col: str,
-    n_buckets: int = 16,
-    op_col: str = "op",
-    delete_op: str = "D",
-    seq_col: str | None = None,
-):
-    """``writeStream.foreachBatch`` callback wiring
-    :func:`maintain_rollup_batch`."""
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        maintain_rollup_batch(
-            batch,
-            base_path,
-            rollup_path,
-            key_cols,
-            id_col,
-            value_col,
-            n_buckets,
-            op_col,
-            delete_op,
-            seq_col,
-        )
-
-    return run
+    store.replace_buckets(new_rollup_slice, rollup_path, touched)
 
 
 def read_rollup(spark, rollup_path: str) -> DataFrame | None:
     """The maintained rollup, sans layout column (None when the store
     holds no partitions — i.e. every group was deleted)."""
-    if not _has_buckets(spark, rollup_path):
-        return None
-    spark.catalog.refreshByPath(rollup_path)
-    return spark.read.parquet(rollup_path).drop("__bucket")
+    df = store.read_store(spark, rollup_path)
+    return None if df is None else df.drop("__bucket")
 
 
 # --- delta mode -----------------------------------------------------------
@@ -355,25 +247,21 @@ def delta_maintain_batch(
     rollup by pure delta merge, idempotent per (run_key, batch id) via
     in-state bucket tags."""
     spark = delta.sparkSession
-    keyed = delta.withColumn("__bucket", _bucket(key_cols, n_buckets))
-    touched = [r["__bucket"] for r in keyed.select("__bucket").distinct().collect()]
+    keyed = delta.withColumn("__bucket", store.bucket(key_cols, n_buckets))
+    touched = store.touched_buckets(keyed)
     if not touched:
         return
 
     state_cols = [*key_cols, "n", "total", "__run", "__seq", "__bucket"]
-    if _has_buckets(spark, rollup_path):
-        spark.catalog.refreshByPath(rollup_path)
-        slice_ = (
-            spark.read.parquet(rollup_path)
-            .filter(F.col("__bucket").isin(touched))
-            .select(*state_cols)
-        )
+    slice_ = store.read_buckets(spark, rollup_path, touched)
+    if slice_ is not None:
+        slice_ = slice_.select(*state_cols)
         applied = {
             r["__bucket"]
             for r in slice_.select("__bucket", "__run", "__seq")
             .distinct()
             .collect()
-            if r["__run"] == run_key and int(r["__seq"]) >= batch_id
+            if store.already_applied(r["__run"], r["__seq"], run_key, batch_id)
         }
     else:
         slice_ = (
@@ -420,48 +308,14 @@ def delta_maintain_batch(
         .filter(F.col("n") > 0)
         .withColumn("__run", F.lit(run_key))
         .withColumn("__seq", F.lit(int(batch_id)).cast("bigint"))
-        .withColumn("__bucket", _bucket(key_cols, n_buckets))
+        .withColumn("__bucket", store.bucket(key_cols, n_buckets))
         .localCheckpoint(eager=True)
     )
-    _overwrite_partitions(merged, rollup_path, apply_buckets)
-
-
-def foreach_batch_delta_maintainer(
-    rollup_path: str,
-    key_cols: list[str],
-    value_col: str,
-    checkpoint: str,
-    n_buckets: int = 16,
-    op_col: str = "op",
-    delete_op: str = "D",
-):
-    """``writeStream.foreachBatch`` callback for delta mode; the run
-    key derives from the checkpoint path exactly like
-    ``streaming/index_ingest.run_key_for_checkpoint``."""
-    from datagouv_tools_spark.streaming.index_ingest import run_key_for_checkpoint
-
-    rk = run_key_for_checkpoint(checkpoint)
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        delta_maintain_batch(
-            batch,
-            rollup_path,
-            key_cols,
-            value_col,
-            rk,
-            int(batch_id),
-            n_buckets,
-            op_col,
-            delete_op,
-        )
-
-    return run
+    store.replace_buckets(merged, rollup_path, apply_buckets)
 
 
 def read_delta_rollup(spark, rollup_path: str) -> DataFrame | None:
     """The maintained algebraic rollup, sans layout/tag columns (None
     when every group was deleted)."""
-    if not _has_buckets(spark, rollup_path):
-        return None
-    spark.catalog.refreshByPath(rollup_path)
-    return spark.read.parquet(rollup_path).drop("__bucket", "__run", "__seq")
+    df = store.read_store(spark, rollup_path)
+    return None if df is None else df.drop("__bucket", "__run", "__seq")

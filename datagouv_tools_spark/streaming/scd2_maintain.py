@@ -38,13 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datagouv_tools_spark.streaming.rollup_maintain import (
-    _bucket,
-    _exists,
-    _overwrite_partitions,
-)
+from datagouv_tools_spark.streaming import store
 
-__all__ = ["scd2_batch", "foreach_batch_scd2_maintainer", "read_intervals"]
+__all__ = ["scd2_batch", "read_intervals"]
 
 
 def _islands(events: DataFrame, key: str, state: str) -> DataFrame:
@@ -92,15 +88,13 @@ def scd2_batch(
     """Absorb one micro-batch: net-new events into the touched base
     buckets, then rebuild exactly those buckets' interval partitions."""
     b = batch.select(key, state, "ts", "event_id").withColumn(
-        "__bucket", _bucket([key], n_buckets)
+        "__bucket", store.bucket([key], n_buckets)
     )
-    touched = [r["__bucket"] for r in b.select("__bucket").distinct().collect()]
+    touched = store.touched_buckets(b)
     if not touched:
         return
-    if _exists(spark, base_path):
-        existing = spark.read.parquet(base_path).filter(
-            F.col("__bucket").isin(touched)
-        )
+    existing = store.read_buckets(spark, base_path, touched)
+    if existing is not None:
         fresh = b.join(
             existing.select("event_id"), "event_id", "left_anti"
         )
@@ -109,7 +103,7 @@ def scd2_batch(
         slice_df = b
     slice_df = slice_df.localCheckpoint(eager=True)
     iv = _islands(slice_df, key, state).withColumn(
-        "__bucket", _bucket([key], n_buckets)
+        "__bucket", store.bucket([key], n_buckets)
     )
     # both writes read only the materialized slice checkpoint — submit
     # them concurrently (independent jobs; scheduler interleaves)
@@ -120,44 +114,14 @@ def scd2_batch(
     # touched by construction — no per-write distinct-collect job
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
-            pool.submit(
-                _overwrite_partitions, slice_df, base_path, touched,
-                set(touched),
-            ),
-            pool.submit(
-                _overwrite_partitions, iv, intervals_path, touched,
-                set(touched),
-            ),
+            pool.submit(store.replace_buckets, df, path, touched, touched)
+            for df, path in ((slice_df, base_path), (iv, intervals_path))
         ]
         for f in futs:
             f.result()
 
 
-def foreach_batch_scd2_maintainer(
-    base_path: str,
-    intervals_path: str,
-    key: str = "user_id",
-    state: str = "event_type",
-    n_buckets: int = 8,
-):
-    """``writeStream.foreachBatch`` adapter."""
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        scd2_batch(
-            batch.sparkSession,
-            batch,
-            base_path,
-            intervals_path,
-            key=key,
-            state=state,
-            n_buckets=n_buckets,
-        )
-
-    return run
-
-
 def read_intervals(spark, intervals_path: str) -> DataFrame | None:
     """The serving read: the maintained interval history (all buckets)."""
-    if not _exists(spark, intervals_path):
-        return None
-    return spark.read.parquet(intervals_path).drop("__bucket")
+    df = store.read_store(spark, intervals_path)
+    return None if df is None else df.drop("__bucket")

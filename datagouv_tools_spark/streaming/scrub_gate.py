@@ -40,12 +40,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from datagouv_tools_spark.functions.curation import reassembled_kept_text
 from datagouv_tools_spark.operators.dedup import segment_dedup_marks
+from datagouv_tools_spark.streaming import store
+from datagouv_tools_spark.streaming.util import fan_out_batch
 
-__all__ = ["scrub_gate_batch", "foreach_batch_scrub_gate", "stream_scrub"]
-
-
-def _bucket(col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+__all__ = ["scrub_gate_batch", "stream_scrub"]
 
 
 def scrub_gate_batch(
@@ -98,8 +96,6 @@ def scrub_gate_batch(
     min_epoch = None if ttl_epochs is None else epoch_now - ttl_epochs + 1
     # single-file micro-batches would segment on one core (streaming/
     # util.py has the measured numbers)
-    from datagouv_tools_spark.streaming.util import fan_out_batch
-
     batch = fan_out_batch(batch)
     # materialize the segmentation ONCE: several actions consume
     # `marks` (touched-bucket collect, cleaned-output write, store
@@ -120,29 +116,21 @@ def scrub_gate_batch(
             # fan_out_batch above already spread the micro-batch
             fan_out_input=False,
         )
-        .withColumn("__bucket", _bucket("seg_hash", n_buckets))
+        .withColumn("__bucket", store.bucket(["seg_hash"], n_buckets))
         .localCheckpoint(eager=False)
     )
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    store_exists = fs.exists(jpath)
     # ≤ n_buckets values; doubles as the empty-batch guard on every
     # path (the first batch previously ran a separate isEmpty probe)
-    touched = [
-        r["__bucket"] for r in marks.select("__bucket").distinct().collect()
-    ]
+    touched = store.touched_buckets(marks)
     if not touched:
         return
-    if store_exists:
+    known = store.read_buckets(spark, store_path, touched, min_epoch)
+    if known is not None:
         known = (
-            spark.read.parquet(store_path)
-            .filter(F.col("__bucket").isin(touched))
-            .filter(F.col("__batch") < F.lit(batch_id))
-        )
-        if min_epoch is not None:
-            known = known.filter(F.col("__epoch") >= F.lit(min_epoch))
-        known = (
-            known.select("seg_hash").distinct().withColumn("__known", F.lit(True))
+            known.filter(F.col("__batch") < F.lit(batch_id))
+            .select("seg_hash")
+            .distinct()
+            .withColumn("__known", F.lit(True))
         )
         marks = (
             marks.join(known, "seg_hash", "left")
@@ -172,9 +160,10 @@ def scrub_gate_batch(
         cleaned = post_transform(cleaned)
 
     def _write_cleaned() -> None:
-        cleaned.withColumn("__batch", F.lit(batch_id)).write.option(
-            "partitionOverwriteMode", "dynamic"
-        ).mode("overwrite").partitionBy("__batch").parquet(out_path)
+        store.write_partitions(
+            cleaned.withColumn("__batch", F.lit(batch_id)), out_path, "__batch"
+        )
+
     # 2) the store: this batch's novel kept segments, written into
     # per-(__bucket, __epoch, __batch) partitions. With dynamic
     # partition overwrite, the write replaces ONLY this batch's own
@@ -196,9 +185,9 @@ def scrub_gate_batch(
     )
 
     def _write_store() -> None:
-        novel.write.option("partitionOverwriteMode", "dynamic").mode(
-            "overwrite"
-        ).partitionBy("__bucket", "__epoch", "__batch").parquet(store_path)
+        store.write_partitions(
+            novel, store_path, "__bucket", "__epoch", "__batch"
+        )
 
     # Both writes read only the materialized marks checkpoint (plus,
     # for the cleaned side, earlier-batch store partitions) and neither
@@ -212,39 +201,7 @@ def scrub_gate_batch(
         for f in futs:
             f.result()
     if min_epoch is not None:
-        from datagouv_tools_spark.streaming.neardup_gate import (
-            _vacuum_expired_epochs,
-        )
-
-        _vacuum_expired_epochs(spark, store_path, min_epoch)
-
-
-def foreach_batch_scrub_gate(
-    store_path: str,
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seg_len: int = 8,
-    n_buckets: int = 16,
-    token_hash: str = "xxhash64",
-    epoch_batches: int = 8,
-    ttl_epochs: int | None = None,
-    post_transform=None,
-    keep_cols: tuple[str, ...] = (),
-):
-    """``foreachBatch`` adapter around :func:`scrub_gate_batch`."""
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        scrub_gate_batch(
-            batch, store_path, out_path,
-            text_col=text_col, id_col=id_col, seg_len=seg_len,
-            n_buckets=n_buckets, batch_id=int(batch_id),
-            token_hash=token_hash, epoch_batches=epoch_batches,
-            ttl_epochs=ttl_epochs, post_transform=post_transform,
-            keep_cols=keep_cols,
-        )
-
-    return apply
+        store.vacuum_epochs(spark, store_path, min_epoch)
 
 
 def stream_scrub(
@@ -254,10 +211,13 @@ def stream_scrub(
     checkpoint: str,
     **kwargs,
 ) -> StreamingQuery:
-    """Start the scrub stream (availableNow: drain backlog and stop)."""
+    """Start the scrub stream (availableNow: drain backlog and stop);
+    ``kwargs`` go to :func:`scrub_gate_batch`."""
     return (
         doc_stream.writeStream.foreachBatch(
-            foreach_batch_scrub_gate(store_path, out_path, **kwargs)
+            lambda b, i: scrub_gate_batch(
+                b, store_path, out_path, batch_id=i, **kwargs
+            )
         )
         .option("checkpointLocation", checkpoint)
         .outputMode("append")

@@ -17,18 +17,18 @@ itself (re-adding double-counts — unlike the rollup's id-membership
 deltas there are no ids to probe), which is exactly why the tag is
 load-bearing here.
 
-Durability: the store is VERSIONED, never overwritten in place. A
-plain ``mode("overwrite")`` of the store directory deletes the
-accumulated state before the new job commits — a crash mid-write would
-lose EVERYTHING, and the at-least-once redelivery would rebuild the
-sketch from only the redelivered batch: a silent permanent undercount
-that breaks the "never undercounts" contract. Instead each commit
-writes a fresh ``v{N}`` subdirectory (N strictly increasing), readers
-resolve to the highest version whose ``_SUCCESS`` marker exists, and
-older versions are pruned only AFTER the new one is fully committed.
-Every crash window therefore leaves a complete previous version in
-place: a died write leaves an ignored marker-less dir that the
-redelivery supersedes.
+Durability: the store is VERSIONED (``streaming/store.py``), never
+overwritten in place. A plain ``mode("overwrite")`` of the store
+directory deletes the accumulated state before the new job commits — a
+crash mid-write would lose EVERYTHING, and the at-least-once
+redelivery would rebuild the sketch from only the redelivered batch: a
+silent permanent undercount that breaks the "never undercounts"
+contract. Instead each commit writes a fresh ``v{N}`` subdirectory (N
+strictly increasing), readers resolve to the highest version whose
+``_SUCCESS`` marker exists, and older versions are pruned only AFTER
+the new one is fully committed. Every crash window therefore leaves a
+complete previous version in place: a died write leaves an ignored
+marker-less dir that the redelivery supersedes.
 """
 
 from __future__ import annotations
@@ -37,65 +37,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datagouv_tools_spark.operators.sketches import cms_cells
+from datagouv_tools_spark.streaming import store
 
 __all__ = [
     "cms_maintain_batch",
-    "foreach_batch_cms_maintainer",
     "read_cms",
     "cms_estimate",
     "mincount_maintain_batch",
     "read_mincount",
     "mincount_estimate",
     "histogram_maintain_batch",
-    "foreach_batch_histogram_maintainer",
     "read_histogram",
 ]
-
-
-def _fs(spark, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _versions(spark, store_path: str) -> list[tuple[int, str, bool]]:
-    """All ``v{N}`` subdirs as (N, path, committed) — committed means
-    the Spark job's ``_SUCCESS`` marker exists."""
-    fs, root = _fs(spark, store_path)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            p = f"{store_path}/{name}"
-            ok = fs.exists(spark._jvm.org.apache.hadoop.fs.Path(f"{p}/_SUCCESS"))
-            out.append((int(name[1:]), p, ok))
-    return out
-
-
-def _read_current(spark, store_path: str) -> DataFrame | None:
-    """The highest COMMITTED version of the store, or None."""
-    committed = [(n, p) for n, p, ok in _versions(spark, store_path) if ok]
-    if not committed:
-        return None
-    path = max(committed)[1]
-    spark.catalog.refreshByPath(path)
-    return spark.read.parquet(path)
-
-
-def _commit_version(df: DataFrame, store_path: str) -> None:
-    """Write ``df`` as the store's next version, then prune the rest.
-    The write reads the previous version's files, which stay in place
-    until after this commit — no checkpoint needed, no crash window in
-    which the accumulated state is gone."""
-    spark = df.sparkSession
-    existing = _versions(spark, store_path)
-    nxt = max((n for n, _, _ in existing), default=-1) + 1
-    target = f"{store_path}/v{nxt}"
-    df.write.mode("overwrite").parquet(target)
-    fs, _ = _fs(spark, store_path)
-    for _n, p, _ok in existing:
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(p), True)
 
 
 def cms_maintain_batch(
@@ -108,65 +61,17 @@ def cms_maintain_batch(
     width: int = 1024,
 ) -> None:
     """Fold one micro-batch of token occurrences into the CMS store."""
-    spark = batch_tokens.sparkSession
-    stored = _read_current(spark, store_path)
-    if stored is not None:
-        tag = stored.select("__run", "__seq").first()
-        if tag is not None and tag["__run"] == run_key and int(tag["__seq"]) >= batch_id:
-            return
-        old = stored.select("i", "idx", F.col("c").alias("__oc"))
-    else:
-        old = None
-
-    inc = cms_cells(batch_tokens, token_col, depth, width).select(
-        "i", "idx", F.col("c").alias("__ic")
+    store.fold_versioned(
+        cms_cells(batch_tokens, token_col, depth, width),
+        store_path, ["i", "idx"], "c", run_key, batch_id,
+        extra={"__width": F.lit(width)},
     )
-    if old is not None:
-        merged = (
-            old.join(inc, ["i", "idx"], "full_outer")
-            .select(
-                "i",
-                "idx",
-                (
-                    F.coalesce("__oc", F.lit(0)) + F.coalesce("__ic", F.lit(0))
-                ).cast("bigint").alias("c"),
-            )
-        )
-    else:
-        merged = inc.select("i", "idx", F.col("__ic").cast("bigint").alias("c"))
-    out = (
-        merged.withColumn("__run", F.lit(run_key))
-        .withColumn("__seq", F.lit(int(batch_id)).cast("bigint"))
-        .withColumn("__width", F.lit(width))
-    )
-    _commit_version(out, store_path)
-
-
-def foreach_batch_cms_maintainer(
-    store_path: str,
-    checkpoint: str,
-    token_col: str = "tok",
-    depth: int = 4,
-    width: int = 1024,
-):
-    """``writeStream.foreachBatch`` callback: each micro-batch must be
-    (or be transformable to) a frame with ``token_col`` rows."""
-    from datagouv_tools_spark.streaming.index_ingest import run_key_for_checkpoint
-
-    rk = run_key_for_checkpoint(checkpoint)
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        cms_maintain_batch(
-            batch, store_path, rk, int(batch_id), token_col, depth, width
-        )
-
-    return run
 
 
 def read_cms(spark, store_path: str) -> DataFrame | None:
     """The maintained cells, sans tag columns; ``None`` if the store
     has never committed a version (mirrors ``read_counters``)."""
-    cur = _read_current(spark, store_path)
+    cur = store.read_committed(spark, store_path)
     if cur is None:
         return None
     return cur.drop("__run", "__seq", "__width")
@@ -177,7 +82,7 @@ def cms_estimate(spark, store_path: str, tokens: list[str]) -> dict[str, int]:
     (min over depth rows; never undercounts)."""
     from datagouv_tools_spark.operators.sketches import cms_index
 
-    raw = _read_current(spark, store_path)
+    raw = store.read_committed(spark, store_path)
     if raw is None:
         raise FileNotFoundError(
             f"CMS store at {store_path!r} has no committed version"
@@ -221,31 +126,17 @@ def mincount_maintain_batch(
     (rows: group cols + b + mv)."""
     from datagouv_tools_spark.operators.sketches import mincount_buckets
 
-    spark = batch.sparkSession
-    inc = mincount_buckets(batch, group_cols, F.col(key_col), n_buckets).select(
-        *group_cols, "b", F.col("mv").alias("__imv")
+    store.fold_versioned(
+        mincount_buckets(batch, group_cols, F.col(key_col), n_buckets),
+        store_path, [*group_cols, "b"], "mv", run_key, batch_id, merge="min",
     )
-    stored = _read_current(spark, store_path)
-    if stored is not None:
-        old = stored.select(*group_cols, "b", F.col("mv").alias("__omv"))
-        merged = old.join(inc, [*group_cols, "b"], "full_outer").select(
-            *group_cols,
-            "b",
-            F.least("__omv", "__imv").alias("mv"),
-        )
-    else:
-        merged = inc.select(*group_cols, "b", F.col("__imv").alias("mv"))
-    out = merged.withColumn("__run", F.lit(run_key)).withColumn(
-        "__seq", F.lit(int(batch_id)).cast("bigint")
-    )
-    _commit_version(out, store_path)
 
 
 def read_mincount(spark, store_path: str) -> DataFrame | None:
     """The maintained MinCount buckets, sans tag columns; ``None`` if
     the store has never committed a version (mirrors
     ``read_counters``)."""
-    cur = _read_current(spark, store_path)
+    cur = store.read_committed(spark, store_path)
     if cur is None:
         return None
     return cur.drop("__run", "__seq")
@@ -296,67 +187,17 @@ def histogram_maintain_batch(
     store (rows: group cols + b + c)."""
     from datagouv_tools_spark.operators.sketches import histogram_cells
 
-    spark = batch.sparkSession
-    stored = _read_current(spark, store_path)
-    if stored is not None:
-        tag = stored.select("__run", "__seq").first()
-        if (
-            tag is not None
-            and tag["__run"] == run_key
-            and int(tag["__seq"]) >= batch_id
-        ):
-            return
-        old = stored.select(*group_cols, "b", F.col("c").alias("__oc"))
-    else:
-        old = None
-    inc = histogram_cells(
-        batch, group_cols, F.col(value_col), bin_width, n_bins
-    ).select(*group_cols, "b", F.col("c").alias("__ic"))
-    if old is not None:
-        merged = old.join(inc, [*group_cols, "b"], "full_outer").select(
-            *group_cols,
-            "b",
-            (
-                F.coalesce("__oc", F.lit(0)) + F.coalesce("__ic", F.lit(0))
-            ).cast("bigint").alias("c"),
-        )
-    else:
-        merged = inc.select(*group_cols, "b", F.col("__ic").cast("bigint").alias("c"))
-    out = merged.withColumn("__run", F.lit(run_key)).withColumn(
-        "__seq", F.lit(int(batch_id)).cast("bigint")
+    store.fold_versioned(
+        histogram_cells(batch, group_cols, F.col(value_col), bin_width, n_bins),
+        store_path, [*group_cols, "b"], "c", run_key, batch_id,
     )
-    _commit_version(out, store_path)
 
 
 def read_histogram(spark, store_path: str) -> DataFrame | None:
     """The maintained histogram cells, sans tag columns — feed to
     ``operators.sketches.histogram_quantiles`` for estimates.
     ``None`` if the store has never committed a version."""
-    cur = _read_current(spark, store_path)
+    cur = store.read_committed(spark, store_path)
     if cur is None:
         return None
     return cur.drop("__run", "__seq")
-
-
-def foreach_batch_histogram_maintainer(
-    store_path: str,
-    checkpoint: str,
-    group_cols: list[str],
-    value_col: str,
-    bin_width: float = 25.0,
-    n_bins: int = 20,
-):
-    """``writeStream.foreachBatch`` callback wiring
-    :func:`histogram_maintain_batch` (run key from the checkpoint path,
-    the CMS/index-ingest convention)."""
-    from datagouv_tools_spark.streaming.index_ingest import run_key_for_checkpoint
-
-    rk = run_key_for_checkpoint(checkpoint)
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        histogram_maintain_batch(
-            batch, store_path, group_cols, value_col, rk, int(batch_id),
-            bin_width, n_bins,
-        )
-
-    return run

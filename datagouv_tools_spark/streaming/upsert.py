@@ -3,12 +3,12 @@
 Plain parquet has no MERGE, but a bucket-partitioned layout + dynamic
 partition overwrite gives an idempotent, incremental upsert:
 
-1. the table is partitioned by ``__bucket = pmod(xxhash64(key), n)``;
+1. the table is a bucketed store (``streaming/store.py``), partitioned
+   by a hash of the key;
 2. each micro-batch reduces to its newest row per key, finds the
    buckets it touches, reads ONLY those partitions from the existing
    table, merges latest-per-key (CDC semantics — operators/cdc.py),
-   and overwrites just those partitions (``partitionOverwriteMode=
-   dynamic``);
+   and overwrites just those partitions (dynamic partition overwrite);
 3. re-running a batch rewrites the same partitions to the same state —
    idempotent under the streaming checkpoint's at-least-once replay.
 
@@ -20,10 +20,13 @@ metadata; swap the sink for MERGE INTO when a table format is present.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["upsert_batch", "foreach_batch_upserter"]
+from datagouv_tools_spark.operators.cdc import apply_changelog
+from datagouv_tools_spark.streaming import store
+
+__all__ = ["upsert_batch"]
 
 
 def upsert_batch(
@@ -35,53 +38,17 @@ def upsert_batch(
 ) -> None:
     """Merge one (micro-)batch into the bucket-partitioned table at
     ``path`` keeping the newest row per key."""
-    spark = batch.sparkSession
-    keyed = batch.withColumn(
-        "__bucket",
-        F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int"),
-    )
-    # newest row per key WITHIN the batch first (cheap pre-reduce)
-    from datagouv_tools_spark.operators.cdc import apply_changelog
 
-    keyed = apply_changelog(
-        keyed.withColumn("__op", F.lit("U")), key_cols, order_cols, op_col="__op"
-    )
-    touched = [r["__bucket"] for r in keyed.select("__bucket").distinct().collect()]
+    def latest(df: DataFrame) -> DataFrame:
+        return apply_changelog(
+            df.withColumn("__op", F.lit("U")), key_cols, order_cols, op_col="__op"
+        )
+
+    # newest row per key WITHIN the batch first (cheap pre-reduce)
+    keyed = latest(batch.withColumn("__bucket", store.bucket(key_cols, n_buckets)))
+    touched = store.touched_buckets(keyed)
     if not touched:
         return
-
-    # explicit existence probe (a try/except around read.parquet would
-    # also swallow real failures like schema drift or permissions)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col("__bucket").isin(touched))
-            .select(*keyed.columns)
-        )
-        merged_src = existing.unionByName(keyed)
-    else:  # first batch: table doesn't exist yet
-        merged_src = keyed
-    merged = apply_changelog(
-        merged_src.withColumn("__op", F.lit("U")), key_cols, order_cols, op_col="__op"
-    )
-    # the merge READS the partitions the write below overwrites —
-    # materialize first so a direct-write committer (object stores)
-    # cannot delete inputs mid-job (same fix as the streaming gates)
-    merged = merged.localCheckpoint(eager=True)
-
-    merged.write.option("partitionOverwriteMode", "dynamic").mode(
-        "overwrite"
-    ).partitionBy("__bucket").parquet(path)
-
-
-def foreach_batch_upserter(
-    path: str, key_cols: list[str], order_cols: list[str], n_buckets: int = 16
-):
-    """``writeStream.foreachBatch`` callback wiring ``upsert_batch``."""
-
-    def run(batch: DataFrame, batch_id: int) -> None:
-        upsert_batch(batch, path, key_cols, order_cols, n_buckets)
-
-    return run
+    # touched partitions ∪ batch → newest per key; the merge READS the
+    # partitions it overwrites, so the store materializes it first
+    store.merge_buckets(keyed, path, touched, combine=latest)

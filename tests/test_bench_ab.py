@@ -80,3 +80,21 @@ def test_bench_main_stdout_ends_with_one_json_line(tmp_path):
     assert payload["sf"] == 0.001
     # sidecar written and identical to the printed payload
     assert json.loads(full.read_text()) == payload
+
+
+def test_bench_subset_rejects_unknown_query_names():
+    """A name in SPARK_GRAFT_BENCH_QUERIES that is not a registered
+    query fails the run, naming it, before any session starts; a typo
+    must not silently shrink the measured suite."""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_BENCH_QUERIES="q6_forecast_revenue,no_such_query",
+    )
+    res = subprocess.run(
+        [sys.executable, "bench.py"],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=420,
+    )
+    assert res.returncode != 0
+    assert "no_such_query" in res.stderr
+    assert "q6_forecast_revenue" not in res.stderr
+    assert res.stdout.strip() == ""

@@ -15,9 +15,9 @@ from datagouv_tools_spark.operators.retrieval import (
 from datagouv_tools_spark.sources.catalog import load_table
 from datagouv_tools_spark.streaming.counter_maintain import (
     counter_maintain_batch,
-    foreach_batch_counter_maintainer,
     read_counters,
 )
+from datagouv_tools_spark.streaming.store import run_key_for_checkpoint
 
 TERMS = ["spark", "hash", "window"]
 
@@ -59,8 +59,9 @@ def test_streamed_bm25_stats_equal_batch_and_serve_identical_topk(
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_counter_maintainer(
-                path, ckpt, lambda b: bm25_counter_increments(b, TERMS)
+            lambda b, i: counter_maintain_batch(
+                bm25_counter_increments(b, TERMS), path,
+                run_key_for_checkpoint(ckpt), i,
             )
         )
         .option("checkpointLocation", ckpt)

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from datagouv_tools_spark.operators.incremental import aggregate_base
 from datagouv_tools_spark.streaming.rollup_maintain import (
-    foreach_batch_rollup_maintainer,
     maintain_rollup_batch,
     read_rollup,
 )
@@ -142,8 +141,8 @@ def test_streaming_end_to_end_equals_batch(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_rollup_maintainer(
-                base_path, rollup_path, ["k"], "id", "v", n_buckets=4
+            lambda b, i: maintain_rollup_batch(
+                b, base_path, rollup_path, ["k"], "id", "v", n_buckets=4
             )
         )
         .option("checkpointLocation", ckpt)
@@ -287,9 +286,8 @@ def test_delta_mode_group_deleted_to_zero_disappears_and_converges(spark, tmp_pa
 
 
 def test_delta_mode_streaming_end_to_end(spark, tmp_path):
-    from datagouv_tools_spark.streaming.rollup_maintain import (
-        foreach_batch_delta_maintainer,
-    )
+    from datagouv_tools_spark.streaming.rollup_maintain import delta_maintain_batch
+    from datagouv_tools_spark.streaming.store import run_key_for_checkpoint
 
     src = tmp_path / "src"
     src.mkdir()
@@ -307,7 +305,10 @@ def test_delta_mode_streaming_end_to_end(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_delta_maintainer(path, ["k"], "v", ckpt, n_buckets=4)
+            lambda b, i: delta_maintain_batch(
+                b, path, ["k"], "v", run_key_for_checkpoint(ckpt), i,
+                n_buckets=4,
+            )
         )
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)

@@ -13,9 +13,9 @@ from datagouv_tools_spark.operators.sketches import cms_cells
 from datagouv_tools_spark.streaming.sketch_maintain import (
     cms_estimate,
     cms_maintain_batch,
-    foreach_batch_cms_maintainer,
     read_cms,
 )
+from datagouv_tools_spark.streaming.store import run_key_for_checkpoint
 
 B0 = ["the", "cat", "the", "mat", "sat"]
 B1 = ["the", "dog", "sat", "sat"]
@@ -76,7 +76,9 @@ def test_streaming_end_to_end(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_cms_maintainer(path, ckpt, width=64)
+            lambda b, i: cms_maintain_batch(
+                b, path, run_key_for_checkpoint(ckpt), i, width=64
+            )
         )
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -243,15 +245,16 @@ def test_histogram_maintenance_matches_union_and_replay_noop(spark, tmp_path):
 
 
 def test_histogram_streaming_end_to_end(spark, tmp_path):
-    """Real file-stream replay through foreach_batch_histogram_maintainer:
+    """Real file-stream replay through histogram_maintain_batch:
     the maintained store equals the batch sketch of all files."""
     from pyspark.sql import functions as F
 
     from datagouv_tools_spark.operators.sketches import histogram_cells
     from datagouv_tools_spark.streaming.sketch_maintain import (
-        foreach_batch_histogram_maintainer,
+        histogram_maintain_batch,
         read_histogram,
     )
+    from datagouv_tools_spark.streaming.store import run_key_for_checkpoint
 
     rows0 = [("a", float(v)) for v in range(0, 200, 2)]
     rows1 = [("a", float(v)) for v in range(150, 400, 5)] + [("b", 7.0)]
@@ -271,7 +274,9 @@ def test_histogram_streaming_end_to_end(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_histogram_maintainer(path, ckpt, ["g"], "v")
+            lambda b, i: histogram_maintain_batch(
+                b, path, ["g"], "v", run_key_for_checkpoint(ckpt), i
+            )
         )
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)

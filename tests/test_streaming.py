@@ -330,10 +330,7 @@ def test_foreach_batch_upsert_latest_per_key(spark, sf_dir, tmp_path):
     (== the batch latest-event-per-user), and replaying a batch is
     idempotent."""
     from datagouv_tools_spark.sources.catalog import load_table
-    from datagouv_tools_spark.streaming.upsert import (
-        foreach_batch_upserter,
-        upsert_batch,
-    )
+    from datagouv_tools_spark.streaming.upsert import upsert_batch
 
     split = _multi_batch_events_dir(spark, sf_dir, tmp_path)
     stream = _read_split_stream(spark, split).select(
@@ -342,7 +339,9 @@ def test_foreach_batch_upsert_latest_per_key(spark, sf_dir, tmp_path):
     table = str(tmp_path / "user_latest")
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_upserter(table, ["user_id"], ["ts", "event_id"], n_buckets=4)
+            lambda b, i: upsert_batch(
+                b, table, ["user_id"], ["ts", "event_id"], n_buckets=4
+            )
         )
         .option("checkpointLocation", str(tmp_path / "chk"))
         .trigger(availableNow=True)
@@ -387,10 +386,7 @@ def test_streaming_dedup_gate_admits_first_seen_only(spark, tmp_path):
     batch against an up-to-date store) admits nothing and leaves both
     tables unchanged."""
     from datagouv_tools_spark.functions.text import fingerprint_md5
-    from datagouv_tools_spark.streaming.dedup_gate import (
-        dedup_gate_batch,
-        foreach_batch_dedup_gate,
-    )
+    from datagouv_tools_spark.streaming.dedup_gate import dedup_gate_batch
 
     b1 = [(1, "the quick brown fox"), (2, "the  QUICK brown fox"), (3, "unrelated text one")]
     b2 = [(10, "the quick brown fox"), (11, "fresh content two"), (12, "fresh content two")]
@@ -411,7 +407,7 @@ def test_streaming_dedup_gate_admits_first_seen_only(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_dedup_gate(store, out, n_buckets=4)
+            lambda b, i: dedup_gate_batch(b, store, out, n_buckets=4, batch_id=i)
         )
         .option("checkpointLocation", str(tmp_path / "chk"))
         .trigger(availableNow=True)
@@ -605,9 +601,7 @@ def test_neardup_gate_out_of_order_and_lost_store_replay(spark, tmp_path):
 def test_neardup_gate_streaming_end_to_end(spark, tmp_path):
     """foreachBatch wiring under a real availableNow replay: per-file
     micro-batches, near-dups rejected across batch boundaries."""
-    from datagouv_tools_spark.streaming.neardup_gate import (
-        foreach_batch_neardup_gate,
-    )
+    from datagouv_tools_spark.streaming.neardup_gate import neardup_gate_batch
 
     src = tmp_path / "docs_src"
     src.mkdir()
@@ -632,7 +626,9 @@ def test_neardup_gate_streaming_end_to_end(spark, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            foreach_batch_neardup_gate(store, out, k=16, bands=8)
+            lambda b, i: neardup_gate_batch(
+                b, store, out, k=16, bands=8, batch_id=i
+            )
         )
         .option("checkpointLocation", str(tmp_path / "chk"))
         .trigger(availableNow=True)
@@ -1282,3 +1278,119 @@ class TestAutoStatePartitions:
                 output_mode="complete",
                 state_partitions="Auto",
             )
+
+
+_DOCS = [(1, TA), (2, TA_REORDER), (3, TB), (4, TC + " " + TB)]
+
+
+def _run_dedup(spark, root, out):
+    from datagouv_tools_spark.streaming.dedup_gate import dedup_gate_batch
+
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string")
+    dedup_gate_batch(docs, root, out, n_buckets=4, batch_id=0)
+    return [out, root]
+
+
+def _run_neardup(spark, root, out):
+    from datagouv_tools_spark.streaming.neardup_gate import neardup_gate_batch
+
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string")
+    neardup_gate_batch(docs, root, out, k=16, bands=8, n_store_buckets=4)
+    return [out, root]
+
+
+def _run_scrub(spark, root, out):
+    from datagouv_tools_spark.streaming.scrub_gate import scrub_gate_batch
+
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string")
+    scrub_gate_batch(docs, root, out, seg_len=3, n_buckets=4, batch_id=0)
+    return [out, root]
+
+
+def _run_upsert(spark, root, out):
+    from datagouv_tools_spark.streaming.upsert import upsert_batch
+
+    rows = spark.createDataFrame(
+        [(1, 10, "a"), (1, 20, "b"), (2, 5, "c")], "k long, ts long, v string"
+    )
+    upsert_batch(rows, root, ["k"], ["ts"], n_buckets=4)
+    return [root]
+
+
+def _run_scd2(spark, root, out):
+    from datagouv_tools_spark.streaming.scd2_maintain import scd2_batch
+
+    events = spark.createDataFrame(
+        [(1, "view", 1, 100), (1, "view", 2, 101), (1, "buy", 3, 102),
+         (2, "view", 1, 103)],
+        "user_id long, event_type string, ts long, event_id long",
+    )
+    scd2_batch(spark, events, root, out, n_buckets=4)
+    return [root, out]
+
+
+@pytest.mark.parametrize(
+    "run", [_run_dedup, _run_neardup, _run_scrub, _run_upsert, _run_scd2],
+    ids=["dedup_gate", "neardup_gate", "scrub_gate", "upsert", "scd2"],
+)
+def test_store_root_left_by_failed_first_write_reads_as_empty(
+    spark, tmp_path, run
+):
+    """A first store write that dies leaves the root holding only its
+    ``.spark-staging-*`` dir. Reading that root raises
+    UNABLE_TO_INFER_SCHEMA, so a "root exists" probe would wedge the
+    stream: every restart replays the batch and fails the same way.
+    The store must treat such a root as empty, and the batch must land
+    exactly as on a fresh store."""
+
+    def snapshot(paths):
+        return [
+            sorted(tuple(r) for r in spark.read.parquet(p).collect())
+            for p in paths
+        ]
+
+    want = snapshot(run(spark, str(tmp_path / "fresh"), str(tmp_path / "fresh_out")))
+
+    root = tmp_path / "wedged"
+    staged = root / ".spark-staging-0f1e2d3c" / "__bucket=1"
+    staged.mkdir(parents=True)
+    (staged / "part-00000-dead.snappy.parquet").write_bytes(b"torn")
+    got = snapshot(run(spark, str(root), str(tmp_path / "wedged_out")))
+    assert got == want
+
+
+def test_store_module_owns_state_layout():
+    """Only ``streaming/store.py`` knows how streaming state sits on
+    disk: no other streaming module opens a Hadoop FileSystem, sets
+    ``partitionOverwriteMode`` or builds the ``pmod(xxhash64(...))``
+    bucket, and no code borrows a private helper from a streaming
+    module other than the store."""
+    import ast
+    import pathlib
+    import re
+
+    import datagouv_tools_spark
+
+    pkg = pathlib.Path(datagouv_tools_spark.__file__).parent
+    for path in sorted((pkg / "streaming").glob("*.py")):
+        if path.name == "store.py":
+            continue
+        src = path.read_text()
+        assert "getFileSystem" not in src, path.name
+        assert "partitionOverwriteMode" not in src, path.name
+        assert not re.search(r"pmod\(\s*(F\.)?xxhash64", src), path.name
+
+    borrowed = []
+    for path in [*pkg.rglob("*.py"), *(pkg.parent / "tools").glob("*.py")]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").startswith("datagouv_tools_spark.streaming.")
+                and node.module != "datagouv_tools_spark.streaming.store"
+            ):
+                borrowed += [
+                    f"{path.name}: {node.module}.{a.name}"
+                    for a in node.names
+                    if a.name.startswith("_")
+                ]
+    assert borrowed == []

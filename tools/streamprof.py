@@ -36,7 +36,8 @@ def parse_event_log(evdir: str, t0_ms: float, t1_ms: float) -> list[dict]:
     import glob
 
     jobs: dict[int, dict] = {}
-    for path in glob.glob(f"{evdir}/*"):
+    # Spark 4 rolls event logs into eventlog_v2_* dirs by default
+    for path in glob.glob(f"{evdir}/**/*", recursive=True):
         if os.path.isdir(path):
             continue
         with open(path, errors="replace") as fh:
@@ -91,6 +92,8 @@ def main(argv: list[str]) -> int:
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file://{EVLOG_DIR}",
+            # plain JSON lines: parse_event_log reads no codec
+            "spark.eventLog.compress": "false",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -140,8 +143,9 @@ def main(argv: list[str]) -> int:
             ),
             "jobs": parse_event_log(EVLOG_DIR, t0, t1),
         }
+        report[name]["n_jobs"] = len(report[name]["jobs"])
         print(json.dumps({name: {k: report[name][k] for k in
-                                 ("wall_s", "trigger_total_ms")}}),
+                                 ("wall_s", "trigger_total_ms", "n_jobs")}}),
               file=sys.stderr)
     out = os.environ.get("SPARK_GRAFT_STREAMPROF", "STREAMPROF.json")
     with open(out, "w") as fh:
