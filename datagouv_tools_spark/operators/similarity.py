@@ -1,22 +1,34 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers:
+Tiers, exact first:
 
 - ``cosine_topk`` — exact brute force: queries × corpus with the
   query side broadcast, per-pair JVM cosine, per-query top-k via
   window rank-limit. The right baseline, and the in-bucket kernel for
-  the ANN tier. Scale shape: corpus stays partitioned (never
+  the ANN tiers. Scale shape: corpus stays partitioned (never
   shuffled); work is |Q|·|C| — bound |Q| per job.
-- ``lsh_topk`` — random-hyperplane LSH: H fixed seeded hyperplanes →
-  sign-bit bucket id per vector; candidates = same bucket, plus (with
-  ``n_probes`` > 1) the query's buckets at Hamming distance 1 — the
-  standard recall lever for sign-LSH at fixed n_planes. Exact cosine +
-  top-k within candidates. Shuffles on bucket id only. Recall is
-  tunable via n_planes⁻¹ and n_probes; it's approximate by design.
+- Exact all-pairs: ``cosine_pairs_exact`` is the row-bounded
+  broadcast verifier (in-bucket, and the tests' reference);
+  ``cosine_pairs_blocked`` (pairs ≥ threshold) and
+  ``cosine_knn_blocked`` (each row's top-k) are the distributed forms,
+  both reducers over one block-pair kernel that scores each pair of
+  hash blocks in row strips of bounded size.
+- Random-hyperplane LSH: H fixed seeded hyperplanes → sign-bit bucket
+  ids. ``lsh_topk`` scores candidates sharing a bucket (plus, with
+  ``n_probes`` > 1, the query's buckets at Hamming distance 1);
+  ``cosine_pairs_lsh`` verifies banded multiprobe candidate pairs;
+  ``cosine_star_edges_lsh`` emits linear-size unverified cluster
+  edges. Approximate by design; recall is tunable.
+- IVF: ``ivf_assign`` / ``ivf_topk`` probe the ``nprobe`` nearest of
+  ``n_lists`` coarse centroids and run exact cosine only there.
+- Product quantization: ``pq_codebooks`` / ``pq_encode`` build codes,
+  ``pq_adc_topk`` / ``pq_adc_topk_batch`` search them by asymmetric
+  distance, ``ivfpq_topk`` composes IVF probing with ADC scoring.
+  ``random_projection`` gives low-dimensional previews.
 
 Determinism: scores are rounded BEFORE ranking, ties broken by id, so
 results are stable across engines and partitionings (oracle-checkable
-for the exact tier).
+for the exact tiers and every seeded approximate one).
 """
 
 from __future__ import annotations
@@ -72,13 +84,30 @@ def cosine_topk(
     # |Q| JVM cosines per corpus row are compute-bound map work:
     # unblock the single-split corpus-scan case (guide §2.5; no-op on
     # multi-split inputs)
-    pairs = q.crossJoin(
-        fan_out_narrow_scan(corpus).select(corpus_id, corpus_vec)
-    ).filter(F.col(query_id) != F.col(corpus_id))
+    pairs = q.crossJoin(fan_out_narrow_scan(corpus).select(corpus_id, corpus_vec))
+    return _rank_exact(
+        pairs, query_id, corpus_id, query_vec, corpus_vec, k, round_to
+    )
+
+
+def _rank_exact(
+    pairs: DataFrame,
+    query_id: str,
+    corpus_id: str,
+    query_vec: str,
+    corpus_vec: str,
+    k: int,
+    round_to: int,
+) -> DataFrame:
+    """The exact-cosine tail of every candidate-pair top-k: drop
+    self-pairs, score the rest with the JVM cosine rounded to
+    ``round_to``, keep each query's first k by (sim desc, id asc).
+    Returns (query_id, vec_id, sim, rk)."""
     sim = F.round(cosine(query_vec, corpus_vec), round_to)
     w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
     return (
-        pairs.select(query_id, corpus_id, sim.alias("sim"))
+        pairs.filter(F.col(query_id) != F.col(corpus_id))
+        .select(query_id, corpus_id, sim.alias("sim"))
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
     )
@@ -142,7 +171,6 @@ def cosine_pairs_exact(
     with np.errstate(invalid="ignore"):
         c_norms = np.sqrt(np.einsum("ij,ij->i", c_mat, c_mat))
     bc = df.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_norms))
-    scale = 10.0**round_to
 
     def gen(batches):
         ids_c, m_c, n_c = bc.value
@@ -155,12 +183,8 @@ def cosine_pairs_exact(
             denom = np.outer(a_norms, n_c)
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = (a_mat @ m_c.T) / denom
-            # round half away from zero (numpy's round is half-even;
-            # Spark/DuckDB ROUND is half-up)
             sims = np.where(
-                np.isfinite(sims),
-                np.trunc(np.abs(sims) * scale + 0.5) / scale * np.sign(sims),
-                np.nan,
+                np.isfinite(sims), _round_half_away(sims, round_to), np.nan
             )
             mask = (
                 (sims >= threshold)
@@ -188,23 +212,175 @@ def cosine_pairs_blocked(
     """Exact all-pairs cosine ≥ threshold, DISTRIBUTED — no driver
     collect, no corpus broadcast.
 
-    Block-matrix decomposition: rows hash into ``n_blocks`` blocks; each
-    unordered block pair (i ≤ j) becomes one task group holding only
-    blocks i and j (≈ 2n/B rows), which runs the same BLAS kernel as
-    ``cosine_pairs_exact`` via ``applyInPandas``. Every vector is
-    replicated to exactly B groups, so shuffle volume is n·B rows and
-    per-task memory is bounded by the block size — choose B so a block
-    fits an executor, independent of corpus size. Work stays O(n²)
-    (inherent to exact all-pairs); at 100 TB put LSH blocking in front
-    and use this only when exactness is the contract.
+    Runs on the block-pair kernel (:func:`_block_pairs`): each unordered
+    block pair (i ≤ j) is one task group holding only blocks i and j
+    (≈ 2n/B rows), scored in row strips of at most ``_STRIP_BYTES``.
+    Every vector is replicated to exactly B groups, so shuffle volume is
+    n·B rows and per-task memory is 2n/B vectors plus one strip — choose
+    B so a block fits an executor, independent of corpus size. Work
+    stays O(n²) (inherent to exact all-pairs); at 100 TB put LSH
+    blocking in front and use this only when exactness is the contract.
 
     Semantics and determinism are identical to ``cosine_pairs_exact``
     (round half-away-from-zero before the threshold compare): the two
-    are interchangeable, oracle-checked by the same SQL.
+    are interchangeable, oracle-checked by the same SQL. Each pair is
+    emitted once, as (min id, max id, sim).
     """
-    import numpy as np
-    import pandas as pd
+    return _block_pairs(
+        df, id_col, vec_col, n_blocks, round_to, _pairs_reducer(threshold),
+        ("id_a", "id_b"),
+    )
 
+
+def cosine_knn_blocked(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 5,
+    round_to: int = 6,
+    n_blocks: int = 8,
+) -> DataFrame:
+    """Exact k-NN edges of the all-pairs cosine graph, DISTRIBUTED —
+    (query_id, vec_id, sim) for each vector's k most similar others,
+    ties broken (sim desc, vec_id asc), zero-norm vectors and NaN sims
+    excluded on both sides, exactly as a full directed pair list +
+    row_number ≤ k would produce.
+
+    Same block-pair kernel as :func:`cosine_pairs_blocked`, but each
+    row strip emits only each row's TOP-k in both directions (stable
+    argsort over id-ascending columns — exact ties), so kernel output
+    is O(n·B·k·strips) rows instead of the O(n²) pair stream; a bounded
+    global window merges the per-strip lists — the standard exact top-k
+    merge. The O(n²) BLAS multiply is inherent to exactness; what
+    collapses is everything downstream of it: Arrow transfer, shuffle,
+    and the corpus-sized row_number window. (Measured at sf1: the
+    pair-stream + union + window form spent its time moving 2×n²/2
+    rows, not in the matmul.)
+    """
+    cand = _block_pairs(
+        df, id_col, vec_col, n_blocks, round_to, _topk_reducer(k),
+        ("query_id", "vec_id"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
+    return (
+        cand.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= k)
+        .drop("__rk")
+    )
+
+
+# Byte budget of one row strip of a block pair's float64 similarity
+# matrix: a task holds its 2n/B input vectors plus a few strip-sized
+# temporaries, never the dense (n/B)² matrix. Blocks up to ~1,000 rows
+# (sf0.1 has ~250) still run as one strip, one matmul per group.
+_STRIP_BYTES = 8 << 20
+
+
+def _round_half_away(x, round_to: int):
+    """Round half away from zero to ``round_to`` decimals, elementwise —
+    Spark/DuckDB ROUND semantics (numpy's round is half-even). Callers
+    mask non-finite inputs themselves."""
+    import numpy as np
+
+    scale = 10.0**round_to
+    return np.trunc(np.abs(x) * scale + 0.5) / scale * np.sign(x)
+
+
+def _pairs_reducer(threshold: float):
+    """Strip reducer of ``cosine_pairs_blocked``: every pair with sim ≥
+    ``threshold`` as (min id, max id, sim); inside one block only
+    a < b, so each pair is emitted once."""
+    import numpy as np
+
+    def reduce(a_ids, b_ids, sims, diag):
+        mask = sims >= threshold
+        if diag:
+            mask &= a_ids[:, None] < b_ids[None, :]
+        ii, jj = np.nonzero(mask)
+        a, b = a_ids[ii], b_ids[jj]
+        return [(np.minimum(a, b), np.maximum(a, b), sims[ii, jj])]
+
+    return reduce
+
+
+def _topk_reducer(k: int):
+    """Strip reducer of ``cosine_knn_blocked``: each row's top-k in both
+    directions (one direction inside a single block). Candidate ids
+    ascend, and the stable ascending sort of -sim puts NaN (invalid)
+    last and keeps id-asc order within equal sims."""
+    import numpy as np
+
+    def top(q_ids, sims, c_ids):
+        order = np.argsort(-sims, axis=1, kind="stable")[:, :k]
+        best = np.take_along_axis(sims, order, axis=1)
+        qq, pos = np.nonzero(np.isfinite(best))
+        return q_ids[qq], c_ids[order[qq, pos]], best[qq, pos]
+
+    def reduce(a_ids, b_ids, sims, diag):
+        out = [top(a_ids, sims, b_ids)]
+        if not diag:
+            out.append(top(b_ids, np.ascontiguousarray(sims.T), a_ids))
+        return out
+
+    return reduce
+
+
+def _block_pair_group(
+    pdf: pd.DataFrame, gi: int, gj: int, round_to: int, reduce, strip_bytes: int
+) -> list:
+    """One task group of :func:`_block_pairs`: rounded cosines of block
+    ``gi`` × block ``gj`` in row strips of ≤ ``strip_bytes``. Rows are
+    laid out id-ascending; NaN marks zero-norm, non-finite and self
+    entries. Returns the concatenated ``reduce`` column triples."""
+    import numpy as np
+
+    ids = pdf["__id"].to_numpy(dtype=np.int64)
+    o = np.argsort(ids, kind="stable")
+    ids = ids[o]
+    mat = np.array(list(pdf["__vec"]), dtype=np.float64)[o]
+    blks = pdf["__blk"].to_numpy()[o]
+    with np.errstate(invalid="ignore"):
+        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    # a diagonal group holds one block, so la == lb there
+    la, lb = np.nonzero(blks == gi)[0], np.nonzero(blks == gj)[0]
+    a_ids, a_mat, a_norms = ids[la], mat[la], norms[la]
+    b_ids, b_mat, b_norms = ids[lb], mat[lb], norms[lb]
+    diag = gi == gj
+    step = max(1, strip_bytes // (8 * max(1, len(lb))))
+    parts: list = []
+    for s in range(0, len(la), step):
+        e = min(s + step, len(la))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = (a_mat[s:e] @ b_mat.T) / np.outer(a_norms[s:e], b_norms)
+            sims = np.where(
+                np.isfinite(sims), _round_half_away(sims, round_to), np.nan
+            )
+        if diag:
+            r = np.arange(e - s)
+            sims[r, s + r] = np.nan  # no self-pair
+        parts.extend(reduce(a_ids[s:e], b_ids, sims, diag))
+    if not parts:
+        return [np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)]
+    return [np.concatenate([p[c] for p in parts]) for c in range(3)]
+
+
+def _block_pairs(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_blocks: int,
+    round_to: int,
+    reduce,
+    id_names: tuple[str, str],
+) -> DataFrame:
+    """The block-pair cosine kernel behind :func:`cosine_pairs_blocked`
+    and :func:`cosine_knn_blocked`. Rows hash into ``n_blocks`` blocks
+    and are replicated into every unordered block pair (i ≤ j) that
+    contains their block; each pair is one ``applyInPandas`` group,
+    scored by :func:`_block_pair_group`. ``reduce(a_ids, b_ids, sims,
+    diag)`` turns one row strip into a list of (id, id, sim) column
+    triples, emitted as ``id_names`` + ``sim``."""
+    strip_bytes = _STRIP_BYTES  # read at build time; the closure ships it
     base = df.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
     ).withColumn(
@@ -223,177 +399,16 @@ def cosine_pairs_blocked(
         F.col("__g.gi").alias("__gi"), F.col("__g.gj").alias("__gj"),
         "__id", "__vec", "__blk",
     )
-    scale = 10.0**round_to
+    names = [*id_names, "sim"]
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        gi, gj = int(key[0]), int(key[1])
-        ids = pdf["__id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["__vec"]), dtype=np.float64)
-        blks = pdf["__blk"].to_numpy()
-        with np.errstate(invalid="ignore"):
-            norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        if gi == gj:
-            la = lb = np.arange(len(ids))
-        else:
-            la, lb = np.nonzero(blks == gi)[0], np.nonzero(blks == gj)[0]
-        if len(la) == 0 or len(lb) == 0:
-            return pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "sim": "float64"}
-            )
-        a_ids, b_ids = ids[la], ids[lb]
-        denom = np.outer(norms[la], norms[lb])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = (mat[la] @ mat[lb].T) / denom
-        # round half away from zero (numpy rounds half-even; Spark/DuckDB
-        # ROUND is half-up) — must match cosine_pairs_exact exactly
-        sims = np.where(
-            np.isfinite(sims),
-            np.trunc(np.abs(sims) * scale + 0.5) / scale * np.sign(sims),
-            np.nan,
+        cols = _block_pair_group(
+            pdf, int(key[0]), int(key[1]), round_to, reduce, strip_bytes
         )
-        mask = (sims >= threshold) & (denom > 0) & (
-            a_ids[:, None] < b_ids[None, :]
-        )
-        ii, jj = np.nonzero(mask)
-        out_a, out_b = a_ids[ii], b_ids[jj]
-        if gi != gj:
-            # cross-block pairs may have either id order; emit min as id_a
-            mask2 = (sims.T >= threshold) & (denom.T > 0) & (
-                b_ids[:, None] < a_ids[None, :]
-            )
-            kk, ll = np.nonzero(mask2)
-            out_a = np.concatenate([out_a, b_ids[kk]])
-            out_b = np.concatenate([out_b, a_ids[ll]])
-            sims_out = np.concatenate([sims[ii, jj], sims.T[kk, ll]])
-        else:
-            sims_out = sims[ii, jj]
-        return pd.DataFrame({"id_a": out_a, "id_b": out_b, "sim": sims_out})
+        return pd.DataFrame(dict(zip(names, cols)))
 
     return exploded.groupBy("__gi", "__gj").applyInPandas(
-        kernel, "id_a bigint, id_b bigint, sim double"
-    )
-
-
-def cosine_knn_blocked(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_to: int = 6,
-    n_blocks: int = 8,
-) -> DataFrame:
-    """Exact k-NN edges of the all-pairs cosine graph, DISTRIBUTED —
-    (query_id, vec_id, sim) for each vector's k most similar others,
-    ties broken (sim desc, vec_id asc), zero-norm vectors and NaN sims
-    excluded on both sides, exactly as a full directed pair list +
-    row_number ≤ k would produce.
-
-    Same block-matrix decomposition as :func:`cosine_pairs_blocked`,
-    but the per-group kernel emits only each row's TOP-k WITHIN the
-    group (stable argsort over id-ascending columns — exact ties), so
-    kernel output is O(n·B·k) rows instead of the O(n²) pair stream;
-    a bounded global window (≤ B·k candidates per query) merges the
-    per-group lists — the standard exact top-k merge. The O(n²) BLAS
-    multiply is inherent to exactness; what collapses is everything
-    downstream of it: Arrow transfer, shuffle, and the corpus-sized
-    row_number window. (Measured at sf1: the pair-stream + union +
-    window form spent its time moving 2×n²/2 rows, not in the matmul.)
-    """
-    import numpy as np
-    import pandas as pd
-
-    base = df.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
-    ).withColumn(
-        "__blk", F.pmod(F.xxhash64(F.col("__id")), F.lit(n_blocks)).cast("int")
-    )
-    groups = F.transform(
-        F.sequence(F.lit(0), F.lit(n_blocks - 1)),
-        lambda x: F.struct(
-            F.least(F.col("__blk"), x).alias("gi"),
-            F.greatest(F.col("__blk"), x).alias("gj"),
-        ),
-    )
-    exploded = base.withColumn("__g", F.explode(groups)).select(
-        F.col("__g.gi").alias("__gi"), F.col("__g.gj").alias("__gj"),
-        "__id", "__vec", "__blk",
-    )
-    scale = 10.0**round_to
-
-    def _topk_dir(q_ids, sims, c_ids, out):
-        """Per-row top-k of `sims` (queries × candidates); c_ids must
-        be ascending so the stable sort breaks sim ties by id."""
-        import numpy as np
-
-        if sims.shape[0] == 0 or sims.shape[1] == 0:
-            return
-        kk = min(k, sims.shape[1])
-        # NaN marks invalid (zero norm / self); ascending sort of -sim
-        # puts NaN last, stable keeps id-asc order within equal sims
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-        top = np.take_along_axis(sims, order, axis=1)
-        valid = np.isfinite(top)
-        qq, pos = np.nonzero(valid)
-        out.append(
-            (q_ids[qq], c_ids[order[qq, pos]], top[qq, pos])
-        )
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        gi, gj = int(key[0]), int(key[1])
-        ids = pdf["__id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["__vec"]), dtype=np.float64)
-        blks = pdf["__blk"].to_numpy()
-        # id-ascending layout so stable argsort == (sim desc, id asc)
-        o = np.argsort(ids, kind="stable")
-        ids, mat, blks = ids[o], mat[o], blks[o]
-        with np.errstate(invalid="ignore"):
-            norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        empty = pd.DataFrame(
-            {"query_id": [], "vec_id": [], "sim": []}
-        ).astype({"query_id": "int64", "vec_id": "int64", "sim": "float64"})
-        if gi == gj:
-            la = lb = np.arange(len(ids))
-        else:
-            la, lb = np.nonzero(blks == gi)[0], np.nonzero(blks == gj)[0]
-        if len(la) == 0 or len(lb) == 0:
-            return empty
-        a_ids, b_ids = ids[la], ids[lb]
-        denom = np.outer(norms[la], norms[lb])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = (mat[la] @ mat[lb].T) / denom
-        # round half away from zero, as cosine_pairs_blocked
-        sims = np.where(
-            np.isfinite(sims) & (denom > 0),
-            np.trunc(np.abs(sims) * scale + 0.5) / scale * np.sign(sims),
-            np.nan,
-        )
-        if gi == gj:
-            np.fill_diagonal(sims, np.nan)  # no self-neighbor
-        out: list = []
-        _topk_dir(a_ids, sims, b_ids, out)
-        if gi != gj:
-            _topk_dir(b_ids, np.ascontiguousarray(sims.T), a_ids, out)
-        if not out:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate([t[0] for t in out]),
-                "vec_id": np.concatenate([t[1] for t in out]),
-                "sim": np.concatenate([t[2] for t in out]),
-            }
-        )
-
-    cand = exploded.groupBy("__gi", "__gj").applyInPandas(
-        kernel, "query_id bigint, vec_id bigint, sim double"
-    )
-    # global exact merge: ≤ n_blocks·k candidates per query
-    from pyspark.sql.window import Window as _W
-
-    w = _W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        cand.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
+        kernel, f"{id_names[0]} bigint, {id_names[1]} bigint, sim double"
     )
 
 
@@ -487,13 +502,9 @@ def lsh_topk(
         # exchange for (counter-case to the 10x10-band near-dup path)
         fan_out_input=False,
     ).drop("__band")
-    pairs = F.broadcast(qb).join(cb, "__bucket").filter(F.col(query_id) != F.col(corpus_id))
-    sim = F.round(cosine(query_vec, corpus_vec), round_to)
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return (
-        pairs.select(query_id, corpus_id, sim.alias("sim"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+    return _rank_exact(
+        F.broadcast(qb).join(cb, "__bucket"),
+        query_id, corpus_id, query_vec, corpus_vec, k, round_to,
     )
 
 
@@ -646,7 +657,6 @@ def cosine_pairs_lsh(
     ).select("id_a", "id_b")
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-    scale = 10.0**round_to
 
     # Arrow kernel, not the zip_with/aggregate HOF expression: Spark
     # evaluates higher-order lambdas interpreted per element — 3 × 64
@@ -672,9 +682,7 @@ def cosine_pairs_lsh(
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = d / denom
             sims = np.where(
-                np.isfinite(sims),
-                np.trunc(np.abs(sims) * scale + 0.5) / scale * np.sign(sims),
-                np.nan,
+                np.isfinite(sims), _round_half_away(sims, round_to), np.nan
             )
             keep = (denom > 0) & (sims >= threshold)
             yield pd.DataFrame(
@@ -766,7 +774,6 @@ def _probe_lists(
     import pandas as pd
 
     cmat = np.array(_normalize_seq(cents), dtype=np.float64).T  # dim × L
-    scale = 10.0**round_to
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
@@ -783,9 +790,7 @@ def _probe_lists(
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = (m @ cmat) / norms[:, None]
             sims = np.where(
-                np.isfinite(sims),
-                np.trunc(np.abs(sims) * scale + 0.5) / scale * np.sign(sims),
-                -np.inf,
+                np.isfinite(sims), _round_half_away(sims, round_to), -np.inf
             )
             # stable argsort on -sims: equal (rounded) sims keep
             # ascending list-id order — the SQL tie-break
@@ -855,15 +860,9 @@ def ivf_topk(
         queries.select(query_id, query_vec), query_vec, cents, n=nprobe
     )
 
-    pairs = F.broadcast(q_probes).join(corpus_l, "__list").filter(
-        F.col(query_id) != F.col(corpus_id)
-    )
-    sim = F.round(cosine(query_vec, corpus_vec), round_to)
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return (
-        pairs.select(query_id, corpus_id, sim.alias("sim"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+    return _rank_exact(
+        F.broadcast(q_probes).join(corpus_l, "__list"),
+        query_id, corpus_id, query_vec, corpus_vec, k, round_to,
     )
 
 
@@ -1079,89 +1078,11 @@ def _pq_lloyd_step(
     return new
 
 
-def _pq_unpack(
-    df: DataFrame, base_cols: list[str], n_subspaces: int, round_to: int
-) -> DataFrame:
-    """Shared tail of both ``pq_encode`` impls: turn the per-subspace
-    ``__pq_best_s`` (d, c) structs into ``code_s`` columns plus the
-    left-associative rounded ``recon_err`` sum."""
-    err = F.col("__pq_best_0").getField("d")
-    for s in range(1, n_subspaces):
-        err = err + F.col(f"__pq_best_{s}").getField("d")
-    return df.select(
-        *base_cols,
-        *[
-            F.col(f"__pq_best_{s}").getField("c").alias(f"code_{s}")
-            for s in range(n_subspaces)
-        ],
-        F.round(err, round_to).alias("recon_err"),
-    )
-
-
-def _pq_encode_arrow(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str,
-    round_to: int,
-) -> DataFrame:
-    """Arrow/BLAS path: a ``mapInPandas`` kernel emits the 16 RAW
-    squared-L2 distances per subspace (vectorized numpy, accumulated
-    dimension-by-dimension in the same left-associative order as the
-    expression impl — IEEE 754 ops are deterministic, so the doubles
-    are bit-identical), then the JVM rounds and argmins. Rounding MUST
-    stay JVM-side: two raw distances can differ yet round to the same
-    value, and only round-then-(d, c)-struct-min reproduces the
-    oracle's tie-break."""
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    n_sub = len(codebooks)
-    n_codes = len(codebooks[0])
-    dist_cols = [f"__pq_dists_{s}" for s in range(n_sub)]
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(c, ArrayType(DoubleType())) for c in dist_cols]
-    )
-    books = [[list(map(float, cv)) for cv in book] for book in codebooks]
-
-    def gen(batches):
-        import numpy as np
-
-        mats = [np.asarray(b, dtype=np.float64) for b in books]  # (codes, sub)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            out = pdf.copy()
-            off = 0
-            for s, cs in enumerate(mats):
-                sub = cs.shape[1]
-                es = emb[:, off : off + sub]
-                dist = None
-                for d in range(sub):
-                    term = (es[:, d, None] - cs[None, :, d]) ** 2
-                    dist = term if dist is None else dist + term
-                out[dist_cols[s]] = list(dist)
-                off += sub
-            yield out
-
-    enc = df.mapInPandas(gen, schema=out_schema)
-    bests = [
-        F.expr(
-            f"array_min(zip_with(`{dist_cols[s]}`, sequence(0, {n_codes - 1}), "
-            f"(dv, j) -> named_struct('d', ROUND(dv, {int(round_to)}), "
-            f"'c', CAST(j AS INT))))"
-        ).alias(f"__pq_best_{s}")
-        for s in range(n_sub)
-    ]
-    return _pq_unpack(enc.select("*", *bests), list(df.columns), n_sub, round_to)
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     round_to: int = 6,
-    impl: str = "expr",
 ) -> DataFrame:
     """Product quantization: append ``code_s`` (nearest codebook entry
     per subspace, squared-L2, rounded@``round_to``, ties to the smaller
@@ -1174,28 +1095,17 @@ def pq_encode(
     ordering compares dist then code, the SQL ``ORDER BY d, code``
     tie-break.
 
-    ``impl="expr"`` (default) is pure JVM: per subspace, ONE compact
-    higher-order expression — ``zip_with`` over the codebook as an
-    array literal, each lambda body the 8-term left-associative
-    distance (seeded ``0.0 + t0``, exact for squares since they are
-    never ``-0.0``) — handed to ``F.expr`` as a single SQL string.
-    This shape exists for plan-cost reasons: the round-2 version built
-    the fully unrolled ~10k-node tree out of ``Column`` operators,
-    which cost ~13 s of py4j round-trips to construct plus seconds of
-    Catalyst/codegen work per submission (17.8 s total at sf0.1); the
-    HOF tree is ~30× smaller and plans in milliseconds. No shuffle, no
-    UDF; the lambda is interpreted per row, fine for encode-and-audit
-    workloads.
-
-    ``impl="arrow"`` is the 100 TB bulk-encode path: distances come
-    from a vectorized numpy kernel (same accumulation order →
-    bit-identical doubles), round/argmin stay JVM-side (see
-    ``_pq_encode_arrow`` for why). Both impls return identical rows —
-    pinned by ``tests/test_analytics.py``."""
-    if impl == "arrow":
-        return _pq_encode_arrow(df, codebooks, vec_col, round_to)
-    if impl != "expr":
-        raise ValueError(f"impl must be 'expr' or 'arrow', got {impl!r}")
+    Pure JVM: per subspace, ONE compact higher-order expression —
+    ``zip_with`` over the codebook as an array literal, each lambda body
+    the 8-term left-associative distance (seeded ``0.0 + t0``, exact for
+    squares since they are never ``-0.0``) — handed to ``F.expr`` as a
+    single SQL string. This shape exists for plan-cost reasons: the
+    round-2 version built the fully unrolled ~10k-node tree out of
+    ``Column`` operators, which cost ~13 s of py4j round-trips to
+    construct plus seconds of Catalyst/codegen work per submission
+    (17.8 s total at sf0.1); the HOF tree is ~30× smaller and plans in
+    milliseconds. No shuffle, no UDF; the lambda is interpreted per
+    row, fine for encode-and-audit workloads."""
     n = len(codebooks)
     n_codes = len(codebooks[0])
     bests = []
@@ -1217,7 +1127,14 @@ def pq_encode(
                 f"'c', CAST(j AS INT))))"
             ).alias(f"__pq_best_{s}")
         )
-    return _pq_unpack(df.select("*", *bests), list(df.columns), n, round_to)
+    err = F.col("__pq_best_0").getField("d")
+    for s in range(1, n):
+        err = err + F.col(f"__pq_best_{s}").getField("d")
+    return df.select("*", *bests).select(
+        *df.columns,
+        *[F.col(f"__pq_best_{s}").getField("c").alias(f"code_{s}") for s in range(n)],
+        F.round(err, round_to).alias("recon_err"),
+    )
 
 
 def random_projection(
@@ -1286,21 +1203,8 @@ def pq_adc_topk(
     n_subspaces-term sum is rounded@``round_to``. Ties break to the
     smaller id. ``df_codes`` must carry ``code_s`` columns as produced
     by ``pq_encode``."""
-    luts: list[list[float]] = []
-    for s, book in enumerate(codebooks):
-        sub = len(book[0])
-        row = []
-        for code_vec in book:
-            acc = None
-            for d, c in enumerate(code_vec):
-                t = (float(query_vec[s * sub + d]) - float(c)) * (
-                    float(query_vec[s * sub + d]) - float(c)
-                )
-                acc = t if acc is None else acc + t
-            row.append(acc)
-        luts.append(row)
     terms = []
-    for s, row in enumerate(luts):
+    for s, row in enumerate(_adc_luts(query_vec, codebooks)):
         lit = ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in row)
         terms.append(f"element_at(array({lit}), code_{s} + 1)")
     dist = terms[0]
@@ -1318,9 +1222,10 @@ def pq_adc_topk(
 def _adc_luts(
     query_vec: list[float], codebooks: list[list[list[float]]]
 ) -> list[list[float]]:
-    """The per-subspace lookup tables for one query — the EXACT
-    left-associative dimension-order sums ``pq_adc_topk`` inlines, so
-    batch and single-query paths share bit-identical LUT doubles."""
+    """The per-subspace lookup tables for one query — EXACT
+    left-associative dimension-order sums, shared by ``pq_adc_topk``
+    (inlined as literals) and ``pq_adc_topk_batch`` so both paths
+    score with bit-identical LUT doubles."""
     luts: list[list[float]] = []
     for s, book in enumerate(codebooks):
         sub = len(book[0])

@@ -344,6 +344,58 @@ def test_cosine_pairs_blocked_matches_exact_kernel(spark, sf_dir):
         assert got == exact, f"mismatch at n_blocks={n_blocks}"
 
 
+def test_cosine_pairs_blocked_matches_exact_kernel_in_row_strips(
+    spark, sf_dir, monkeypatch
+):
+    """The same contract with the strip budget below one row, so every
+    group scores one row per strip: each group with ≥ 3 rows on its row
+    side runs as ≥ 3 strips, and strip edges cannot lose, duplicate or
+    rescore a pair."""
+    from datagouv_tools_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_STRIP_BYTES", 8)
+    test_cosine_pairs_blocked_matches_exact_kernel(spark, sf_dir)
+
+
+@pytest.mark.parametrize("reducer", ["pairs", "topk"])
+def test_block_pair_kernel_memory_bounded_by_strip_budget(reducer):
+    """One 2 × 4,000-row, 64-dim block-pair group at the module budget
+    must peak under 8 × ``_STRIP_BYTES`` of traced allocations — the
+    dense form holds the 4,000² float64 matrix (122 MiB) several times
+    over (measured ~390-500 MiB)."""
+    import tracemalloc
+
+    import numpy as np
+    import pandas as pd
+
+    from datagouv_tools_spark.operators import similarity as S
+
+    m = 4000
+    vecs = np.random.default_rng(3).normal(size=(2 * m, 64)).astype(np.float32)
+    pdf = pd.DataFrame(
+        {
+            "__id": np.arange(2 * m, dtype=np.int64),
+            "__vec": list(vecs),
+            "__blk": np.repeat(np.array([0, 1], dtype=np.int32), m),
+        }
+    )
+    reduce = S._pairs_reducer(0.4) if reducer == "pairs" else S._topk_reducer(5)
+    bound = 8 * S._STRIP_BYTES
+    assert m * m * 8 > bound  # the dense matrix alone would break it
+    tracemalloc.start()
+    try:
+        ids_a, ids_b, sims = S._block_pair_group(
+            pdf, 0, 1, 6, reduce, S._STRIP_BYTES
+        )
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < bound, f"peak {peak / 2**20:.1f} MiB"
+    assert len(sims) and np.all((ids_a < m) != (ids_b < m))  # cross-block only
+    if reducer == "topk":  # both directions: every row has its k
+        assert len(sims) >= 2 * m * 5
+
+
 def test_minhash_star_edges_equal_clique_components(spark, sf01_dir):
     """minhash_cluster_edges (linear star edges per bucket) must yield
     exactly the clusters of the O(m²)-per-bucket pair clique — the
@@ -598,31 +650,6 @@ def test_pq_encode_codebook_vectors_have_zero_error(spark, sf01_dir):
         | sum((~F.col(f"code_{s}").between(0, 15)).cast("int") for s in range(8)).cast("boolean")
     )
     assert bad.count() == 0
-
-
-def test_pq_encode_arrow_impl_bit_identical_to_expr(spark, sf01_dir):
-    """The Arrow/BLAS bulk-encode path must return byte-for-byte the
-    rows of the JVM expression path: same left-associative accumulation
-    order gives bit-identical doubles, and round/argmin stay JVM-side
-    in both (the tie-break would otherwise drift)."""
-    from pyspark.sql import functions as F
-
-    from datagouv_tools_spark.operators.similarity import pq_codebooks, pq_encode
-    from datagouv_tools_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf01_dir, "embeddings").select("vec_id", "embedding")
-    books = pq_codebooks(emb, "vec_id", "embedding", dim=64, n_subspaces=8, n_codes=16)
-    cols = ["vec_id", *[f"code_{s}" for s in range(8)], "recon_err"]
-    expr_rows = pq_encode(emb, books).select(*cols).orderBy("vec_id").collect()
-    arrow_rows = (
-        pq_encode(emb, books, impl="arrow").select(*cols).orderBy("vec_id").collect()
-    )
-    assert expr_rows == arrow_rows
-    # and the arrow path must not have leaked its staging columns
-    enc = pq_encode(emb, books, impl="arrow")
-    assert not [c for c in enc.columns if c.startswith("__pq")]
-    with __import__("pytest").raises(ValueError):
-        pq_encode(emb, books, impl="nope")
 
 
 def test_pq_codebooks_kmeans_refinement_improves_recon_err(spark, sf01_dir):
@@ -2603,3 +2630,15 @@ def test_cosine_knn_blocked_matches_pairstream_window(spark):
         }
         assert got == ref, f"mismatch at n_blocks={n_blocks}"
     assert not any(q == 11 or v == 11 for q, v, _ in ref)
+
+
+def test_cosine_knn_blocked_matches_pairstream_window_in_row_strips(
+    spark, monkeypatch
+):
+    """The same contract at one row per strip (every group with ≥ 3
+    rows on its row side runs as ≥ 3 strips): the per-strip candidates
+    of the column side still merge to the exact top-k."""
+    from datagouv_tools_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_STRIP_BYTES", 8)
+    test_cosine_knn_blocked_matches_pairstream_window(spark)
