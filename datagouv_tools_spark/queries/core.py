@@ -3249,7 +3249,7 @@ def orders_bootstrap_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-split-scan case (guide §2.5; no-op on multi-split inputs —
     # measured 1.7 s single-task stage here)
     o = fan_out_narrow_scan(t(spark, sf_dir, "orders"))
-    reps = spark.createDataFrame([(r,) for r in range(8)], "r int")
+    reps = spark.range(8).select(F.col("id").cast("int").alias("r"))
     pick = (
         F.conv(
             F.substring(
@@ -3370,7 +3370,7 @@ def customer_interpurchase_survival(
             F.col("maxd").cast("date"), F.col("o_orderdate").cast("date")
         ).alias("window_days"),
     )
-    hs = spark.createDataFrame([(30,), (90,), (180,), (365,)], "h int")
+    hs = spark.sql("SELECT * FROM VALUES (30), (90), (180), (365) AS t(h)")
     at_risk = F.col("window_days") >= F.col("h")
     survived = at_risk & (
         F.col("gap_days").isNull() | (F.col("gap_days") > F.col("h"))
@@ -3435,7 +3435,7 @@ def customer_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias("bal_band"),
     ).agg(F.count(F.lit(1)).cast("bigint").alias("class_size"))
-    ks = spark.createDataFrame([(2,), (5,), (10,)], "k int")
+    ks = spark.sql("SELECT * FROM VALUES (2), (5), (10) AS t(k)")
     return (
         qi.crossJoin(F.broadcast(ks))
         .groupBy(F.col("k").cast("bigint").alias("k"))

@@ -4072,7 +4072,7 @@ def doc_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     mx = docs.agg((F.max("doc_id") + 1).alias("m"))
     toks = docs.select("doc_id", F.explode(_toks("text")).alias("tok"))
-    qs = spark.createDataFrame([(1,), (2,), (3,), (4,)], "q int")
+    qs = spark.range(1, 5).select(F.col("id").cast("int").alias("q"))
     cond = F.col("doc_id") * 4 < F.col("m") * F.col("q")
     return (
         toks.crossJoin(F.broadcast(mx))

@@ -22,6 +22,16 @@ reference's tests/sql/test_postgres.py pattern), and the whole staged
 path runs live in ``tests/test_schema.py::test_staged_copy_live_postgres``
 whenever PGHOST points at a real server.
 
+Read leg: ``copy_out`` is the mirror of the write dispatch. It runs
+``COPY (<query>) TO STDOUT (FORMAT csv)`` on an open connection, under
+session settings that fix how dates, intervals and bytea are rendered,
+and yields the server's bytes (psql CLI: the captured stdout; psycopg 3:
+iterating ``cursor.copy``; pg8000: ``execute(sql, stream=<writable>)``).
+``csv_batches`` decodes COPY-CSV bytes into Arrow record batches, so
+the read side of the CSV dialect lives next to its write side
+(``rows_to_csv_chunks``). ``sources/pg_read.py`` pulls each slice of a
+distributed read through the two.
+
 Transactionality at scale: per-partition COPY loses the single-commit
 semantics of the reference. ``staged_copy`` therefore loads into a
 staging table and atomically swaps it in (BEGIN; ALTER TABLE RENAME;
@@ -31,13 +41,17 @@ COMMIT) — idempotent re-runs, no partial visibility (SURVEY §7.4).
 from __future__ import annotations
 
 import io
+import itertools
 from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, Row
 
 from datagouv_tools_spark.schema.ddl import PostgresDialect
 
-__all__ = ["rows_to_csv_chunks", "copy_partition", "copy_dataframe", "staged_copy"]
+__all__ = [
+    "rows_to_csv_chunks", "copy_partition", "copy_dataframe", "staged_copy", "copy_out",
+    "csv_batches",
+]
 
 _CHUNK_BYTES = 1 << 20
 
@@ -228,6 +242,13 @@ class PsqlCliCursor:
         self._conn._flush()
         self._conn._run_stdin(copy_sql, chunks)
 
+    def copy_stdout(self, copy_sql: str, settings: Iterable[str]) -> bytes:
+        """The whole ``COPY ... TO STDOUT`` output, run after
+        ``settings`` in the same session: the binary has exited by the
+        time it returns, so this transport buffers one stream."""
+        self._conn._flush()
+        return self._conn._run_capture(*settings, copy_sql, text=False)
+
     def fetchall(self) -> list[tuple]:
         if self._rows is None:
             # a queued DDL/DML statement produces no result set —
@@ -238,16 +259,6 @@ class PsqlCliCursor:
                 "psql CLI transport"
             )
         return self._rows
-
-    def fetchmany(self, size: int) -> list[tuple]:
-        """DB-API chunked fetch. The psql transport necessarily buffers
-        the full COPY output in memory (the binary already returned),
-        so this only windows over that buffer — the memory-bounding
-        win of fetchmany belongs to the typed drivers; here it is
-        interface parity so callers can stream uniformly."""
-        rows = self.fetchall()
-        chunk, self._rows = rows[:size], rows[size:]
-        return chunk
 
     def close(self) -> None:
         pass
@@ -280,15 +291,19 @@ class PsqlCliConnection:
             env["PGPASSWORD"] = self._password
         return env
 
-    def _run_capture(self, sql: str) -> str:
+    def _run_capture(self, *sqls: str, text: bool = True):
+        """Run ``sqls`` in one psql session (one ``-c`` each; ``-q``
+        keeps their command tags off stdout) and return its stdout."""
         import subprocess
 
+        argv = self._argv(*(arg for sql in sqls for arg in ("-c", sql)))
         res = subprocess.run(
-            self._argv("-c", sql), capture_output=True, text=True,
+            argv, capture_output=True, text=text,
             env=self._env(),
         )
         if res.returncode:
-            raise RuntimeError(f"psql failed: {res.stderr.strip()}")
+            err = res.stderr if text else res.stderr.decode(errors="replace")
+            raise RuntimeError(f"psql failed: {err.strip()}")
         return res.stdout
 
     def _run_stdin(self, copy_sql: str, chunks: Iterator[bytes]) -> None:
@@ -342,26 +357,35 @@ class PsqlCliConnection:
 class _ChunkStream(io.RawIOBase):
     """Read-only binary file over an iterator of byte chunks — what
     pg8000 consumes for COPY FROM STDIN (``execute(sql, stream=...)``)
-    without ever materializing the partition's CSV in one buffer."""
+    and what Arrow's CSV reader pulls a ``copy_out`` stream through,
+    without ever joining the stream into one buffer."""
 
     def __init__(self, chunks: Iterator[bytes]):
         self._chunks = iter(chunks)
-        self._buf = b""
+        self._buf = memoryview(b"")
 
     def readable(self) -> bool:  # pragma: no cover - io protocol
         return True
 
     def read(self, n: int = -1) -> bytes:
         if n is None or n < 0:
-            out = self._buf + b"".join(self._chunks)
-            self._buf = b""
+            out = bytes(self._buf) + b"".join(self._chunks)
+            self._buf = memoryview(b"")
             return out
-        while len(self._buf) < n:
-            try:
-                self._buf += next(self._chunks)
-            except StopIteration:
-                break
-        out, self._buf = self._buf[:n], self._buf[n:]
+        # the unread rest is a view, never re-copied per read: one
+        # large chunk (the psql transport's whole slice) read in small
+        # pieces would otherwise cost quadratic time
+        if len(self._buf) < n:
+            parts, size = [self._buf], len(self._buf)
+            while size < n:
+                try:
+                    chunk = next(self._chunks)
+                except StopIteration:
+                    break
+                parts.append(chunk)
+                size += len(chunk)
+            self._buf = memoryview(b"".join(parts))
+        out, self._buf = bytes(self._buf[:n]), self._buf[n:]
         return out
 
 
@@ -381,6 +405,81 @@ def _copy_with_connection(conn, copy_sql: str, chunks: Iterator[bytes]) -> None:
             cur.execute(copy_sql, stream=_ChunkStream(chunks))
     finally:
         cur.close()
+
+
+#: session settings ``copy_out`` applies before its COPY, so dates and
+#: intervals come out as ISO and ``postgres`` text and bytea as ``\x``
+#: hex whatever the server's defaults (Spark's casts parse ISO only)
+_COPY_OUT_SETTINGS = (
+    "SET DateStyle TO ISO",
+    "SET IntervalStyle TO postgres",
+    "SET bytea_output TO hex",
+)
+
+
+def copy_out(conn, query: str) -> Iterator[bytes]:
+    """Yield the UTF-8 COPY-CSV bytes of ``query``'s rows (the dialect
+    ``csv_batches`` reads) on an open connection, after
+    ``_COPY_OUT_SETTINGS``, dispatching like ``_copy_with_connection``:
+    the psql CLI and pg8000 hand back the whole stream at once,
+    psycopg 3 yields it block by block as the server sends it."""
+    copy_sql = f"COPY ({query}) TO STDOUT (FORMAT csv, ENCODING 'UTF8')"
+    cur = conn.cursor()
+    try:
+        if hasattr(cur, "copy_stdout"):  # psql CLI transport
+            yield cur.copy_stdout(copy_sql, _COPY_OUT_SETTINGS)
+            return
+        for setting in _COPY_OUT_SETTINGS:
+            cur.execute(setting)
+        if hasattr(cur, "copy"):  # psycopg 3
+            with cur.copy(copy_sql) as copy:
+                for block in copy:
+                    yield bytes(block)
+        else:  # pg8000 dbapi
+            buf = io.BytesIO()
+            cur.execute(copy_sql, stream=buf)
+            yield buf.getvalue()
+    finally:
+        cur.close()
+
+
+#: smallest Arrow CSV block ``csv_batches`` reads. A CSV row must fit
+#: in one block, so on a transport that streams (psycopg 3) this is the
+#: largest row, quoted and with bytea in hex, that a read can take
+_CSV_BLOCK_BYTES = 16 << 20
+
+
+def csv_batches(chunks: Iterable[bytes], columns: list[str]):
+    """Decode PostgreSQL COPY-CSV byte chunks into Arrow record batches
+    of string columns, one CSV block at a time (a psycopg 3 stream
+    never sits in memory whole). PostgreSQL writes NULL as an unquoted
+    empty field and ``''`` as ``""``; the convert options read exactly
+    that back, and quoted fields may hold raw newlines. A one-column
+    NULL is an empty line, so empty lines are rows, not skipped."""
+    import pyarrow as pa
+    from pyarrow import csv
+
+    chunks = (c for c in chunks if c)
+    first = next(chunks, None)
+    if first is None:  # an empty slice is an empty CSV, which Arrow rejects
+        return
+    # the psql CLI and pg8000 hand over the whole slice as the first
+    # chunk: read it as one block (Arrow's block size is an int32), so
+    # no row of it can straddle two blocks
+    block_size = min(max(len(first), _CSV_BLOCK_BYTES), (1 << 31) - 1)
+    yield from csv.open_csv(
+        _ChunkStream(itertools.chain([first], chunks)),
+        read_options=csv.ReadOptions(column_names=columns, block_size=block_size),
+        parse_options=csv.ParseOptions(
+            newlines_in_values=True, ignore_empty_lines=False
+        ),
+        convert_options=csv.ConvertOptions(
+            column_types={c: pa.string() for c in columns},
+            strings_can_be_null=True,
+            quoted_strings_can_be_null=False,
+            null_values=[""],
+        ),
+    )
 
 
 def copy_partition(dsn: str, copy_sql: str, rows: Iterable[Row], connect=None) -> None:

@@ -13,16 +13,25 @@ already dispatches:
   (schema inference) and, when bounds aren't given, one ``MIN/MAX``
   aggregate over the partition column — O(1) rows either way;
 - each EXECUTOR task opens its own connection and pulls exactly one
-  key-range slice with ``SELECT <cols> FROM <table> WHERE <pred> AND
-  <slice>`` — the same slice grammar Spark's JDBC source generates
-  (first slice takes ``IS NULL``, bounds don't filter, they only shape
-  the ranges);
+  key-range slice with ``COPY (SELECT <cols> FROM <table> WHERE <pred>
+  AND <slice>) TO STDOUT`` — the same slice grammar Spark's JDBC source
+  generates (first slice takes ``IS NULL``, bounds don't filter, they
+  only shape the ranges);
 - projection and predicates are pushed INTO the per-slice SQL, so the
   server never ships unrequested columns or rows (source-side pushdown,
   not post-scan filtering);
-- values cross into Spark as COPY-text strings and are cast to the
-  inferred schema JVM-side (``Column.cast`` inside codegen), keeping
-  the Python boundary a thin string shuttle.
+- the slice index that drives those tasks is a JVM ``Range`` with one
+  partition per slice, so a read runs one Python task per slice and no
+  other Python work;
+- values cross into Spark as COPY-CSV bytes decoded by Arrow
+  (``pg_copy.copy_out`` and ``pg_copy.csv_batches``, every column a
+  string) and are cast to the inferred schema JVM-side (``Column.cast``
+  inside codegen), keeping the Python boundary a thin byte shuttle.
+  The COPY runs with ISO DateStyle, ``postgres`` IntervalStyle and hex
+  bytea_output, so the text does not depend on server defaults. On a
+  streaming transport (psycopg 3) one row may be at most 16 MiB of CSV;
+  the psql CLI and pg8000 buffer a whole slice and decode it as one
+  block (up to 2 GiB), so their rows can be as large as the slice.
 
 At cluster scale this is N executors each holding one server
 connection — size ``num_partitions`` to what the server's
@@ -30,8 +39,6 @@ connection — size ``num_partitions`` to what the server's
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,7 +48,7 @@ __all__ = ["pg_table_schema", "slice_predicates", "read_pg_parallel"]
 
 
 #: information_schema.data_type → Spark type. bytea deliberately maps to
-#: StringType (COPY-text hex form ``\x…``) — decode with F.unhex at the
+#: StringType (COPY's hex form ``\x…``) — decode with F.unhex at the
 #: call site if raw bytes are needed.
 _PG_TO_SPARK: dict[str, T.DataType] = {
     "smallint": T.ShortType(),
@@ -126,16 +133,6 @@ def slice_predicates(
     return preds
 
 
-@dataclass(frozen=True)
-class _SliceSpec:
-    """Everything an executor task needs to pull one slice (picklable;
-    no live connection objects cross the driver/executor boundary)."""
-
-    dsn: str
-    sql: str
-    n_cols: int
-
-
 def _fetch_slice_sql(table: str, columns: list[str], predicate: str | None) -> str:
     cols = ", ".join(_quote_ident(c) for c in columns)
     sql = f"SELECT {cols} FROM {_quote_ident(table)}"
@@ -203,59 +200,27 @@ def read_pg_parallel(
             f"({predicate}) AND ({p})" if predicate else p for p in parts
         ]
 
-    specs = [
-        _SliceSpec(dsn=dsn, sql=_fetch_slice_sql(table, cols, where), n_cols=len(cols))
-        for where in slices
-    ]
-
-    # one task per slice: a single-column DataFrame of slice indexes,
-    # repartitioned so each slice is its own task, then mapInPandas
-    # opens the per-task connection and pulls the slice
-    import pandas as pd
-
+    slice_sqls = [_fetch_slice_sql(table, cols, where) for where in slices]
     str_schema = T.StructType([T.StructField(c, T.StringType()) for c in cols])
-    spec_by_idx = {i: s for i, s in enumerate(specs)}
-    bc = spark.sparkContext.broadcast(spec_by_idx)
 
     def pull(batches):
-        from datagouv_tools_spark.sinks.pg_copy import _connect
+        # one slice index per row: open the task's own connection and
+        # decode the slice's COPY-CSV stream as it arrives
+        from datagouv_tools_spark.sinks.pg_copy import _connect, copy_out, csv_batches
 
-        for pdf in batches:
-            for idx in pdf["__slice"]:
-                spec = bc.value[int(idx)]
-                conn = _connect(spec.dsn)
+        for batch in batches:
+            for idx in batch.column(0).to_pylist():
+                conn = _connect(dsn)
                 try:
-                    cur = conn.cursor()
-                    cur.execute(spec.sql)
-                    # stream the slice in bounded chunks: fetchall()
-                    # would materialize the whole slice as Python
-                    # objects in one worker before any Arrow batching —
-                    # a large slice OOMs the Python process. fetchmany
-                    # keeps peak memory at one chunk regardless of
-                    # slice size (a server-side cursor would also bound
-                    # the DRIVER-side buffer, but not every transport
-                    # here supports named cursors; chunked fetch is the
-                    # common denominator).
-                    while True:
-                        rows = cur.fetchmany(50_000)
-                        if not rows:
-                            break
-                        data = {
-                            c: [_to_copy_text(r[j]) for r in rows]
-                            for j, c in enumerate(cols)
-                        }
-                        yield pd.DataFrame(data, dtype=object)
+                    yield from csv_batches(copy_out(conn, slice_sqls[idx]), cols)
                 finally:
                     conn.close()
 
-    # repartitionByRange places slice i alone in partition i (range
-    # boundaries fall between consecutive integers); a hash
-    # repartition() can collide several slice indexes into one
-    # partition and leave others empty, serializing the pulls
-    idx_df = spark.createDataFrame(
-        [(i,) for i in range(len(specs))], "__slice int"
-    ).repartitionByRange(len(specs), "__slice")
-    raw = idx_df.mapInPandas(pull, schema=str_schema)
+    # partition i of the Range holds exactly slice index i, so each
+    # slice is its own task; a JVM Range (not createDataFrame of a
+    # list, a Python RDD) adds no Python task of its own
+    idx_df = spark.range(len(slice_sqls), numPartitions=len(slice_sqls))
+    raw = idx_df.mapInArrow(pull, schema=str_schema)
 
     # JVM-side casts to the inferred schema (inside codegen; the Python
     # boundary above only shuttles strings)
@@ -265,19 +230,3 @@ def read_pg_parallel(
         for f in schema.fields
     ]
     return raw.select(casted)
-
-
-def _to_copy_text(v) -> str | None:
-    """Render a fetched value as a Spark-castable string. The psql CLI
-    transport already returns strings; psycopg/pg8000 return typed
-    Python objects whose str() forms Spark casts losslessly (Decimal,
-    date, datetime, int, float). Booleans need lowering: str(True) →
-    'True' casts fine, but normalize anyway for cross-transport hash
-    stability."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, bytes):  # bytea via a typed driver
-        return "\\x" + v.hex()
-    return str(v)

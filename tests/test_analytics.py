@@ -711,6 +711,27 @@ def test_dedup_clusters_auto_local_equivalence(spark):
     ml, _ = _cc_minlabel(pairs, "id_a", "id_b", 60)
     assert sorted(map(tuple, small.collect())) == sorted(map(tuple, ml.collect()))
 
+
+def test_cc_local_labels_plan_as_local_table_scan(spark):
+    """The driver union-find's labels come back as a LocalTableScan, not
+    a Python-RDD scan (which would run a Python identity task per core
+    on every read), with the node-sorted (node, cluster_id) bigint
+    schema the distributed paths produce."""
+    from datagouv_tools_spark.operators.dedup import _cc_local
+    from datagouv_tools_spark.plans.inspect import physical_plan
+
+    pairs = spark.sql(
+        "SELECT * FROM VALUES (7, 9), (3, 4), (9, 3), (20, 21) AS t(id_a, id_b)"
+    )
+    labels = _cc_local(pairs, "id_a", "id_b", max_edges=100)
+    plan = physical_plan(labels, mode="simple")
+    assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan, plan
+    assert labels.schema.simpleString() == "struct<node:bigint,cluster_id:bigint>"
+    assert [tuple(r) for r in labels.collect()] == [
+        (3, 3), (4, 3), (7, 3), (9, 3), (20, 20), (21, 20),
+    ]
+
+
 def test_ivfpq_adc_quality_on_incompressible_vectors(spark, sf01_dir):
     """End-to-end quality of the composed IVF-ADC search, pinned with
     the metrics that are MEANINGFUL on this corpus: the testdata

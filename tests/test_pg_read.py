@@ -8,10 +8,13 @@ the full north-star read-transform-write loop against a real server.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datagouv_tools_spark.sinks.pg_copy import csv_batches
 from datagouv_tools_spark.sources.pg_read import (
     _fetch_slice_sql,
     read_pg_parallel,
@@ -47,6 +50,244 @@ def test_fetch_slice_sql_pushes_projection_and_predicate():
     )
     # no predicate → no WHERE
     assert _fetch_slice_sql("t", ["a"], None) == 'SELECT "a" FROM "t"'
+
+
+#: text PostgreSQL's COPY grammars treat specially: a backslash, the
+#: text format's NULL marker, tab, bare CR, CRLF, non-ASCII, padding
+#: spaces, a lone quote, delimiters, and the empty string next to NULL
+_HOSTILE_TEXT = [
+    "back\\slash",
+    "\\N",
+    "tab\there",
+    "bare\rcr",
+    "crlf\r\nline",
+    "été 日本 🚀",
+    "  padded  ",
+    '"',
+    'a,"b",c',
+    "",
+    None,
+]
+
+
+def _drop_table(dsn: str, table: str) -> None:
+    from datagouv_tools_spark.sinks.pg_copy import _connect
+
+    conn = _connect(dsn)
+    try:
+        cur = conn.cursor()
+        cur.execute(f'DROP TABLE IF EXISTS "{table}"')
+        cur.close()
+        conn.commit()
+    finally:
+        conn.close()
+
+
+def test_csv_batches_decode_postgres_csv_at_any_chunk_boundary():
+    """The Arrow decode reads PostgreSQL's CSV exactly: NULL stays
+    distinct from '', quoted fields keep raw CR/LF, and a backslash or
+    ``\\N`` is plain text. Chunk boundaries (down to one byte, which
+    splits UTF-8 sequences and CRLF pairs) never change the result.
+    The COPY-in serializer writes the same CSV dialect as the server.
+    With one column, PostgreSQL writes a NULL as an empty line, which
+    must read as a NULL row, not be skipped."""
+    from datagouv_tools_spark.sinks.pg_copy import rows_to_csv_chunks
+
+    two = [(str(i), v) for i, v in enumerate(_HOSTILE_TEXT)]
+    one = [(v,) for v in [None, *_HOSTILE_TEXT, None]]
+    for rows, columns in ((two, ["id", "s"]), (one, ["s"])):
+        body = b"".join(rows_to_csv_chunks(rows))
+        for size in (1, 3, 7, len(body)):
+            chunks = [body[i : i + size] for i in range(0, len(body), size)]
+            got = [
+                tuple(d.values())
+                for b in csv_batches(iter(chunks), columns)
+                for d in b.to_pylist()
+            ]
+            assert got == rows, (columns, size)
+    assert b"\n\n" in b"".join(rows_to_csv_chunks(one))
+    # an empty slice yields no batch (Arrow rejects an empty CSV)
+    assert list(csv_batches(iter([b"", b""]), ["id", "s"])) == []
+
+
+def test_csv_batches_decode_rows_larger_than_arrows_default_block():
+    """Rows of several MiB decode whether the stream arrives as one
+    chunk (psql CLI, pg8000) or in small pieces (psycopg 3). Arrow's
+    default 1 MiB block raises 'straddling object' on either."""
+    from datagouv_tools_spark.sinks.pg_copy import rows_to_csv_chunks
+
+    big = "x" * (3 << 20)
+    hexed = "\\x" + "ab" * (3 << 20)  # a 3 MiB bytea is 6 MiB of hex
+    rows = [("1", big), ("2", None), ("3", hexed), ("4", 'q"' + big)]
+    body = b"".join(rows_to_csv_chunks(rows))
+    for size in (1 << 16, len(body)):
+        chunks = [body[i : i + size] for i in range(0, len(body), size)]
+        got = [
+            tuple(d.values())
+            for b in csv_batches(iter(chunks), ["id", "s"])
+            for d in b.to_pylist()
+        ]
+        assert got == rows, size
+
+
+def test_read_pg_parallel_plans_a_range_slice_index(spark):
+    """The slice index is a JVM Range with one partition per slice: no
+    Python-RDD scan (createDataFrame of a list) and no shuffle sit
+    under the per-slice pull. With ``schema`` and bounds given, the
+    plan is built without touching a server."""
+    from datagouv_tools_spark.plans.inspect import physical_plan
+
+    schema = T.StructType([T.StructField("id", T.IntegerType())])
+    df = read_pg_parallel(
+        spark, "postgresql://nobody@localhost:1/none", "t", schema=schema,
+        partition_column="id", lower_bound=0, upper_bound=30, num_partitions=3,
+    )
+    plan = physical_plan(df, mode="simple")
+    assert "Range (0, 3, step=1, splits=3)" in plan, plan
+    assert "Scan ExistingRDD" not in plan and "Exchange" not in plan, plan
+    assert "MapInArrow" in plan, plan
+    assert df.rdd.getNumPartitions() == 3
+
+
+def test_read_pg_parallel_hostile_text_roundtrip_live(spark, pg_dsn):
+    """Text and bytea the COPY formats escape, quote or special-case
+    come back exactly, over several slices; '' stays distinct from
+    NULL. bytea reads as PostgreSQL's ``\\x`` hex text."""
+    table = "dg_spark_read_hostile"
+    from datagouv_tools_spark.sinks.pg_copy import _connect
+
+    def lit(v):
+        return "NULL" if v is None else "'" + v.replace("'", "''") + "'"
+
+    # bytes that are delimiters, quotes, newlines or a backslash in
+    # text form; the empty bytea and a NULL one
+    blobs = [
+        "\\x" + (bytes([i, 0, 255, 44, 34, 10, 13, 92]) * (i % 3)).hex()
+        for i in range(len(_HOSTILE_TEXT))
+    ]
+    blobs[-2] = None
+    values = ", ".join(
+        f"({i}, {lit(v)}, {lit(b)}::bytea)"
+        for i, (v, b) in enumerate(zip(_HOSTILE_TEXT, blobs))
+    )
+    _drop_table(pg_dsn, table)
+    conn = _connect(pg_dsn)
+    try:
+        cur = conn.cursor()
+        cur.execute(f'CREATE TABLE "{table}" (id int, s text, b bytea)')
+        cur.execute(f'INSERT INTO "{table}" VALUES {values}')
+        cur.close()
+        conn.commit()
+    finally:
+        conn.close()
+    try:
+        got = read_pg_parallel(
+            spark, pg_dsn, table, partition_column="id", num_partitions=3
+        )
+        assert got.rdd.getNumPartitions() == 3
+        back = {r.id: (r.s, r.b) for r in got.collect()}
+        assert back == dict(enumerate(zip(_HOSTILE_TEXT, blobs)))
+        # one column: PostgreSQL writes each NULL as an empty line
+        for col, want in (("s", _HOSTILE_TEXT), ("b", blobs)):
+            single = read_pg_parallel(spark, pg_dsn, table, columns=[col])
+            assert Counter(r[0] for r in single.collect()) == Counter(want), col
+    finally:
+        _drop_table(pg_dsn, table)
+
+
+def test_read_pg_parallel_multi_mib_values_live(spark, pg_dsn):
+    """A text value and a bytea value of several MiB each (the bytea
+    doubles as hex) read back whole, next to small rows, over one and
+    over two slices."""
+    from datagouv_tools_spark.sinks.pg_copy import _connect
+
+    table = "dg_spark_read_large"
+    n = 3 << 20
+    _drop_table(pg_dsn, table)
+    conn = _connect(pg_dsn)
+    try:
+        cur = conn.cursor()
+        cur.execute(f'CREATE TABLE "{table}" (id int, s text, b bytea)')
+        cur.execute(
+            f'INSERT INTO "{table}" VALUES (1, \'small\', NULL),'
+            f" (2, repeat('x', {n}), decode(repeat('ab', {n}), 'hex')),"
+            " (3, NULL, '\\x00'::bytea)"
+        )
+        cur.close()
+        conn.commit()
+    finally:
+        conn.close()
+    try:
+        for kwargs in ({}, {"partition_column": "id", "num_partitions": 2}):
+            got = read_pg_parallel(spark, pg_dsn, table, **kwargs).select(
+                "id", F.length("s").alias("s"), F.length("b").alias("b"),
+                F.substring("b", 1, 6).alias("head"),
+            )
+            assert sorted(got.collect()) == [
+                (1, 5, None, None), (2, n, 2 + 2 * n, "\\xabab"), (3, None, 4, "\\x00"),
+            ], kwargs
+    finally:
+        _drop_table(pg_dsn, table)
+
+
+def test_copy_out_renders_iso_whatever_the_session_defaults_live(pg_dsn):
+    """A session whose defaults render dates as 'SQL, DMY', intervals
+    as sql_standard and bytea as escape still gets ISO dates,
+    ``postgres`` intervals and hex bytea from ``copy_out``: the forms
+    the JVM casts and the bytea-as-hex contract of ``pg_read`` expect."""
+    from urllib.parse import quote
+
+    from datagouv_tools_spark.sinks.pg_copy import _connect, copy_out
+
+    options = "-c DateStyle=SQL,DMY -c IntervalStyle=sql_standard -c bytea_output=escape"
+    dsn = f"{pg_dsn}?options={quote(options)}"
+    conn = _connect(dsn)
+    try:
+        cur = conn.cursor()
+        cur.execute("SHOW DateStyle")
+        assert cur.fetchall()[0][0] == "SQL, DMY"  # the defaults did apply
+        cur.close()
+        query = (
+            "SELECT DATE '2024-01-15', TIMESTAMP '2024-01-15 10:30:00',"
+            " INTERVAL '1 day 2 hours', '\\x00ff'::bytea"
+        )
+        got = [
+            tuple(d.values())
+            for b in csv_batches(copy_out(conn, query), ["d", "ts", "i", "b"])
+            for d in b.to_pylist()
+        ]
+    finally:
+        conn.close()
+    assert got == [("2024-01-15", "2024-01-15 10:30:00", "1 day 02:00:00", "\\x00ff")]
+
+
+def test_read_pg_parallel_runs_one_task_per_slice_in_one_job(spark, pg_dsn):
+    """A read-back of N slices is one Spark job of one stage and N
+    tasks: the Range index adds no sample job, shuffle or Python
+    identity task of its own."""
+    from datagouv_tools_spark.sinks.pg_copy import staged_copy
+
+    table = "dg_spark_read_tasks"
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(40)], "id int, s string")
+    staged_copy(df, pg_dsn, table, num_partitions=1)
+    sc = spark.sparkContext
+    try:
+        for n, kwargs in ((1, {}), (4, {"partition_column": "id", "num_partitions": 4})):
+            got = read_pg_parallel(spark, pg_dsn, table, **kwargs)
+            group = f"pg_read_tasks_{n}"
+            sc.setJobGroup(group, group)
+            try:
+                assert len(got.collect()) == 40
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            tracker = sc.statusTracker()
+            jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+            stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
+            assert len(jobs) == 1, jobs
+            assert [s.numTasks for s in stages] == [n], stages
+    finally:
+        _drop_table(pg_dsn, table)
 
 
 def test_read_pg_parallel_roundtrip_live(spark, pg_dsn):

@@ -269,6 +269,116 @@ def test_copy_partition_psycopg_uses_copy_context():
     assert calls[1][1] == b"1\n"
 
 
+def test_copy_out_psycopg_iterates_copy_blocks():
+    """Read leg on psycopg 3: ``cursor.copy(sql)`` is iterated for the
+    server's blocks (memoryviews), each yielded as bytes as it comes,
+    and the cursor closes after the last one."""
+    from datagouv_tools_spark.sinks.pg_copy import _COPY_OUT_SETTINGS, copy_out
+
+    calls = []
+
+    class Copy:
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            calls.append(("copy.exit",))
+
+        def __iter__(self):
+            for block in (b'1,"a,b"\n', b"2,\n"):
+                calls.append(("block",))
+                yield memoryview(block)
+
+    class PsycopgCursor:
+        def execute(self, sql):
+            calls.append(("execute", sql))
+
+        def copy(self, sql):
+            calls.append(("copy", sql))
+            return Copy()
+
+        def close(self):
+            calls.append(("cursor.close",))
+
+    class Conn:
+        def cursor(self):
+            return PsycopgCursor()
+
+    query = 'SELECT "a" FROM "t"'
+    sql = f"COPY ({query}) TO STDOUT (FORMAT csv, ENCODING 'UTF8')"
+    stream = copy_out(Conn(), query)
+    assert next(stream) == b'1,"a,b"\n'
+    # the output settings run first, on the same cursor
+    assert calls[:4] == [("execute", s) for s in _COPY_OUT_SETTINGS] + [("copy", sql)]
+    # streamed: the second block is not pulled before it is asked for
+    assert [c[0] for c in calls[3:]] == ["copy", "block"]
+    assert list(stream) == [b"2,\n"]
+    assert [c[0] for c in calls[3:]] == [
+        "copy", "block", "block", "copy.exit", "cursor.close",
+    ]
+
+
+def test_copy_out_pg8000_executes_into_writable_stream():
+    """Read leg on pg8000: no ``.copy()``, so COPY TO STDOUT runs as
+    ``execute(sql, stream=<writable>)`` and the written bytes come back
+    as one chunk, after the output settings."""
+    from datagouv_tools_spark.sinks.pg_copy import _COPY_OUT_SETTINGS, copy_out
+
+    calls = []
+
+    class Pg8000Cursor:
+        def execute(self, sql, stream=None):
+            calls.append(("execute", sql))
+            if stream is not None:
+                stream.write(b"1,x\n")
+                stream.write(b'2,""\n')
+
+        def close(self):
+            calls.append(("cursor.close",))
+
+    class Conn:
+        def cursor(self):
+            return Pg8000Cursor()
+
+    query = 'SELECT "a" FROM "t"'
+    sql = f"COPY ({query}) TO STDOUT (FORMAT csv, ENCODING 'UTF8')"
+    assert list(copy_out(Conn(), query)) == [b'1,x\n2,""\n']
+    assert calls == [
+        *(("execute", s) for s in _COPY_OUT_SETTINGS), ("execute", sql), ("cursor.close",),
+    ]
+
+
+def test_copy_out_psql_cli_captures_stdout_bytes(monkeypatch):
+    """Read leg on the psql CLI: queued statements flush first, then
+    one psql session runs the output settings and the COPY (one ``-c``
+    each) and its stdout is the stream, as raw bytes (no newline
+    translation of CRs in quoted fields)."""
+    import subprocess
+
+    from datagouv_tools_spark.sinks.pg_copy import (
+        _COPY_OUT_SETTINGS,
+        PsqlCliConnection,
+        copy_out,
+    )
+
+    runs = []
+
+    def fake_run(argv, **kw):
+        sqls = tuple(argv[i + 1] for i, a in enumerate(argv) if a == "-c")
+        runs.append((sqls, kw.get("text")))
+        return subprocess.CompletedProcess(argv, 0, stdout=b'1,"a\r\nb"\n', stderr=b"")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    conn = PsqlCliConnection("postgresql://u:pw@h/db")
+    conn.cursor().execute('CREATE TABLE "t" (a int)')
+    query = 'SELECT "a" FROM "t"'
+    sql = f"COPY ({query}) TO STDOUT (FORMAT csv, ENCODING 'UTF8')"
+    assert list(copy_out(conn, query)) == [b'1,"a\r\nb"\n']
+    assert runs == [
+        (('CREATE TABLE "t" (a int)',), True), ((*_COPY_OUT_SETTINGS, sql), False),
+    ]
+
+
 def test_parse_dsn_pg8000_kwargs():
     from datagouv_tools_spark.sinks.pg_copy import _parse_dsn
 
@@ -392,6 +502,28 @@ def test_copy_csv_bytes_roundtrip_duckdb(spark, tmp_path):
         (r["id"], r["label"], r["x"], r["ts"]) for r in rows
     ]
     assert parsed == expect
+
+
+def test_chunk_stream_reads_one_large_chunk_in_linear_time():
+    """The psql transport hands a whole slice over as one chunk, which
+    Arrow's CSV reader then pulls in small reads. Each read must not
+    re-copy the unread rest: 32 MiB in 4 KiB reads is 8,192 reads,
+    about 128 GiB of copying when the rest is re-sliced per read, and
+    well under a second when it is a view."""
+    import time
+
+    from datagouv_tools_spark.sinks.pg_copy import _ChunkStream
+
+    blob = bytes(range(256)) * (1 << 17)  # 32 MiB
+    stream = _ChunkStream(iter([blob[:3], blob[3:]]))
+    t0 = time.perf_counter()
+    pieces = []
+    while piece := stream.read(1 << 12):
+        pieces.append(piece)
+    elapsed = time.perf_counter() - t0
+    assert b"".join(pieces) == blob
+    assert all(type(p) is bytes for p in pieces)
+    assert elapsed < 2.0, elapsed
 
 
 def test_copy_csv_empty_string_vs_null():

@@ -13,6 +13,12 @@ kill 100 TB runs and writes one JSON report (PLANAUDIT.json):
   path this engine bans outright; Arrow `mapInPandas` kernels show up
   as MapInPandas / ArrowEvalPython and are allowed where deliberate).
 - `exchanges`: Exchange count (shuffle pressure signal, informational).
+- `python_rdd_scan`: `Scan ExistingRDD` leaves (informational, not a
+  gate). A `createDataFrame` from a Python list plans this way and runs
+  a Python identity task per partition on every scan; a JVM `range`,
+  SQL `VALUES` or an Arrow table plans as `Range`/`LocalTableScan`
+  instead. A `localCheckpoint` also scans as ExistingRDD, so the count
+  is an upper bound on Python-RDD sources.
 - `take_ordered`: whether a LIMIT query plans as TakeOrdered instead
   of a global sort.
 - `broadcast_scaling`: SF-scaling base tables pinned under an explicit
@@ -57,6 +63,7 @@ def audit(plan: str) -> dict:
             re.findall(r"MapInPandas|ArrowEvalPython|FlatMapGroupsInPandas", plan)
         ),
         "exchanges": len(re.findall(r"Exchange (hash|range)partitioning", plan)),
+        "python_rdd_scan": len(re.findall(r"Scan ExistingRDD", plan)),
         "take_ordered": "TakeOrderedAndProject" in plan,
         # a Window fed (within its immediate subtree) by an
         # Exchange SinglePartition = the window's whole input sorts in
@@ -93,6 +100,7 @@ def main() -> int:
         "cartesian": 0,
         "bnlj": 0,
         "python_row": 0,
+        "python_rdd_scan": 0,
         "single_partition_window": 0,
         "broadcast_scaling": 0,
         "spw_scaling": 0,
@@ -139,6 +147,7 @@ def main() -> int:
         "total_cartesian": totals["cartesian"],
         "total_python_row_udf": totals["python_row"],
         "total_bnlj": totals["bnlj"],
+        "total_python_rdd_scan": totals["python_rdd_scan"],
         "total_single_partition_window": totals["single_partition_window"],
         "total_broadcast_scaling": totals["broadcast_scaling"],
         "total_spw_scaling": totals["spw_scaling"],
