@@ -2,8 +2,13 @@
 
 Mirrors the reference's packaged CLI (reference
 datagouv_tools/dg_tools_script.py:28-67: ``datagouv_tools -s sirene -r
-pg --database sirene -p /data/sirene``) with the same flags and
-connection dispatch (pg8000 / mysql.connector / sqlite3), plus the
+pg --database sirene -p /data/sirene``) with the same flags. ``-r pg``
+turns ``--database``/``--user``/``--password`` into a libpq URL (host
+and port from the PG* environment defaults) and loads through the same
+path as ``--dsn``: DDL over psycopg, pg8000 or the ``psql`` CLI,
+whichever is installed, and the distributed COPY fast path
+(sinks/sink.write_sql_table). mariadb and sqlite connect through
+mysql.connector and sqlite3 and load by batched INSERTs. Plus the
 engine's two extra sink modes:
 
 - ``--dry-run``      — no connection: print the rendered SQL statements
@@ -14,6 +19,7 @@ engine's two extra sink modes:
 Examples::
 
     python -m datagouv_tools_spark -s sirene  -p /data/sirene --dry-run
+    python -m datagouv_tools_spark -s sirene  -p /data/sirene -r pg --database sirene
     python -m datagouv_tools_spark -s sirene  -p /data/sirene -r sqlite --database sirene.db
     python -m datagouv_tools_spark -s fantoir -p /data/FANTOIR.txt --parquet-out /lake
     python -m datagouv_tools_spark -s deces   -p /data/deces.txt -r sqlite --database deces.db
@@ -27,6 +33,7 @@ import argparse
 import sys
 from pathlib import Path
 
+from datagouv_tools_spark.schema.ddl import DIALECTS, PostgresDialect
 from datagouv_tools_spark.session import get_spark
 
 
@@ -75,17 +82,35 @@ def build_parser() -> argparse.ArgumentParser:
     return parser
 
 
+def _pg_url(database: str, user: str | None, password: str | None) -> str:
+    """Percent-quoted libpq URL for ``-r pg --database``. Host, port and
+    a missing user come from this process's PGHOST/PGPORT/PGUSER: they
+    are resolved here because the URL also travels to every executor's
+    COPY task, whose environment need not hold them."""
+    import os
+    from urllib.parse import quote
+
+    user = user or os.environ.get("PGUSER")
+    auth = ""
+    if user is not None or password is not None:
+        auth = quote(user or "", safe="")
+        if password is not None:
+            auth += ":" + quote(password, safe="")
+        auth += "@"
+    host = quote(os.environ.get("PGHOST", ""), safe="")
+    port = os.environ.get("PGPORT")
+    netloc = auth + host + (f":{port}" if port else "")
+    return f"postgresql://{netloc}/{quote(database, safe='')}"
+
+
 def _connect(rdbms: str, database: str, user: str | None, password: str | None):
-    """Reference connection dispatch (dg_tools_script.py:49-59)."""
+    """Reference connection dispatch (dg_tools_script.py:49-59) for the
+    non-PostgreSQL dialects."""
     kwargs = {}
     if user is not None:
         kwargs["user"] = user
     if password is not None:
         kwargs["password"] = password
-    if rdbms in ("pg", "postgres", "postgresql"):
-        import pg8000
-
-        return pg8000.connect(database=database, **kwargs)
     if rdbms in ("maria", "mariadb", "mysql"):
         import mysql.connector as mariadb
 
@@ -122,8 +147,8 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{stage}: {count}")
         return 0
 
-    connection = None
-    if not args.dry_run and not args.parquet_out and not args.dsn:
+    connection, dsn = None, args.dsn
+    if not args.dry_run and not args.parquet_out and not dsn:
         if not args.database:
             print(
                 "error: --database is required unless --dry-run, "
@@ -131,7 +156,10 @@ def main(argv: list[str] | None = None) -> int:
                 file=sys.stderr,
             )
             return 2
-        connection = _connect(args.rdbms, args.database, args.user, args.password)
+        if isinstance(DIALECTS.get(args.rdbms.casefold()), PostgresDialect):
+            dsn = _pg_url(args.database, args.user, args.password)
+        else:
+            connection = _connect(args.rdbms, args.database, args.user, args.password)
 
     spark = get_spark(f"datagouv-tools-spark-{args.source}")
     try:
@@ -140,14 +168,14 @@ def main(argv: list[str] | None = None) -> int:
 
             out = import_sirene(
                 spark, path, rdbms=args.rdbms, connection=connection,
-                parquet_out=args.parquet_out, dsn=args.dsn,
+                parquet_out=args.parquet_out, dsn=dsn,
             )
         elif args.source == "fantoir":
             from datagouv_tools_spark.pipelines.fantoir import import_fantoir
 
             out = import_fantoir(
                 spark, path, rdbms=args.rdbms, connection=connection,
-                parquet_out=args.parquet_out, dsn=args.dsn,
+                parquet_out=args.parquet_out, dsn=dsn,
             )
         else:
             from datagouv_tools_spark.pipelines.deces import import_deces
@@ -155,7 +183,7 @@ def main(argv: list[str] | None = None) -> int:
             out = {
                 "deces": import_deces(
                     spark, path, rdbms=args.rdbms, connection=connection,
-                    parquet_out=args.parquet_out, dsn=args.dsn,
+                    parquet_out=args.parquet_out, dsn=dsn,
                 )
             }
         # commit only on SUCCESS: committing in a finally (as the

@@ -424,7 +424,6 @@ def dedup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    algorithm: str = "auto",
     max_local_edges: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over near-duplicate pairs → (node,
@@ -432,46 +431,29 @@ def dedup_clusters(
     canonical "keep one per cluster" step after any pair generator
     (MinHash bands, SimHash, embedding cosine).
 
-    Two interchangeable algorithms behind one contract (identical
-    output; equivalence is tested):
+    Bounded local finish: if the edge set fits ``max_local_edges``
+    (proved by the same limit-collect guard as cosine_pairs_exact — one
+    action both fetches and checks the bound), union-find runs on the
+    driver and the labels are parallelized back; otherwise min-label
+    propagation with pointer jumping runs distributed (``_cc_minlabel``:
+    one |E| shuffle + one label-hop join per round, a few rounds on
+    shallow near-dup graphs). Iterative distributed CC pays ~0.5 s of
+    scheduling per round regardless of |E| (7 rounds ≈ 4 s on a
+    500-edge graph at sf0.1); a dedup edge list under the bound is a
+    driver-sized array, and finishing it locally is what production CC
+    implementations do once the frontier collapses. At 100 TB edge sets
+    exceed the bound and the distributed path runs — the bound is the
+    contract, not a hope. (Oversize inputs pay one extra pass of the
+    pair-generation lineage for the failed probe; that lineage is
+    checkpointed first thing by the distributed path.)
 
-    - ``algorithm="minlabel"`` (default) — min-label propagation with
-      pointer jumping. Each round: one |E| shuffle + one label-hop
-      join. Right default for near-dup graphs, whose components are
-      shallow (a few rounds).
-    - ``algorithm="star"`` — alternating large-star/small-star
-      (Kiveris et al., "Connected Components in MapReduce and
-      Beyond"): each round REWRITES the edge set toward stars centered
-      at component minima, so long chains collapse in O(log²) rounds
-      with the edge set (and thus per-round shuffle volume) shrinking
-      as it converges. The swap-in for deep-chain graphs at 100 TB.
-    - ``algorithm="auto"`` (default) — bounded local finish: if the
-      edge set fits ``max_local_edges`` (proved by the same
-      limit-collect guard as cosine_pairs_exact — one action both
-      fetches and checks the bound), run union-find on the driver and
-      parallelize the labels back; otherwise fall through to minlabel.
-      Iterative distributed CC pays ~0.5 s of scheduling per round
-      regardless of |E| (7 rounds ≈ 4 s on a 500-edge graph at sf0.1);
-      a dedup edge list under the bound is a driver-sized array, and
-      finishing it locally is what production CC implementations do
-      once the frontier collapses. At 100 TB edge sets exceed the
-      bound and the distributed path runs — the bound is the contract,
-      not a hope. (Oversize inputs pay one extra pass of the pair-
-      generation lineage for the failed probe; that lineage is
-      checkpointed first thing by the distributed path.)
-
-    Fixpoints are unique, so results are deterministic and
-    oracle-checkable (recursive CTE in SQL) for all three.
+    Both paths give identical labels (the equivalence is tested), and
+    the fixpoint is unique, so results are deterministic and
+    oracle-checkable (recursive CTE in SQL).
     """
-    if algorithm == "auto":
-        local = _cc_local(pairs, id_a, id_b, max_local_edges)
-        if local is not None:
-            return local
-        return _cc_minlabel(pairs, id_a, id_b, max_iter)[0]
-    if algorithm == "star":
-        return _cc_star(pairs, id_a, id_b, max_iter)[0]
-    if algorithm != "minlabel":
-        raise ValueError(f"unknown algorithm {algorithm!r}: auto|minlabel|star")
+    local = _cc_local(pairs, id_a, id_b, max_local_edges)
+    if local is not None:
+        return local
     return _cc_minlabel(pairs, id_a, id_b, max_iter)[0]
 
 
@@ -636,101 +618,6 @@ def _cc_minlabel(
             break
         prev_sum = new_sum
     return labels.select("node", F.col("lbl").alias("cluster_id")), rounds
-
-
-def _cc_star(
-    pairs: DataFrame, id_a: str, id_b: str, max_iter: int
-) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star CC; returns (labels, rounds).
-
-    Per Kiveris et al.: large-star connects every neighbor v > u to
-    m = min(N(u) ∪ {u}); small-star connects every neighbor v ≤ u
-    (and u itself) to that min. Alternating the two converges to a
-    forest of stars centered at each component's minimum id in
-    O(log²) rounds — crucially, the edge set SHRINKS monotonically in
-    weight as chains collapse, so late rounds shuffle less, where
-    min-label re-shuffles the full |E| every round.
-
-    Convergence probe: a commutative signature (count, Σa, Σb,
-    Σ xxhash64(a,b)) of the canonical edge set — one aggregate scan
-    over the just-checkpointed edges, no diff join. Equal signatures
-    ⇒ identical sets (up to a 2⁻⁶⁴-scale hash-sum collision — the
-    probe only decides when to STOP; the labels themselves are exact).
-    """
-    from pyspark.sql import functions as F
-
-    fwd = pairs.select(
-        F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    nodes = (
-        fwd.select(F.col("a").alias("node"))
-        .union(fwd.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = (
-        fwd.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        nb = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mins = nb.groupBy("u").agg(F.min("v").alias("mn"))
-        mins = mins.select("u", F.least("mn", F.col("u")).alias("m"))
-        # emit (m, v) for strictly larger neighbors: m ≤ u < v
-        return (
-            nb.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        # directed larger→smaller: u = b side, v = a side (v < u)
-        nb = e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        mins = nb.groupBy("u").agg(F.min("v").alias("m"))
-        smaller = (
-            nb.join(mins, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-        )
-        self_edge = mins.select(F.col("m").alias("a"), F.col("u").alias("b"))
-        return smaller.union(self_edge).distinct()
-
-    def _sig(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("a").cast("decimal(38,0)")),
-            F.sum(F.col("b").cast("decimal(38,0)")),
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
-        ).collect()[0]
-        return tuple(row)
-
-    from datagouv_tools_spark.operators.ckpt import RoundCheckpointer
-
-    _ckpt2 = RoundCheckpointer()
-    prev = _sig(edges)
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        edges = _ckpt2(_small_star(_large_star(edges)))
-        cur = _sig(edges)
-        if cur == prev:
-            break
-        prev = cur
-    # fixpoint = stars (a = component min, b = member); centers never
-    # appear on the b side, so a left join + coalesce labels them
-    centers = edges.select(F.col("b").alias("node"), F.col("a").alias("cl"))
-    labels = nodes.join(centers, "node", "left").select(
-        "node", F.coalesce("cl", F.col("node")).alias("cluster_id")
-    )
-    return labels, rounds
 
 
 def prefix_filter_jaccard_pairs(

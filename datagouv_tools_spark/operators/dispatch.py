@@ -4,8 +4,10 @@ The reference's one dataflow operator: a single pass over a file
 routing each record to one of N outputs by a classifier. In Spark the
 "route" is a column; the three physical strategies trade memory for IO:
 
-- ``filtered``: N filtered views of one (optionally persisted) scan —
-  simplest, right for interactive/local use.
+- ``filtered``: N filtered views of one scan — simplest, right for
+  interactive/local use. For the views to share one read the caller
+  persists ``df`` first, and unpersists it once the views are written:
+  only the caller knows when that is (pipelines/fantoir.py).
 - ``staged``: one ``partitionBy(route)`` parquet write then
   partition-pruned reads — right at 100 TB (single scan, restartable,
   no cluster-wide cache pressure, downstream reads prune to one route).
@@ -40,15 +42,7 @@ def dispatch_by(
         if not staging_path:
             raise ValueError("staged dispatch needs staging_path")
         routed.write.mode("overwrite").partitionBy(route_col).parquet(staging_path)
-        staged = df.sparkSession.read.parquet(staging_path)
-        return {
-            r: staged.filter(F.col(route_col) == r).drop(route_col) for r in routes
-        }
-    if strategy == "filtered":
-        from pyspark.storagelevel import StorageLevel
-
-        routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
-        return {
-            r: routed.filter(F.col(route_col) == r).drop(route_col) for r in routes
-        }
-    raise ValueError(f"unknown dispatch strategy {strategy!r}")
+        routed = df.sparkSession.read.parquet(staging_path)
+    elif strategy != "filtered":
+        raise ValueError(f"unknown dispatch strategy {strategy!r}")
+    return {r: routed.filter(F.col(route_col) == r).drop(route_col) for r in routes}

@@ -19,13 +19,9 @@ from pyspark.sql import functions as F
 
 from datagouv_tools_spark.functions.casts import lenient_date, lenient_date_struct
 from datagouv_tools_spark.operators.flatten import flatten_array_to_columns
-from datagouv_tools_spark.schema.ddl import DecesIndexProvider, get_dialect
+from datagouv_tools_spark.schema.ddl import DecesIndexProvider
 from datagouv_tools_spark.schema.record_format import DECES_FORMAT
-from datagouv_tools_spark.sinks.sink import (
-    DryRunExecutor,
-    SqlSink,
-    dbapi_insert_loader,
-)
+from datagouv_tools_spark.sinks.sink import ParquetSink, write_sql_table
 from datagouv_tools_spark.sources.fixed_width import read_fixed_width
 
 __all__ = ["import_deces", "deces_dataframe"]
@@ -82,28 +78,11 @@ def import_deces(
 ) -> list[str] | str:
     """Import the deaths table (reference loads only name columns).
     ``dsn`` + ``bulk_copy`` enable the live-PostgreSQL COPY path (see
-    sinks/sink.resolve_pg_load)."""
+    sinks/sink.write_sql_table)."""
     df = deces_dataframe(spark, deces_path, full=False)
     if parquet_out:
-        from datagouv_tools_spark.sinks.sink import ParquetSink
-
         return ParquetSink(parquet_out).write(df, "deces")
-    dialect = get_dialect(rdbms)
-    from datagouv_tools_spark.sinks.sink import resolve_pg_load
-
-    connection, loader = resolve_pg_load(connection, dsn, bulk_copy, rdbms, dialect)
-    sink = SqlSink(
-        dialect=dialect,
-        executor=DryRunExecutor() if connection is None else _db_executor(connection),
-        index_provider=DecesIndexProvider(),
-        loader=loader,
+    statements = write_sql_table(
+        df, "deces", rdbms, DecesIndexProvider(), connection, dsn, bulk_copy
     )
-    sink.write(df, "deces")
-    return sink.executor.statements if isinstance(sink.executor, DryRunExecutor) else "ok"
-
-
-def _db_executor(connection):
-    from datagouv_tools_spark.sinks.sink import DbApiExecutor
-
-    return DbApiExecutor(connection)
-
+    return "ok" if statements is None else statements

@@ -1,12 +1,15 @@
 """FANTOIR import pipeline (SURVEY §3.2; reference import_fantoir.py).
 
 One classified scan of the fixed-width file → demux into the four
-record-type tables (header skipped at load, like the reference's
-temp-file path, import_fantoir.py:112-113) → per-table sink writes.
+record-type tables through ``operators/dispatch.dispatch_by`` (header
+skipped at load, like the reference's temp-file path,
+import_fantoir.py:112-113) → per-table sink writes.
 
+``import_fantoir`` persists the classified scan so the three table
+writes share one file read, and releases it once they are written.
 The reference's 150 LoC of threads/queues/CSVStream is replaced by
 Spark's partitioned parallel execution; the temp-file two-pass variant
-maps to the ``staged`` dispatch strategy (one scan → partitionBy
+maps to ``dispatch_by``'s ``staged`` strategy (one scan → partitionBy
 staging → pruned reads), which is the shape that holds at 100 TB.
 """
 
@@ -17,15 +20,14 @@ import zipfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from datagouv_tools_spark.schema.ddl import EmptyIndexProvider, get_dialect
+from datagouv_tools_spark.operators.dispatch import dispatch_by
+from datagouv_tools_spark.schema.ddl import EmptyIndexProvider
 from datagouv_tools_spark.schema.record_format import FANTOIR_FORMATS
-from datagouv_tools_spark.sinks.sink import (
-    DryRunExecutor,
-    SqlSink,
-    dbapi_insert_loader,
-)
-from datagouv_tools_spark.sources.fixed_width import fantoir_record_tables, read_fantoir
+from datagouv_tools_spark.sinks.sink import ParquetSink, write_sql_table
+from datagouv_tools_spark.sources.fixed_width import read_fantoir
 
 __all__ = ["import_fantoir", "fantoir_tables"]
 
@@ -45,17 +47,19 @@ def _maybe_unzip(fantoir_path: Path, staging_dir: str | None) -> Path:
     return target
 
 
+def _record_tables(classified: DataFrame) -> dict[str, DataFrame]:
+    views = dispatch_by(classified, F.col("record_type"), list(FANTOIR_FORMATS))
+    return {name: fmt.apply(views[name]) for name, fmt in FANTOIR_FORMATS.items()}
+
+
 def fantoir_tables(
     spark: SparkSession,
     fantoir_path: str | Path,
     staging_dir: str | None = None,
-    single_pass: bool = True,
 ) -> dict[str, DataFrame]:
     """Classified scan → {record_type: DataFrame} (all-string columns,
     like the reference's all-TEXT tables, import_fantoir.py:160-163)."""
-    path = _maybe_unzip(Path(fantoir_path), staging_dir)
-    classified = read_fantoir(spark, path)
-    return fantoir_record_tables(classified, FANTOIR_FORMATS, single_pass=single_pass)
+    return _record_tables(read_fantoir(spark, _maybe_unzip(Path(fantoir_path), staging_dir)))
 
 
 def import_fantoir(
@@ -71,38 +75,20 @@ def import_fantoir(
     """Import the three loaded record-type tables; dry-run statements
     (connection=None) or parquet paths are returned per table. ``dsn``
     + ``bulk_copy`` enable the live-PostgreSQL COPY path (see
-    sinks/sink.resolve_pg_load)."""
-    tables = fantoir_tables(spark, fantoir_path, staging_dir)
-    results: dict[str, list[str] | str] = {}
-    for name in LOADED_RECORD_TYPES:
-        df = tables[name]
-        if parquet_out:
-            from datagouv_tools_spark.sinks.sink import ParquetSink
-
-            results[name] = ParquetSink(parquet_out).write(df, name)
-        else:
-            dialect = get_dialect(rdbms)
-            from datagouv_tools_spark.sinks.sink import resolve_pg_load
-
-            connection, loader = resolve_pg_load(
-                connection, dsn, bulk_copy, rdbms, dialect
-            )
-            sink = SqlSink(
-                dialect=dialect,
-                executor=DryRunExecutor() if connection is None else _db_executor(connection),
-                index_provider=EmptyIndexProvider(),
-                loader=loader,
-            )
-            sink.write(df, name)
-            if isinstance(sink.executor, DryRunExecutor):
-                results[name] = sink.executor.statements
+    sinks/sink.write_sql_table)."""
+    classified = read_fantoir(spark, _maybe_unzip(Path(fantoir_path), staging_dir))
+    classified = classified.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        tables = _record_tables(classified)
+        results: dict[str, list[str] | str] = {}
+        for name in LOADED_RECORD_TYPES:
+            if parquet_out:
+                results[name] = ParquetSink(parquet_out).write(tables[name], name)
             else:
-                results[name] = "loaded"
-    return results
-
-
-def _db_executor(connection):
-    from datagouv_tools_spark.sinks.sink import DbApiExecutor
-
-    return DbApiExecutor(connection)
-
+                statements = write_sql_table(
+                    tables[name], name, rdbms, EmptyIndexProvider(), connection, dsn, bulk_copy
+                )
+                results[name] = "loaded" if statements is None else statements
+        return results
+    finally:
+        classified.unpersist()

@@ -20,14 +20,10 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from datagouv_tools_spark.functions.names import to_snake
-from datagouv_tools_spark.schema.ddl import SireneIndexProvider, get_dialect
+from datagouv_tools_spark.schema.ddl import SireneIndexProvider
 from datagouv_tools_spark.schema.dessin import SireneSchema
 from datagouv_tools_spark.schema.types import PatchedSireneTypeConverter, TypeConverter
-from datagouv_tools_spark.sinks.sink import (
-    DryRunExecutor,
-    SqlSink,
-    dbapi_insert_loader,
-)
+from datagouv_tools_spark.sinks.sink import ParquetSink, write_sql_table
 from datagouv_tools_spark.sources.zipped_csv import discover_sirene_sources, read_zipped_csv
 
 logger = logging.getLogger(__name__)
@@ -77,9 +73,9 @@ def import_sirene(
 
     ``dsn`` (PostgreSQL URL) is the live-server path: DDL phases run
     over a connection built from it, and with ``bulk_copy=True`` the
-    data loads through the distributed COPY fast path
-    (sinks/pg_copy.copy_loader) instead of row INSERTs — the
-    reference's bulk_copy dispatch (import_sirene.py:137-141)."""
+    data loads through the distributed COPY fast path instead of row
+    INSERTs — the reference's bulk_copy dispatch
+    (import_sirene.py:137-141; see sinks/sink.write_sql_table)."""
     sirene_path = Path(sirene_path)
     assert sirene_path.exists(), f"no such path: {sirene_path}"
     staging = staging_dir or tempfile.mkdtemp(prefix="sirene_staging_")
@@ -92,32 +88,10 @@ def import_sirene(
         df = sirene_table(spark, source, staging, PatchedSireneTypeConverter(), process_names)
         table = table_name_of(source.table_name)
         if parquet_out:
-            from datagouv_tools_spark.sinks.sink import ParquetSink
-
             results[table] = ParquetSink(parquet_out, fmt=out_format).write(df, table)
         else:
-            dialect = get_dialect(rdbms)
-            from datagouv_tools_spark.sinks.sink import resolve_pg_load
-
-            connection, loader = resolve_pg_load(
-                connection, dsn, bulk_copy, rdbms, dialect
+            statements = write_sql_table(
+                df, table, rdbms, SireneIndexProvider(), connection, dsn, bulk_copy
             )
-            sink = SqlSink(
-                dialect=dialect,
-                executor=DryRunExecutor() if connection is None else _db_executor(connection),
-                index_provider=SireneIndexProvider(),
-                loader=loader,
-            )
-            sink.write(df, table)
-            if isinstance(sink.executor, DryRunExecutor):
-                results[table] = sink.executor.statements
-            else:
-                results[table] = "loaded"
+            results[table] = "loaded" if statements is None else statements
     return results
-
-
-def _db_executor(connection):
-    from datagouv_tools_spark.sinks.sink import DbApiExecutor
-
-    return DbApiExecutor(connection)
-

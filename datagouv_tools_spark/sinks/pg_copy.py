@@ -546,15 +546,3 @@ def staged_copy(
         conn.commit()
     finally:
         conn.close()
-
-
-def copy_loader(dsn: str, num_partitions: int | None = None):
-    """``SqlSink`` loader using the COPY fast path (K4): the sink's DDL
-    phases own DROP/CREATE/ANALYZE/INDEX; this streams every partition
-    into the freshly created table via COPY FROM STDIN (reference
-    import_sirene.py bulk_copy=True dispatch)."""
-
-    def load(df: DataFrame, table: str) -> None:
-        copy_dataframe(df, dsn, table, num_partitions)
-
-    return load

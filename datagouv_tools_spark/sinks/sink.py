@@ -10,6 +10,12 @@ Design (mirrors the reference's provider/executor split, U6):
 - ``SqlSink`` sequences the load the way the reference does
   (K1→K2→K3→load→K9→K8→K10): drop, create, truncate, bulk load, analyze,
   index-after-load, commit.
+- ``write_sql_table`` is the one entry point the import pipelines and
+  the CLI load through: it picks the executor (dry run or a live
+  connection, opened from a PostgreSQL ``dsn`` over whichever transport
+  ``pg_copy._connect`` finds — psycopg, pg8000 or the ``psql`` CLI)
+  and the loader (COPY or batched INSERTs), and owns the lifetime of
+  any connection it opens.
 
 The bulk-load path on a cluster: ``df.write.jdbc`` does batched INSERT
 from every partition in parallel (numPartitions connections — the
@@ -29,9 +35,11 @@ from pyspark.sql import types as T
 from datagouv_tools_spark.schema.ddl import (
     EmptyIndexProvider,
     IndexProvider,
+    PostgresDialect,
     SqlDialect,
     get_dialect,
 )
+from datagouv_tools_spark.sinks import pg_copy
 
 __all__ = [
     "StatementExecutor",
@@ -42,6 +50,7 @@ __all__ = [
     "BucketedTableSink",
     "dbapi_insert_loader",
     "jdbc_loader",
+    "write_sql_table",
 ]
 
 
@@ -105,19 +114,6 @@ class SqlSink:
     executor: StatementExecutor
     index_provider: IndexProvider = field(default_factory=EmptyIndexProvider)
     loader: Callable[[DataFrame, str], None] | None = None
-
-    @classmethod
-    def dry_run(cls, rdbms: str = "pg", index_provider: IndexProvider | None = None) -> "SqlSink":
-        return cls(
-            dialect=get_dialect(rdbms),
-            executor=DryRunExecutor(),
-            index_provider=index_provider or EmptyIndexProvider(),
-        )
-
-    @property
-    def statements(self) -> list[str]:
-        assert isinstance(self.executor, DryRunExecutor)
-        return self.executor.statements
 
     def write(self, df: DataFrame, table: str, schema: T.StructType | None = None) -> None:
         schema = schema or df.schema
@@ -197,6 +193,64 @@ def jdbc_loader(url: str, properties: dict[str, str], num_partitions: int | None
         df.write.mode("append").options(**properties).jdbc(url=url, table=table, mode="append")
 
     return load
+
+
+def write_sql_table(
+    df: DataFrame,
+    table: str,
+    rdbms: str,
+    index_provider: IndexProvider,
+    connection=None,
+    dsn: str | None = None,
+    bulk_copy: bool = True,
+) -> list[str] | None:
+    """Load ``df`` into ``table`` through ``SqlSink`` — the import
+    pipelines' one SQL sink step (the reference's connection-or-fake
+    and ``bulk_copy`` dispatch):
+
+    - neither ``connection`` nor ``dsn``: dry run; returns the rendered
+      statements (K11).
+    - ``dsn`` (PostgreSQL only): DDL runs over a connection opened from
+      it and closed on return; ``bulk_copy=True`` loads through the
+      distributed COPY fast path (``pg_copy.copy_dataframe``), else by
+      batched INSERTs, which need a DB-API driver (psycopg, pg8000).
+    - ``connection``: batched INSERTs over it; the caller keeps and
+      closes it.
+
+    The loader is chosen before any DDL runs, so a load that cannot run
+    raises with the existing table untouched. Returns None after a live
+    load."""
+    dialect = get_dialect(rdbms)
+    if dsn is not None and not isinstance(dialect, PostgresDialect):
+        # silently ignoring the DSN would fall back to a dry-run sink
+        # that prints SQL and exits 0 — loud failure instead
+        raise ValueError(
+            f"--dsn is only supported for rdbms 'pg' (got {rdbms!r}); "
+            f"pass a DB-API connection for other databases"
+        )
+    if connection is None and dsn is None:
+        executor = DryRunExecutor()
+        SqlSink(dialect, executor, index_provider).write(df, table)
+        return executor.statements
+    owned = connection is None
+    if owned:
+        connection = pg_copy._connect(dsn)
+    try:
+        if dsn is not None and bulk_copy:
+            loader = lambda d, t: pg_copy.copy_dataframe(d, dsn, t)  # noqa: E731
+        elif isinstance(connection, pg_copy.PsqlCliConnection):
+            raise ValueError(
+                "bulk_copy=False loads by DB-API executemany, which the psql "
+                "CLI transport cannot run; install psycopg or pg8000, or "
+                "load with bulk_copy=True"
+            )
+        else:
+            loader = dbapi_insert_loader(connection, dialect)
+        SqlSink(dialect, DbApiExecutor(connection), index_provider, loader).write(df, table)
+    finally:
+        if owned:
+            connection.close()
+    return None
 
 
 @dataclass
@@ -326,40 +380,3 @@ def compact_parquet(
         ]
     )
     return n_before, n_after
-
-
-def resolve_pg_load(
-    connection,
-    dsn: str | None,
-    bulk_copy: bool,
-    rdbms: str,
-    dialect: "SqlDialect",
-):
-    """Shared connection/loader dispatch for the import pipelines
-    (sirene/fantoir/deces — the reference's bulk_copy flag):
-
-    - ``dsn`` set + rdbms "pg": DDL runs over a connection built from
-      the DSN; ``bulk_copy=True`` loads through the distributed COPY
-      fast path (sinks/pg_copy.copy_loader), else batched INSERTs.
-    - explicit ``connection``: batched INSERTs over it (sqlite et al.).
-    - neither: (None, None) — the caller wires a dry-run sink.
-
-    Returns (connection, loader)."""
-    if dsn is not None and rdbms != "pg":
-        # silently ignoring the DSN would fall back to a dry-run sink
-        # that prints SQL and exits 0 — loud failure instead
-        raise ValueError(
-            f"--dsn is only supported for rdbms 'pg' (got {rdbms!r}); "
-            f"pass a DB-API connection for other databases"
-        )
-    if connection is None and dsn is not None and rdbms == "pg":
-        from datagouv_tools_spark.sinks.pg_copy import _connect
-
-        connection = _connect(dsn)
-    if connection is None:
-        return None, None
-    if bulk_copy and dsn is not None and rdbms == "pg":
-        from datagouv_tools_spark.sinks.pg_copy import copy_loader
-
-        return connection, copy_loader(dsn)
-    return connection, dbapi_insert_loader(connection, dialect)

@@ -8,11 +8,9 @@ The FANTOIR file interleaves four record types in one file. The
 scale-correct single-pass plan (reference dispatches line-by-line to 4
 outputs, import_fantoir.py:166-206):
 
-- classify each line once (``classify_fantoir_record``),
-- either ``persist()`` the classified scan and derive 4 filtered
-  DataFrames (local/interactive), or write one staged parquet
-  ``partitionBy("record_type")`` and re-read per type (cluster-scale —
-  one scan, partition-pruned downstream reads).
+- classify each line once (``read_fantoir`` → ``record_type``),
+- demux the classified scan with ``operators/dispatch.dispatch_by``
+  (D1/D2), as ``pipelines/fantoir.py`` does.
 """
 
 from __future__ import annotations
@@ -23,12 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datagouv_tools_spark.schema.record_format import (
-    FANTOIR_FORMATS,
     RecordFormat,
     classify_fantoir_record,
 )
 
-__all__ = ["read_fixed_width", "read_fantoir", "fantoir_record_tables"]
+__all__ = ["read_fixed_width", "read_fantoir"]
 
 FANTOIR_TRAILER_PREFIX = "9999999999"
 
@@ -59,45 +56,3 @@ def read_fantoir(
     return lines.filter(
         ~F.col("value").startswith(FANTOIR_TRAILER_PREFIX)
     ).select("value", classify_fantoir_record())
-
-
-def fantoir_record_tables(
-    classified: DataFrame,
-    formats: dict[str, RecordFormat] | None = None,
-    single_pass: bool = True,
-) -> dict[str, DataFrame]:
-    """Demux the classified scan into one DataFrame per record type (D1).
-
-    ``single_pass=True`` persists the classified scan so the four
-    filtered projections share one file read (the reference's one-pass
-    dispatcher). At 100 TB prefer ``stage_fantoir`` below: a
-    partitionBy("record_type") parquet write, then partition-pruned
-    reads — persist() would need the whole file in cluster memory/disk
-    cache, staging costs one write but is restartable and spill-free.
-    """
-    formats = formats or FANTOIR_FORMATS
-    if single_pass:
-        from pyspark.storagelevel import StorageLevel
-
-        classified = classified.persist(StorageLevel.MEMORY_AND_DISK)
-    return {
-        name: fmt.apply(classified.filter(F.col("record_type") == name))
-        for name, fmt in formats.items()
-    }
-
-
-def stage_fantoir(
-    classified: DataFrame,
-    staging_path: str,
-    formats: dict[str, RecordFormat] | None = None,
-) -> dict[str, DataFrame]:
-    """Cluster-scale demux: one scan → one partitioned staging write →
-    per-type partition-pruned reads (D2 re-expressed)."""
-    formats = formats or FANTOIR_FORMATS
-    classified.write.mode("overwrite").partitionBy("record_type").parquet(staging_path)
-    spark = classified.sparkSession
-    staged = spark.read.parquet(staging_path)
-    return {
-        name: fmt.apply(staged.filter(F.col("record_type") == name))
-        for name, fmt in formats.items()
-    }

@@ -551,71 +551,6 @@ def test_ivf_centroids_column_order_invariant(spark, sf01_dir):
     assert len(fwd) == 8
 
 
-def test_dedup_clusters_star_equivalence(spark):
-    """large-star/small-star is interchangeable with min-label behind
-    the dedup_clusters contract: identical labels on chains, islands,
-    stars, and a random graph. (Both are O(log d) rounds — min-label
-    pointer-jumps — so star's 100 TB advantage is the monotonically
-    SHRINKING edge set it shuffles each round, not fewer rounds.)"""
-    from datagouv_tools_spark.operators.dedup import (
-        _cc_minlabel,
-        _cc_star,
-        dedup_clusters,
-    )
-
-    fixtures = {
-        "chain+islands": [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)],
-        "long_chain": [(i, i + 1) for i in range(64)],
-        "star_burst": [(0, i) for i in range(1, 30)] + [(100, 101)],
-        "random": [
-            (a, b)
-            for a, b in {
-                ((i * 7919) % 50, (i * 104729) % 50) for i in range(120)
-            }
-            if a != b
-        ],
-    }
-    for name, edges in fixtures.items():
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        ml, r_ml = _cc_minlabel(pairs, "id_a", "id_b", 60)
-        st, r_st = _cc_star(pairs, "id_a", "id_b", 60)
-        assert sorted(map(tuple, ml.collect())) == sorted(
-            map(tuple, st.collect())
-        ), f"label mismatch on {name}"
-        # both propagate in O(log d): star must not need materially
-        # more rounds than pointer-jumped min-label
-        assert r_st <= r_ml + 2, f"{name}: star {r_st} vs minlabel {r_ml}"
-    # public contract dispatch
-    pairs = spark.createDataFrame(fixtures["chain+islands"], "id_a long, id_b long")
-    got = {r["node"]: r["cluster_id"] for r in dedup_clusters(pairs, algorithm="star").collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        dedup_clusters(pairs, algorithm="nope")
-
-
-def test_cc_star_edge_set_shrinks(spark):
-    """The star rewrite's scale property: edge weight (Σ endpoints)
-    decreases monotonically round over round, so late-round shuffles
-    move less data — the property that matters on deep chains at
-    100 TB."""
-    from pyspark.sql import functions as F
-    from datagouv_tools_spark.operators.dedup import _cc_star
-
-    # instrument one round manually: run large+small star twice and
-    # compare canonical edge weight
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(128)], "id_a long, id_b long"
-    )
-    labels, rounds = _cc_star(pairs, "id_a", "id_b", 60)
-    # fixpoint is a forest of stars: every non-center node has exactly
-    # one incident edge, to its component min
-    got = {r["node"]: r["cluster_id"] for r in labels.collect()}
-    assert set(got.values()) == {0}
-    assert len(got) == 129
-
-
 def test_pq_encode_codebook_vectors_have_zero_error(spark, sf01_dir):
     """A sampled codebook vector's own sub-vectors ARE codebook entries,
     so it must encode to reconstruction error 0; everything else must
@@ -679,8 +614,8 @@ def test_pq_codebooks_kmeans_refinement_improves_recon_err(spark, sf01_dir):
 
 
 def test_dedup_clusters_auto_local_equivalence(spark):
-    """algorithm='auto' (the default): under max_local_edges the labels
-    come from driver union-find; over the bound it falls back to the
+    """dedup_clusters: under max_local_edges the labels come from
+    driver union-find; over the bound it falls back to the
     distributed minlabel path. Both must be byte-identical to
     _cc_minlabel on every fixture shape — the bounded local finish is
     an optimization, never a semantics change."""
@@ -699,7 +634,7 @@ def test_dedup_clusters_auto_local_equivalence(spark):
     for name, edges in fixtures.items():
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         ml, _ = _cc_minlabel(pairs, "id_a", "id_b", 60)
-        auto = dedup_clusters(pairs)  # default algorithm="auto"
+        auto = dedup_clusters(pairs)
         assert sorted(map(tuple, ml.collect())) == sorted(
             map(tuple, auto.collect())
         ), f"auto/minlabel mismatch on {name}"

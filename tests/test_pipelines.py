@@ -162,6 +162,41 @@ def test_import_fantoir_zipped(spark, fantoir_file, tmp_path):
     assert df.count() == 1
 
 
+def test_dispatch_by_filtered_and_staged_agree_on_fantoir(spark, fantoir_file, tmp_path):
+    """D1/D2: the ``filtered`` views of one scan and the ``staged``
+    partitionBy write + pruned reads give the same rows per record
+    type, each route holding exactly its own lines."""
+    from datagouv_tools_spark.operators.dispatch import dispatch_by
+    from datagouv_tools_spark.schema.record_format import FANTOIR_FORMATS
+
+    classified = read_fantoir(spark, fantoir_file)
+    routes = list(FANTOIR_FORMATS)
+    filtered = dispatch_by(classified, F.col("record_type"), routes)
+    staged = dispatch_by(
+        classified, F.col("record_type"), routes,
+        strategy="staged", staging_path=str(tmp_path / "stage"),
+    )
+    for route in routes:
+        rows = sorted(map(tuple, filtered[route].collect()))
+        assert rows == sorted(map(tuple, staged[route].collect())), route
+        assert [r[1] for r in rows] == [route]
+    assert filtered["voie"].columns == staged["voie"].columns == ["value", "record_type"]
+
+
+def test_import_fantoir_releases_its_cache(spark, fantoir_file, tmp_path):
+    """The classified scan the three table writes share is unpersisted
+    once they are written: an import leaves no cached copy of the file
+    behind for the rest of the session."""
+
+    def cached():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = cached()
+    out = import_fantoir(spark, fantoir_file, parquet_out=str(tmp_path / "lake"))
+    assert set(out) == {"direction", "commune", "voie"}
+    assert cached() == before
+
+
 def test_nature_voie_lookup(spark):
     df = spark.createDataFrame([("RUE",), ("ACH",), ("XXX",)], ["code"])
     got = {r["code"]: r["label"] for r in df.select("code", nature_voie("code").alias("label")).collect()}
@@ -573,6 +608,101 @@ def test_cli_dsn_live_postgres(spark, fantoir_file, pg_dsn, capsys):
         conn.commit()
     finally:
         conn.close()
+
+
+def test_cli_pg_database_loads_through_copy_live(
+    spark, fantoir_file, pg_dsn, monkeypatch, capsys
+):
+    """The reference's invocation ``-r pg --database db`` loads through
+    the distributed COPY on whatever transport is installed (here the
+    psql CLI), with host, port and user from PGHOST/PGPORT/PGUSER."""
+    from urllib.parse import urlsplit
+
+    from datagouv_tools_spark.__main__ import main
+    from datagouv_tools_spark.sinks import pg_copy
+
+    url = urlsplit(pg_dsn)
+    monkeypatch.setenv("PGHOST", url.hostname)
+    monkeypatch.setenv("PGPORT", str(url.port))
+    monkeypatch.setenv("PGUSER", url.username)
+    if url.password:
+        monkeypatch.setenv("PGPASSWORD", url.password)
+    copied = []
+    copy_dataframe = pg_copy.copy_dataframe
+
+    def spy(df, dsn, table, *args):
+        copied.append(table)
+        return copy_dataframe(df, dsn, table, *args)
+
+    monkeypatch.setattr(pg_copy, "copy_dataframe", spy)
+    database = url.path.lstrip("/")
+    rc = main(["-s", "fantoir", "-r", "pg", "--database", database, "-p", str(fantoir_file)])
+    assert rc == 0
+    assert "voie: loaded" in capsys.readouterr().out
+    assert sorted(copied) == ["commune", "direction", "voie"]
+    conn = pg_copy._connect(pg_dsn)
+    try:
+        cur = conn.cursor()
+        cur.execute('SELECT COUNT(*) FROM "voie"')
+        assert [int(r[0]) for r in cur.fetchall()] == [1]
+        for tbl in ("direction", "commune", "voie"):
+            cur.execute(f'DROP TABLE "{tbl}"')
+        cur.close()
+        conn.commit()
+    finally:
+        conn.close()
+
+
+def test_dsn_without_bulk_copy_keeps_existing_table_live(spark, deces_file, pg_dsn):
+    """``bulk_copy=False`` loads by DB-API ``executemany``, which the
+    psql CLI transport cannot run. The import must refuse before its
+    DROP TABLE: the table already there keeps its rows."""
+    from datagouv_tools_spark.sinks.pg_copy import PsqlCliConnection, _connect
+
+    conn = _connect(pg_dsn)
+    if not isinstance(conn, PsqlCliConnection):
+        conn.close()
+        pytest.skip("a DB-API driver is installed: bulk_copy=False can load")
+    cur = conn.cursor()
+    try:
+        cur.execute('DROP TABLE IF EXISTS "deces"')
+        cur.execute('CREATE TABLE "deces" (nom text)')
+        cur.execute("""INSERT INTO "deces" VALUES ('KEEP')""")
+        conn.commit()
+        with pytest.raises(ValueError, match="psql CLI transport"):
+            import_deces(spark, deces_file, rdbms="pg", dsn=pg_dsn, bulk_copy=False)
+        cur.execute('SELECT nom FROM "deces"')
+        assert [r[0] for r in cur.fetchall()] == ["KEEP"]
+    finally:
+        cur.execute('DROP TABLE IF EXISTS "deces"')
+        conn.commit()
+        conn.close()
+
+
+def test_pipelines_load_only_through_write_sql_table():
+    """The SQL sink step has one owner, ``sinks/sink.write_sql_table``:
+    no import pipeline and not the CLI builds a ``SqlSink`` or an
+    executor, or opens a PostgreSQL connection of its own."""
+    import ast
+    import pathlib
+
+    import datagouv_tools_spark
+
+    pkg = pathlib.Path(datagouv_tools_spark.__file__).parent
+    owned = {"SqlSink", "DbApiExecutor", "DryRunExecutor"}
+    found = []
+    for path in [*sorted((pkg / "pipelines").glob("*.py")), pkg / "__main__.py"]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", "")
+                if name in owned:
+                    found.append(f"{path.name}: calls {name}")
+            elif isinstance(node, ast.ImportFrom) and (node.module or "").endswith("pg_copy"):
+                found += [f"{path.name}: imports _connect" for a in node.names if a.name == "_connect"]
+            elif isinstance(node, ast.Attribute) and node.attr == "_connect":
+                found.append(f"{path.name}: uses ._connect")
+    assert found == []
 
 
 class TestCurateCorpus:

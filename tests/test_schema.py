@@ -769,16 +769,66 @@ def test_psql_cli_fetch_prefixes_and_loud_fetchall(pg_dsn):
         conn.close()
 
 
-def test_resolve_pg_load_rejects_dsn_with_non_pg_rdbms():
+def test_write_sql_table_rejects_dsn_with_non_pg_rdbms(spark):
     """--dsn with -r sqlite/mariadb used to silently fall back to a
     dry-run sink (SQL printed, exit 0, nothing loaded); it must fail
     loudly instead."""
     import pytest
 
-    from datagouv_tools_spark.schema.ddl import SqliteDialect
-    from datagouv_tools_spark.sinks.sink import resolve_pg_load
+    from datagouv_tools_spark.schema.ddl import EmptyIndexProvider
+    from datagouv_tools_spark.sinks.sink import write_sql_table
 
     with pytest.raises(ValueError, match="only supported for rdbms 'pg'"):
-        resolve_pg_load(
-            None, "postgresql://u@h/db", True, "sqlite", SqliteDialect()
+        write_sql_table(
+            spark.range(1), "t", "sqlite", EmptyIndexProvider(),
+            dsn="postgresql://u@h/db",
         )
+
+
+def test_write_sql_table_closes_only_the_connection_it_opened(spark, monkeypatch):
+    """A connection ``write_sql_table`` opens from a ``dsn`` is closed
+    when it returns, also when the load fails or cannot run; a
+    connection the caller passed in is left open for the caller."""
+    from unittest import mock
+
+    import pytest
+
+    from datagouv_tools_spark.schema.ddl import EmptyIndexProvider
+    from datagouv_tools_spark.sinks import pg_copy
+    from datagouv_tools_spark.sinks.sink import write_sql_table
+
+    df = spark.createDataFrame([(1, "a")], "id int, s string")
+    dsn = "postgresql://u@h/db"
+
+    def load(connection=None, dsn=None):
+        return write_sql_table(
+            df, "t", "pg", EmptyIndexProvider(), connection, dsn, bulk_copy=False
+        )
+
+    opened = mock.MagicMock()
+    monkeypatch.setattr(pg_copy, "_connect", lambda _dsn: opened)
+    assert load(dsn=dsn) is None
+    opened.cursor.return_value.executemany.assert_called_once()
+    opened.close.assert_called_once()
+
+    passed = mock.MagicMock()
+    assert load(connection=passed) is None
+    passed.cursor.return_value.executemany.assert_called_once()
+    passed.close.assert_not_called()
+
+    failing = mock.MagicMock()
+    failing.cursor.return_value.executemany.side_effect = RuntimeError("boom")
+    monkeypatch.setattr(pg_copy, "_connect", lambda _dsn: failing)
+    with pytest.raises(RuntimeError, match="boom"):
+        load(dsn=dsn)
+    failing.close.assert_called_once()
+
+    # the psql CLI transport cannot run executemany: refused before any
+    # statement is sent, and the connection is still closed
+    psql = mock.create_autospec(pg_copy.PsqlCliConnection, instance=True)
+    monkeypatch.setattr(pg_copy, "_connect", lambda _dsn: psql)
+    with pytest.raises(ValueError, match="psql CLI transport"):
+        load(dsn=dsn)
+    psql.cursor.assert_not_called()
+    psql.commit.assert_not_called()
+    psql.close.assert_called_once()
