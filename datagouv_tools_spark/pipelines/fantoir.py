@@ -6,7 +6,7 @@ skipped at load, like the reference's temp-file path,
 import_fantoir.py:112-113) → per-table sink writes.
 
 ``import_fantoir`` persists the classified scan so the three table
-writes share one file read, and releases it once they are written.
+writes share one file read, and releases it (and its unzip dir) after.
 The reference's 150 LoC of threads/queues/CSVStream is replaced by
 Spark's partitioned parallel execution; the temp-file two-pass variant
 maps to ``dispatch_by``'s ``staged`` strategy (one scan → partitionBy
@@ -15,6 +15,7 @@ staging → pruned reads), which is the shape that holds at 100 TB.
 
 from __future__ import annotations
 
+import contextlib
 import tempfile
 import zipfile
 from pathlib import Path
@@ -58,7 +59,9 @@ def fantoir_tables(
     staging_dir: str | None = None,
 ) -> dict[str, DataFrame]:
     """Classified scan → {record_type: DataFrame} (all-string columns,
-    like the reference's all-TEXT tables, import_fantoir.py:160-163)."""
+    like the reference's all-TEXT tables, import_fantoir.py:160-163).
+    The frames read the unzipped file lazily, so an unzip temp dir made
+    here (no ``staging_dir``) is kept."""
     return _record_tables(read_fantoir(spark, _maybe_unzip(Path(fantoir_path), staging_dir)))
 
 
@@ -76,19 +79,21 @@ def import_fantoir(
     (connection=None) or parquet paths are returned per table. ``dsn``
     + ``bulk_copy`` enable the live-PostgreSQL COPY path (see
     sinks/sink.write_sql_table)."""
-    classified = read_fantoir(spark, _maybe_unzip(Path(fantoir_path), staging_dir))
-    classified = classified.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        tables = _record_tables(classified)
-        results: dict[str, list[str] | str] = {}
-        for name in LOADED_RECORD_TYPES:
-            if parquet_out:
-                results[name] = ParquetSink(parquet_out).write(tables[name], name)
-            else:
-                statements = write_sql_table(
-                    tables[name], name, rdbms, EmptyIndexProvider(), connection, dsn, bulk_copy
-                )
-                results[name] = "loaded" if statements is None else statements
-        return results
-    finally:
-        classified.unpersist()
+    temp = None if staging_dir else tempfile.TemporaryDirectory(prefix="fantoir_staging_")
+    with temp or contextlib.nullcontext(staging_dir) as staging:
+        classified = read_fantoir(spark, _maybe_unzip(Path(fantoir_path), staging))
+        classified = classified.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            tables = _record_tables(classified)
+            results: dict[str, list[str] | str] = {}
+            for name in LOADED_RECORD_TYPES:
+                if parquet_out:
+                    results[name] = ParquetSink(parquet_out).write(tables[name], name)
+                else:
+                    statements = write_sql_table(
+                        tables[name], name, rdbms, EmptyIndexProvider(), connection, dsn, bulk_copy
+                    )
+                    results[name] = "loaded" if statements is None else statements
+            return results
+        finally:
+            classified.unpersist()

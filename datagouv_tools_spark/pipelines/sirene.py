@@ -12,6 +12,7 @@ and how the golden tests assert the DDL.
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import tempfile
 from pathlib import Path
@@ -78,20 +79,22 @@ def import_sirene(
     (import_sirene.py:137-141; see sinks/sink.write_sql_table)."""
     sirene_path = Path(sirene_path)
     assert sirene_path.exists(), f"no such path: {sirene_path}"
-    staging = staging_dir or tempfile.mkdtemp(prefix="sirene_staging_")
     table_name_of = process_names or (lambda s: s)
     results: dict[str, list[str] | str] = {}
-    for source in discover_sirene_sources(sirene_path):
-        if source.schema_path is None:
-            logger.warning("missing dessin for %s: skipped", source.table_name)  # F4
-            continue
-        df = sirene_table(spark, source, staging, PatchedSireneTypeConverter(), process_names)
-        table = table_name_of(source.table_name)
-        if parquet_out:
-            results[table] = ParquetSink(parquet_out, fmt=out_format).write(df, table)
-        else:
-            statements = write_sql_table(
-                df, table, rdbms, SireneIndexProvider(), connection, dsn, bulk_copy
-            )
-            results[table] = "loaded" if statements is None else statements
+    # an unzip dir made here is removed after the writes; a caller's is kept
+    temp = None if staging_dir else tempfile.TemporaryDirectory(prefix="sirene_staging_")
+    with temp or contextlib.nullcontext(staging_dir) as staging:
+        for source in discover_sirene_sources(sirene_path):
+            if source.schema_path is None:
+                logger.warning("missing dessin for %s: skipped", source.table_name)  # F4
+                continue
+            df = sirene_table(spark, source, staging, PatchedSireneTypeConverter(), process_names)
+            table = table_name_of(source.table_name)
+            if parquet_out:
+                results[table] = ParquetSink(parquet_out, fmt=out_format).write(df, table)
+            else:
+                statements = write_sql_table(
+                    df, table, rdbms, SireneIndexProvider(), connection, dsn, bulk_copy
+                )
+                results[table] = "loaded" if statements is None else statements
     return results

@@ -4,7 +4,7 @@ comments, per-dialect (SURVEY §2.2 K1-K9, §2.5 C9/C10, §2.7 U2/U6).
 The reference's strongest design idea — golden-tested SQL text
 generation decoupled from execution — kept here. Spark carries the
 schema as a StructType whose metadata (comment/length/sql_type, set by
-schema/dessin.py) feeds the DDL renderer used by the JDBC sink.
+schema/dessin.py) feeds the DDL renderer used by the SQL sink.
 """
 
 from __future__ import annotations
@@ -61,7 +61,7 @@ def shorten_identifier(parts: Iterable[str], max_len: int = MAX_IDENTIFIER_LENGT
 
 @dataclass(frozen=True)
 class SqlIndex:
-    """Secondary-index metadata (Spark has none; the JDBC sink emits
+    """Secondary-index metadata (Spark has none; the SQL sink emits
     these post-load, K8)."""
 
     table_name: str
@@ -145,12 +145,14 @@ def _spark_type_to_sql(field: T.StructField) -> str:
 
 class SqlDialect:
     """SQL text provider for one RDBMS (U6 provider half; the executor
-    half lives in sinks/jdbc.py)."""
+    half lives in sinks/sink.py)."""
 
     name = "generic"
     #: DB-API paramstyle placeholder for row inserts (K6):
     #: qmark (sqlite3) by default, format ("%s") for pg/mariadb drivers.
     placeholder = "?"
+    #: transactional DDL: load ``<table>__staging``, then ``swap_in``
+    staged_load = False
 
     def quote(self, identifier: str) -> str:
         return '"' + identifier.replace('"', '""') + '"'
@@ -203,6 +205,17 @@ class SqlDialect:
 class PostgresDialect(SqlDialect):
     name = "postgresql"
     placeholder = "%s"
+    staged_load = True
+
+    def swap_in(self, staging: str, table: str, renames: Iterable[tuple[SqlIndex, SqlIndex]]):
+        """Statements replacing ``table`` by ``staging`` (SURVEY §7.4):
+        DROP it, then RENAME ``staging`` and each (staged, final) index."""
+        q = self.quote
+        return [
+            self.drop_table(table),
+            f"ALTER TABLE {q(staging)} RENAME TO {q(table)}",
+            *(f"ALTER INDEX {q(s.name)} RENAME TO {q(f.name)}" for s, f in renames),
+        ]
 
     def truncate(self, table: str) -> str:
         return f"TRUNCATE {self.quote(table)}"

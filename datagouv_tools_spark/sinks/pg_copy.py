@@ -15,12 +15,12 @@ DB-API cursor streams COPY via ``execute(sql, stream=file_like)``,
 else the ``psql`` CLI (``PsqlCliConnection``): the identical CSV byte
 stream is piped to ``psql -c "COPY ... FROM STDIN"``'s stdin, one
 subprocess per partition stream — for environments that ship the
-PostgreSQL client binary but no Python driver (this container). The
-CSV serialization, COPY statement text, and per-driver call sequences
-are additionally unit-tested against mocked connections (the
-reference's tests/sql/test_postgres.py pattern), and the whole staged
-path runs live in ``tests/test_schema.py::test_staged_copy_live_postgres``
-whenever PGHOST points at a real server.
+PostgreSQL client binary but no Python driver. The CSV serialization,
+COPY statement text, and per-driver call sequences are additionally
+unit-tested against mocked connections (the reference's
+tests/sql/test_postgres.py pattern), and the whole load runs live in
+``tests/test_schema.py::test_write_sql_table_copy_live_postgres``
+against a real server (PGHOST, or one the tests start).
 
 Read leg: ``copy_out`` is the mirror of the write dispatch. It runs
 ``COPY (<query>) TO STDOUT (FORMAT csv)`` on an open connection, under
@@ -32,10 +32,13 @@ the read side of the CSV dialect lives next to its write side
 (``rows_to_csv_chunks``). ``sources/pg_read.py`` pulls each slice of a
 distributed read through the two.
 
-Transactionality at scale: per-partition COPY loses the single-commit
-semantics of the reference. ``staged_copy`` therefore loads into a
-staging table and atomically swaps it in (BEGIN; ALTER TABLE RENAME;
-COMMIT) — idempotent re-runs, no partial visibility (SURVEY §7.4).
+Transactionality at scale: per-partition COPY commits once per
+partition, which loses the single commit point of the reference. So
+``sinks/sink.write_sql_table`` never COPYs into the live table: its
+``SqlSink`` loads ``<table>__staging``, indexes and analyzes it, and
+swaps it in at its last commit (DROP the table, RENAME the staging
+table and its indexes) — idempotent re-runs, no partial visibility,
+and a failed partition leaves the old table as it was (SURVEY §7.4).
 """
 
 from __future__ import annotations
@@ -49,8 +52,7 @@ from pyspark.sql import DataFrame, Row
 from datagouv_tools_spark.schema.ddl import PostgresDialect
 
 __all__ = [
-    "rows_to_csv_chunks", "copy_partition", "copy_dataframe", "staged_copy", "copy_out",
-    "csv_batches",
+    "rows_to_csv_chunks", "copy_partition", "copy_dataframe", "copy_out", "csv_batches",
 ]
 
 _CHUNK_BYTES = 1 << 20
@@ -96,11 +98,13 @@ def _parse_dsn(dsn: str) -> dict:
     from urllib.parse import unquote, urlparse
 
     u = urlparse(dsn)
+    host = u.netloc.rpartition("@")[2]  # as written: ``hostname`` lowercases
+    host = host[1 : host.find("]")] if host.startswith("[") else host.partition(":")[0]
     kw = {
         "database": (u.path or "").lstrip("/") or None,
         "user": unquote(u.username) if u.username else None,
         "password": unquote(u.password) if u.password else None,
-        "host": u.hostname,
+        "host": unquote(host) or None,
         "port": u.port,
     }
     return {k: v for k, v in kw.items() if v is not None}
@@ -125,7 +129,7 @@ def _connect(dsn: str):
         return PsqlCliConnection(dsn)
     raise ImportError(
         "PostgreSQL COPY fast path needs psycopg, pg8000, or the psql "
-        "CLI on the executors; install one or use the JDBC INSERT loader."
+        "CLI on the executors; install one."
     )
 
 
@@ -179,6 +183,8 @@ def _split_dsn_password(dsn: str) -> tuple[str, str | None]:
     ('host=h user=u', 'se kret')
     >>> _split_dsn_password("postgresql://u@h/db")
     ('postgresql://u@h/db', None)
+    >>> _split_dsn_password("postgresql://u:p@[::1]:5432/db")
+    ('postgresql://u@[::1]:5432/db', 'p')
     """
     import re
     from urllib.parse import unquote, urlsplit, urlunsplit
@@ -187,11 +193,10 @@ def _split_dsn_password(dsn: str) -> tuple[str, str | None]:
         parts = urlsplit(dsn)
         if parts.password is None:
             return dsn, None
-        host = parts.hostname or ""
-        netloc = (parts.username or "") + "@" if parts.username else ""
-        netloc += host
-        if parts.port is not None:
-            netloc += f":{parts.port}"
+        # host:port kept as written (IPv6 brackets, percent-encoding)
+        netloc = parts.netloc.rpartition("@")[2]
+        if parts.username:
+            netloc = f"{parts.username}@{netloc}"
         return (
             urlunsplit((parts.scheme, netloc, parts.path, parts.query, parts.fragment)),
             unquote(parts.password),
@@ -233,8 +238,8 @@ class PsqlCliCursor:
             self._rows = _parse_copy_text(out)
         else:
             # queue DDL/DML; conn.commit() flushes the whole batch in
-            # ONE transaction (psql --single-transaction), preserving
-            # staged_copy's atomic-swap semantics
+            # ONE transaction (psql --single-transaction), so the swap
+            # that ends SqlSink's staged load is atomic
             self._conn._pending.append(sql)
             self._rows = None
 
@@ -349,6 +354,9 @@ class PsqlCliConnection:
 
     def commit(self) -> None:
         self._flush()
+
+    def rollback(self) -> None:
+        self._pending = []
 
     def close(self) -> None:
         self._flush()
@@ -504,45 +512,3 @@ def copy_dataframe(df: DataFrame, dsn: str, table: str, num_partitions: int | No
         copy_partition(dsn, copy_sql, partition)
 
     df.foreachPartition(run)
-
-
-def staged_copy(
-    df: DataFrame,
-    dsn: str,
-    table: str,
-    num_partitions: int | None = None,
-    connect=None,
-    copy_fn=None,
-) -> None:
-    """Transactional distributed COPY (SURVEY §7.4): per-partition COPY
-    commits independently, so a mid-load failure would leave ``table``
-    partially visible. Load into ``<table>__staging`` instead, then swap
-    it in with one DDL transaction (DROP + RENAME) — re-runs are
-    idempotent and readers only ever see the old or the new table.
-
-    ``connect``/``copy_fn`` are injectable for tests (mocked driver)."""
-    dialect = PostgresDialect()
-    staging = f"{table}__staging"
-    conn = (connect or _connect)(dsn)
-    try:
-        cur = conn.cursor()
-        try:
-            cur.execute(dialect.drop_table(staging))
-            cur.execute(dialect.create_table(staging, df.schema))
-        finally:
-            cur.close()
-        conn.commit()
-
-        (copy_fn or copy_dataframe)(df, dsn, staging, num_partitions)
-
-        cur = conn.cursor()
-        try:
-            cur.execute(dialect.drop_table(table))
-            cur.execute(
-                f"ALTER TABLE {dialect.quote(staging)} RENAME TO {dialect.quote(table)}"
-            )
-        finally:
-            cur.close()
-        conn.commit()
-    finally:
-        conn.close()

@@ -9,24 +9,21 @@ Design (mirrors the reference's provider/executor split, U6):
   real DB-API connection when one is available.
 - ``SqlSink`` sequences the load the way the reference does
   (K1→K2→K3→load→K9→K8→K10): drop, create, truncate, bulk load, analyze,
-  index-after-load, commit.
+  index-after-load, commit. On PostgreSQL it loads ``<table>__staging``
+  and swaps it in at the last commit: readers see the old or the new
+  table, never an empty or partial one.
 - ``write_sql_table`` is the one entry point the import pipelines and
   the CLI load through: it picks the executor (dry run or a live
   connection, opened from a PostgreSQL ``dsn`` over whichever transport
   ``pg_copy._connect`` finds — psycopg, pg8000 or the ``psql`` CLI)
-  and the loader (COPY or batched INSERTs), and owns the lifetime of
-  any connection it opens.
-
-The bulk-load path on a cluster: ``df.write.jdbc`` does batched INSERT
-from every partition in parallel (numPartitions connections — the
-reference's 4 consumer threads generalized). The PostgreSQL COPY fast
-path (sinks/pg_copy.py) streams CSV per partition through COPY FROM
-STDIN, the 10× path the reference uses.
+  and the loader (the distributed COPY of sinks/pg_copy.py, or batched
+  INSERTs), and owns the lifetime of any connection it opens.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import contextlib
+from dataclasses import dataclass, field, replace
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -49,7 +46,6 @@ __all__ = [
     "ParquetSink",
     "BucketedTableSink",
     "dbapi_insert_loader",
-    "jdbc_loader",
     "write_sql_table",
 ]
 
@@ -62,6 +58,9 @@ class StatementExecutor:
 
     def commit(self) -> None:
         raise NotImplementedError
+
+    def rollback(self) -> None:
+        """Abort the open transaction (nothing to abort by default)."""
 
 
 @dataclass
@@ -95,6 +94,9 @@ class DbApiExecutor(StatementExecutor):
     def commit(self) -> None:
         self.connection.commit()
 
+    def rollback(self) -> None:
+        self.connection.rollback()
+
 
 @dataclass
 class SqlSink:
@@ -103,12 +105,16 @@ class SqlSink:
     ``write(df, table)``:
       1. DROP TABLE IF EXISTS / CREATE TABLE (aligned, commented DDL)
       2. TRUNCATE (dialects that separate create/empty)
-      3. data load — ``loader`` callback (JDBC batched INSERT, COPY
-         fast path, or dry-run no-op)
+      3. data load — ``loader`` callback (COPY fast path, batched
+         INSERTs, or dry-run no-op)
       4. ANALYZE (dialects that collect stats)
       5. CREATE INDEX (after load — bulk-load optimization kept)
       6. COMMIT
-    """
+
+    With a ``staged_load`` dialect (PostgreSQL) steps 1-5 target
+    ``<table>__staging`` and step 6 first swaps it in (``swap_in``), so
+    the old table is locked only for the swap. A failed load drops the
+    staging table and leaves ``table`` as it was."""
 
     dialect: SqlDialect
     executor: StatementExecutor
@@ -117,27 +123,41 @@ class SqlSink:
 
     def write(self, df: DataFrame, table: str, schema: T.StructType | None = None) -> None:
         schema = schema or df.schema
-        self.executor.execute(self.dialect.drop_table(table))
-        self.executor.execute(self.dialect.create_table(table, schema))
-        truncate = self.dialect.truncate(table)
-        if truncate:
-            self.executor.execute(truncate)
-        self.executor.commit()
-        if self.loader is not None:
-            self.loader(df, table)
-        else:
-            copy_stmt = self.dialect.copy_from_csv(table)
-            if copy_stmt:
-                # dry-run: record the bulk-load statement that would run
-                self.executor.execute(copy_stmt)
-        analyze = self.dialect.analyze(table)
-        if analyze:
-            self.executor.execute(analyze)
-        self.executor.commit()
-        for index in self.index_provider.get_indices(table, schema):
-            self.executor.execute(self.dialect.drop_index(index))
-            self.executor.execute(self.dialect.create_index(index))
-        self.executor.commit()
+        dialect, executor = self.dialect, self.executor
+        target = f"{table}__staging" if dialect.staged_load else table
+        # indices come from the final name (SireneIndexProvider keys its
+        # extras by it) and are built on the load target
+        indices = self.index_provider.get_indices(table, schema)
+        built = [replace(index, table_name=target) for index in indices]
+
+        def run(*statements: str | None) -> None:
+            for statement in filter(None, statements):  # None: no such step here
+                executor.execute(statement)
+
+        try:
+            run(dialect.drop_table(target), dialect.create_table(target, schema))
+            run(dialect.truncate(target))
+            executor.commit()
+            if self.loader is not None:
+                self.loader(df, target)
+            else:  # dry run: record the bulk-load statement that would run
+                run(dialect.copy_from_csv(target))
+            run(dialect.analyze(target))
+            executor.commit()
+            for index in built:
+                run(dialect.drop_index(index), dialect.create_index(index))
+            if target != table:
+                run(*dialect.swap_in(target, table, zip(built, indices)))
+            executor.commit()
+        except Exception:
+            if target != table:
+                # best effort: the load's own error is the one raised, and
+                # the next load drops a leftover staging table first
+                with contextlib.suppress(Exception):
+                    executor.rollback()
+                    run(dialect.drop_table(target))
+                    executor.commit()
+            raise
 
 
 def dbapi_insert_loader(connection, dialect: SqlDialect, batch_size: int = 10_000):
@@ -148,10 +168,9 @@ def dbapi_insert_loader(connection, dialect: SqlDialect, batch_size: int = 10_00
 
     Scale note: rows stream through the driver via ``toLocalIterator``
     one partition at a time (never a full collect), but a single DB
-    connection is still a funnel — at cluster scale use ``jdbc_loader``
-    (one connection per partition) or the COPY fast path; this loader
-    exists for serverless DBs (sqlite) and modest reference-parity
-    loads."""
+    connection is still a funnel — at cluster scale use the COPY fast
+    path; this loader exists for serverless DBs (sqlite) and modest
+    reference-parity loads."""
 
     import datetime
     import decimal
@@ -183,18 +202,6 @@ def dbapi_insert_loader(connection, dialect: SqlDialect, batch_size: int = 10_00
     return load
 
 
-def jdbc_loader(url: str, properties: dict[str, str], num_partitions: int | None = None):
-    """Loader writing via Spark's JDBC batched-INSERT writer (K6 at
-    cluster parallelism: one connection per partition)."""
-
-    def load(df: DataFrame, table: str) -> None:
-        if num_partitions:
-            df = df.repartition(num_partitions)
-        df.write.mode("append").options(**properties).jdbc(url=url, table=table, mode="append")
-
-    return load
-
-
 def write_sql_table(
     df: DataFrame,
     table: str,
@@ -218,7 +225,9 @@ def write_sql_table(
       closes it.
 
     The loader is chosen before any DDL runs, so a load that cannot run
-    raises with the existing table untouched. Returns None after a live
+    raises with the existing table untouched. On PostgreSQL every load
+    fills a staging table and swaps it in (``SqlSink``), so a load that
+    fails mid-way also leaves it untouched. Returns None after a live
     load."""
     dialect = get_dialect(rdbms)
     if dsn is not None and not isinstance(dialect, PostgresDialect):
@@ -338,7 +347,8 @@ def compact_parquet(
     ``ceil(total / target_file_bytes)`` output files, and rewrites with
     a round-robin repartition (even sizes, no skew from partition
     residue). Writes to ``out_path`` — swapping directories atomically
-    is the caller's move (same staging pattern as ``staged_copy``).
+    is the caller's move (the staging pattern ``SqlSink`` uses for
+    PostgreSQL tables).
 
     Returns (n_files_before, n_files_after).
     """

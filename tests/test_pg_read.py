@@ -70,6 +70,14 @@ _HOSTILE_TEXT = [
 ]
 
 
+def _load(df, dsn: str, table: str) -> None:
+    """Load ``df`` into ``table`` through the import pipelines' sink."""
+    from datagouv_tools_spark.schema.ddl import EmptyIndexProvider
+    from datagouv_tools_spark.sinks.sink import write_sql_table
+
+    write_sql_table(df, table, "pg", EmptyIndexProvider(), dsn=dsn)
+
+
 def _drop_table(dsn: str, table: str) -> None:
     from datagouv_tools_spark.sinks.pg_copy import _connect
 
@@ -265,11 +273,9 @@ def test_read_pg_parallel_runs_one_task_per_slice_in_one_job(spark, pg_dsn):
     """A read-back of N slices is one Spark job of one stage and N
     tasks: the Range index adds no sample job, shuffle or Python
     identity task of its own."""
-    from datagouv_tools_spark.sinks.pg_copy import staged_copy
-
     table = "dg_spark_read_tasks"
     df = spark.createDataFrame([(i, f"v{i}") for i in range(40)], "id int, s string")
-    staged_copy(df, pg_dsn, table, num_partitions=1)
+    _load(df.repartition(1), pg_dsn, table)
     sc = spark.sparkContext
     try:
         for n, kwargs in ((1, {}), (4, {"partition_column": "id", "num_partitions": 4})):
@@ -294,7 +300,7 @@ def test_read_pg_parallel_roundtrip_live(spark, pg_dsn):
     """COPY-write a typed DataFrame, read it back with 3 parallel
     slices, compare row-for-row (ints, decimals, dates, timestamps,
     bools, NULLs, empty-vs-NULL strings all survive the loop)."""
-    from datagouv_tools_spark.sinks.pg_copy import _connect, staged_copy
+    from datagouv_tools_spark.sinks.pg_copy import _connect
 
     df = spark.createDataFrame(
         [
@@ -313,7 +319,7 @@ def test_read_pg_parallel_roundtrip_live(spark, pg_dsn):
         "flag",
         "x",
     )
-    staged_copy(df, pg_dsn, "dg_spark_read_rt", num_partitions=2)
+    _load(df.repartition(2), pg_dsn, "dg_spark_read_rt")
     try:
         got = read_pg_parallel(
             spark, pg_dsn, "dg_spark_read_rt", partition_column="id", num_partitions=3
@@ -348,13 +354,13 @@ def test_read_pg_parallel_pushdown_and_bounds_never_drop_rows(spark, pg_dsn):
     """Projection + predicate reach the server (only requested data
     returns), and deliberately-wrong bounds still return every
     matching row — the Spark-JDBC slice contract."""
-    from datagouv_tools_spark.sinks.pg_copy import _connect, staged_copy
+    from datagouv_tools_spark.sinks.pg_copy import _connect
 
     df = spark.createDataFrame(
         [(i, f"u{i % 3}", i * 10) for i in range(1, 51)],
         "id int, grp string, val int",
     )
-    staged_copy(df, pg_dsn, "dg_spark_read_pd", num_partitions=2)
+    _load(df.repartition(2), pg_dsn, "dg_spark_read_pd")
     try:
         got = read_pg_parallel(
             spark,
@@ -382,11 +388,11 @@ def test_read_pg_parallel_pushdown_and_bounds_never_drop_rows(spark, pg_dsn):
 
 
 def test_read_pg_parallel_empty_table_and_no_partition_column(spark, pg_dsn):
-    from datagouv_tools_spark.sinks.pg_copy import _connect, staged_copy
+    from datagouv_tools_spark.sinks.pg_copy import _connect
 
     df = spark.createDataFrame([], "id int, s string")
-    # staged_copy of an empty frame still creates the table
-    staged_copy(df, pg_dsn, "dg_spark_read_empty", num_partitions=1)
+    # loading an empty frame still creates the table
+    _load(df.repartition(1), pg_dsn, "dg_spark_read_empty")
     try:
         got = read_pg_parallel(
             spark, pg_dsn, "dg_spark_read_empty", partition_column="id"
@@ -406,10 +412,10 @@ def test_read_pg_parallel_empty_table_and_no_partition_column(spark, pg_dsn):
 
 
 def test_read_pg_parallel_unknown_column_raises(spark, pg_dsn):
-    from datagouv_tools_spark.sinks.pg_copy import _connect, staged_copy
+    from datagouv_tools_spark.sinks.pg_copy import _connect
 
     df = spark.createDataFrame([(1, "a")], "id int, s string")
-    staged_copy(df, pg_dsn, "dg_spark_read_cols", num_partitions=1)
+    _load(df.repartition(1), pg_dsn, "dg_spark_read_cols")
     try:
         with pytest.raises(ValueError, match="nope"):
             read_pg_parallel(spark, pg_dsn, "dg_spark_read_cols", columns=["id", "nope"])
@@ -431,7 +437,7 @@ def test_north_star_loop_parquet_copy_readback(spark, sf_dir, pg_dsn):
     scan → DataFrame transform → distributed COPY into PostgreSQL →
     executor-parallel read-back → aggregate equality with the
     original. Timestamps go through NTZ on both legs."""
-    from datagouv_tools_spark.sinks.pg_copy import _connect, staged_copy
+    from datagouv_tools_spark.sinks.pg_copy import _connect
 
     orders = (
         spark.read.parquet(sf_dir + "/orders.parquet")
@@ -442,7 +448,7 @@ def test_north_star_loop_parquet_copy_readback(spark, sf_dir, pg_dsn):
             F.col("o_totalprice").cast(T.DecimalType(18, 2)).alias("o_totalprice"),
         )
     )
-    staged_copy(orders, pg_dsn, "dg_spark_orders_rt", num_partitions=4)
+    _load(orders.repartition(4), pg_dsn, "dg_spark_orders_rt")
     try:
         back = read_pg_parallel(
             spark,

@@ -66,17 +66,24 @@ def test_import_sirene_parquet(spark, sirene_dir, tmp_path):
 def test_import_sirene_dry_run_statements(spark, sirene_dir):
     out = import_sirene(spark, sirene_dir, rdbms="pg")
     stmts = out["stock_unite_legale"]
-    assert stmts[0] == 'DROP TABLE IF EXISTS "stock_unite_legale"'
-    assert stmts[1].startswith('CREATE TABLE "stock_unite_legale" (')
+    assert stmts[0] == 'DROP TABLE IF EXISTS "stock_unite_legale__staging"'
+    assert stmts[1].startswith('CREATE TABLE "stock_unite_legale__staging" (')
     assert "-- Numéro SIREN" in stmts[1]
-    assert 'TRUNCATE "stock_unite_legale"' in stmts
-    assert any(s.startswith('COPY "stock_unite_legale" FROM STDIN') for s in stmts)
-    assert 'ANALYZE "stock_unite_legale"' in stmts
+    assert 'TRUNCATE "stock_unite_legale__staging"' in stmts
+    assert any(s.startswith('COPY "stock_unite_legale__staging" FROM STDIN') for s in stmts)
+    assert 'ANALYZE "stock_unite_legale__staging"' in stmts
     # index created after load, then commit
     create_idx = next(i for i, s in enumerate(stmts) if s.startswith("CREATE INDEX"))
     copy_pos = next(i for i, s in enumerate(stmts) if s.startswith("COPY"))
     assert create_idx > copy_pos
-    assert 'CREATE INDEX "siren_stock_unite_legale_idx" ON "stock_unite_legale" USING hash ("siren")' in stmts
+    assert (
+        'CREATE INDEX "siren_stock_unite_legale__staging_idx" '
+        'ON "stock_unite_legale__staging" USING hash ("siren")'
+    ) in stmts
+    assert (
+        'ALTER INDEX "siren_stock_unite_legale__staging_idx" '
+        'RENAME TO "siren_stock_unite_legale_idx"'
+    ) in stmts
     assert stmts[-1] == "COMMIT"
 
 
@@ -149,7 +156,7 @@ def test_fantoir_tables(spark, fantoir_file):
 def test_import_fantoir_dry_run(spark, fantoir_file):
     out = import_fantoir(spark, fantoir_file)
     assert set(out) == {"direction", "commune", "voie"}  # header not loaded
-    assert out["voie"][0] == 'DROP TABLE IF EXISTS "voie"'
+    assert out["voie"][0] == 'DROP TABLE IF EXISTS "voie__staging"'
     assert any("CREATE TABLE" in s for s in out["commune"])
 
 
@@ -195,6 +202,29 @@ def test_import_fantoir_releases_its_cache(spark, fantoir_file, tmp_path):
     out = import_fantoir(spark, fantoir_file, parquet_out=str(tmp_path / "lake"))
     assert set(out) == {"direction", "commune", "voie"}
     assert cached() == before
+
+
+def test_zipped_imports_remove_their_unzip_dirs(spark, sirene_dir, fantoir_file, tmp_path, monkeypatch):
+    """An import given no ``staging_dir`` unzips into a temp dir of its
+    own and removes it once its tables are written (or its dry-run
+    statements rendered); a caller's ``staging_dir`` is kept."""
+    import tempfile
+
+    temp = tmp_path / "temp"
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp))
+    zpath = tmp_path / "fantoir.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.writestr("-", fantoir_file.read_text(encoding="latin-1"))
+
+    assert "stock_unite_legale" in import_sirene(spark, sirene_dir, rdbms="pg")
+    out = import_fantoir(spark, zpath, parquet_out=str(tmp_path / "lake"))
+    assert spark.read.parquet(out["voie"]).count() == 1
+    assert sorted(p.name for p in temp.glob("*_staging_*")) == []
+
+    kept = tmp_path / "kept"
+    import_fantoir(spark, zpath, staging_dir=str(kept))
+    assert (kept / "fantoir.txt").exists()
 
 
 def test_nature_voie_lookup(spark):
@@ -264,7 +294,8 @@ def test_import_deces_loaded_projection(spark, deces_file):
     # reference loads only nom + prenom1..8 (9 string columns)
     for col in ["nom"] + [f"prenom{i}" for i in range(1, 9)]:
         assert f'"{col}"' in create
-    assert 'CREATE INDEX "nom_deces_idx" ON "deces" USING hash ("nom")' in stmts
+    assert 'CREATE INDEX "nom_deces__staging_idx" ON "deces__staging" USING hash ("nom")' in stmts
+    assert 'ALTER INDEX "nom_deces__staging_idx" RENAME TO "nom_deces_idx"' in stmts
 
 
 # --- strict boolean (C2) ---------------------------------------------------
@@ -372,7 +403,7 @@ def test_cli_dry_run_prints_statements(spark, sirene_dir, capsys):
     out = capsys.readouterr().out
     assert rc == 0
     assert "-- stock_unite_legale" in out
-    assert 'CREATE TABLE "stock_unite_legale"' in out
+    assert 'CREATE TABLE "stock_unite_legale__staging"' in out
     assert "COPY" in out  # pg bulk path rendered
 
 
@@ -521,6 +552,8 @@ def test_import_sirene_live_postgres_bulk_copy(spark, sirene_dir, pg_dsn):
             "WHERE tablename = 'stock_unite_legale'"
         )
         indexes = {r[0] for r in cur.fetchall()}
+        cur.execute("SELECT indexname FROM pg_indexes UNION ALL SELECT tablename FROM pg_tables")
+        staged = [r[0] for r in cur.fetchall() if "__staging" in r[0]]
         cur.close()
         conn.commit()
     finally:
@@ -537,7 +570,8 @@ def test_import_sirene_live_postgres_bulk_copy(spark, sirene_dir, pg_dsn):
         ("123456789", "2001-05-04", "2020", Decimal(3)),
         ("987654321", None, "1999", None),  # '' date -> NULL, 'x' -> NULL
     ]
-    assert any("siren" in ix for ix in indexes), indexes
+    assert indexes == {"siren_stock_unite_legale_idx"}, indexes
+    assert staged == []
 
 
 def test_import_fantoir_live_postgres_bulk_copy(spark, fantoir_file, pg_dsn):
@@ -585,7 +619,7 @@ def test_import_deces_live_postgres_bulk_copy(spark, deces_file, pg_dsn):
     finally:
         conn.close()
     assert ("DUPONT", "JEAN") in rows
-    assert any("nom" in ix for ix in indexes), indexes
+    assert indexes == {"nom_deces_idx"}, indexes
 
 
 def test_cli_dsn_live_postgres(spark, fantoir_file, pg_dsn, capsys):
@@ -639,7 +673,7 @@ def test_cli_pg_database_loads_through_copy_live(
     rc = main(["-s", "fantoir", "-r", "pg", "--database", database, "-p", str(fantoir_file)])
     assert rc == 0
     assert "voie: loaded" in capsys.readouterr().out
-    assert sorted(copied) == ["commune", "direction", "voie"]
+    assert sorted(copied) == ["commune__staging", "direction__staging", "voie__staging"]
     conn = pg_copy._connect(pg_dsn)
     try:
         cur = conn.cursor()

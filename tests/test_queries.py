@@ -38,44 +38,42 @@ def test_query_runs(spark, sf_dir, name):
     assert df.count() >= 0
 
 
-def test_no_query_returns_nested_types(spark, sf_dir):
-    """The driver's pandas canonicalizer cannot hash array/map/struct
-    cells (``TypeError: unhashable type`` — the two CORRECTNESS_r03
-    reds): every declared query must emit scalar columns only. Flatten
-    arrays to q25/q50/q75-style scalars or ``array_join`` strings (see
-    customer_acctbal_quartiles / user_event_type_arrays)."""
+def test_no_query_returns_nested_or_decimal_types(spark, sf_dir):
+    """Two checks on each declared query's output schema, built once
+    per query for both (building all of them is the slow part):
+
+    - No nested types. The driver's pandas canonicalizer cannot hash
+      array/map/struct cells (``TypeError: unhashable type`` — the two
+      CORRECTNESS_r03 reds): every declared query must emit scalar
+      columns only. Flatten arrays to q25/q50/q75-style scalars or
+      ``array_join`` strings (see customer_acctbal_quartiles /
+      user_event_type_arrays).
+    - No decimals. The driver's value hasher mishandled a
+      DECIMAL(38,0) output in r05 (``events_distinct_sketch`` red while
+      Spark==DuckDB==Python were bit-identical locally): decimals are
+      fine as INTERNAL exact arithmetic but must never cross the
+      harness — surface them as BIGINT (split hi/lo if wider than
+      2^63), double (via dround), or string."""
     from pyspark.sql import types as T
 
     nested = (T.ArrayType, T.MapType, T.StructType)
-    offenders = []
+    nested_offenders, decimal_offenders = [], []
     for name, fn in QUERIES.items():
         schema = fn(spark, sf_dir).schema
         bad = [f.name for f in schema.fields if isinstance(f.dataType, nested)]
         if bad:
-            offenders.append((name, bad))
-    assert not offenders, offenders
-
-
-def test_no_query_returns_decimal_types(spark, sf_dir):
-    """The driver's value hasher mishandled a DECIMAL(38,0) output in
-    r05 (``events_distinct_sketch`` red while Spark==DuckDB==Python were
-    bit-identical locally): decimals are fine as INTERNAL exact
-    arithmetic but must never cross the harness — surface them as
-    BIGINT (split hi/lo if wider than 2^63), double (via dround), or
-    string."""
-    from pyspark.sql import types as T
-
-    offenders = []
-    for name, fn in QUERIES.items():
-        schema = fn(spark, sf_dir).schema
+            nested_offenders.append((name, bad))
         bad = [
             f.name
             for f in schema.fields
             if isinstance(f.dataType, T.DecimalType)
         ]
         if bad:
-            offenders.append((name, bad))
-    assert not offenders, offenders
+            decimal_offenders.append((name, bad))
+    assert not nested_offenders and not decimal_offenders, {
+        "nested": nested_offenders,
+        "decimal": decimal_offenders,
+    }
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE))

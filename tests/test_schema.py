@@ -390,48 +390,51 @@ def test_parse_dsn_pg8000_kwargs():
         "port": 5433,
     }
     assert _parse_dsn("postgresql:///justdb") == {"database": "justdb"}
+    # a socket directory is percent-encoded in the host, case kept
+    assert _parse_dsn("postgresql://u@%2Ftmp%2FPg/db") == {
+        "database": "db", "user": "u", "host": "/tmp/Pg",
+    }
+    assert _parse_dsn("postgresql://u:p@[::1]:5433/db")["host"] == "::1"
 
 
-def test_staged_copy_atomic_swap_sequence(spark):
-    """staged_copy must create+load the staging table first and swap it
-    in with DROP + RENAME inside the final transaction — never COPY
-    into the live table."""
-    from datagouv_tools_spark.sinks.pg_copy import staged_copy
+def test_write_sql_table_pg_dry_run_stages_and_swaps(spark):
+    """A PostgreSQL load fills ``<table>__staging`` — drop, create,
+    truncate, COPY, ANALYZE and the indexes all target it — and swaps
+    it in inside the last transaction: DROP the table, RENAME the
+    staging table, RENAME each index to its derived final name. The
+    indices come from the final table name, so the provider's per-table
+    btree extra is kept. The other dialects load in place."""
+    from datagouv_tools_spark.schema.ddl import SireneIndexProvider
+    from datagouv_tools_spark.sinks.sink import write_sql_table
 
-    calls = []
-
-    class Cursor:
-        def execute(self, sql, **kw):
-            calls.append(sql)
-
-        def close(self):
-            pass
-
-    class Conn:
-        def cursor(self):
-            return Cursor()
-
-        def commit(self):
-            calls.append("COMMIT")
-
-        def close(self):
-            calls.append("CLOSE")
-
-    df = spark.range(3).withColumnRenamed("id", "x")
-    staged_copy(
-        df,
-        "postgresql://u@h/db",
-        "events",
-        connect=lambda dsn: Conn(),
-        copy_fn=lambda d, dsn, table, n: calls.append(f"COPY->{table}"),
-    )
-    assert calls[0] == 'DROP TABLE IF EXISTS "events__staging"'
-    assert calls[1].startswith('CREATE TABLE "events__staging"')
-    assert calls[2] == "COMMIT"
-    assert calls[3] == "COPY->events__staging"
-    assert calls[4] == 'DROP TABLE IF EXISTS "events"'
-    assert calls[5] == 'ALTER TABLE "events__staging" RENAME TO "events"'
-    assert calls[6:] == ["COMMIT", "CLOSE"]
+    df = spark.createDataFrame([], "siret string, code_postal_etablissement string")
+    stmts = write_sql_table(df, "stock_etablissement", "pg", SireneIndexProvider())
+    assert stmts[1].startswith('CREATE TABLE "stock_etablissement__staging" (')
+    assert stmts[:1] + stmts[2:] == [
+        'DROP TABLE IF EXISTS "stock_etablissement__staging"',
+        'TRUNCATE "stock_etablissement__staging"',
+        "COMMIT",
+        'COPY "stock_etablissement__staging" FROM STDIN WITH '
+        "(FORMAT CSV, HEADER TRUE, ENCODING 'UTF_8')",
+        'ANALYZE "stock_etablissement__staging"',
+        "COMMIT",
+        'DROP INDEX IF EXISTS "siret_stock_etablissement__staging_idx"',
+        'CREATE INDEX "siret_stock_etablissement__staging_idx" '
+        'ON "stock_etablissement__staging" USING hash ("siret")',
+        'DROP INDEX IF EXISTS "code_postal_etablissement_stock_etablissement__staging_idx"',
+        'CREATE INDEX "code_postal_etablissement_stock_etablissement__staging_idx" '
+        'ON "stock_etablissement__staging" USING btree ("code_postal_etablissement")',
+        'DROP TABLE IF EXISTS "stock_etablissement"',
+        'ALTER TABLE "stock_etablissement__staging" RENAME TO "stock_etablissement"',
+        'ALTER INDEX "siret_stock_etablissement__staging_idx" '
+        'RENAME TO "siret_stock_etablissement_idx"',
+        'ALTER INDEX "code_postal_etablissement_stock_etablissement__staging_idx" '
+        'RENAME TO "code_postal_etablissement_stock_etablissement_idx"',
+        "COMMIT",
+    ]
+    for rdbms in ("sqlite", "mariadb"):
+        stmts = write_sql_table(df, "stock_etablissement", rdbms, SireneIndexProvider())
+        assert not any("__staging" in s or "RENAME" in s for s in stmts), rdbms
 
 
 def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):
@@ -538,14 +541,16 @@ def test_copy_csv_empty_string_vs_null():
     assert body == b'1,""\n2,\n'
 
 
-def test_staged_copy_live_postgres(spark, pg_dsn):
+def test_write_sql_table_copy_live_postgres(spark, pg_dsn):
     """Against a real server (PGHOST env, or the session-scoped
     throwaway server the ``pg_dsn`` fixture bootstraps from local
-    PostgreSQL binaries): staged_copy must move real bytes through
-    COPY FROM STDIN and the loaded table must match the DataFrame
-    exactly. Transport dispatch (psycopg/pg8000/psql CLI) is exercised
-    as deployed — in this container that is the psql CLI pipe."""
-    from datagouv_tools_spark.sinks.pg_copy import _connect, staged_copy
+    PostgreSQL binaries): the staged COPY load must move real bytes
+    through COPY FROM STDIN and the loaded table must match the
+    DataFrame exactly. Transport dispatch (psycopg/pg8000/psql CLI) is
+    exercised as deployed — without a Python driver, the psql CLI pipe."""
+    from datagouv_tools_spark.schema.ddl import EmptyIndexProvider
+    from datagouv_tools_spark.sinks.pg_copy import _connect
+    from datagouv_tools_spark.sinks.sink import write_sql_table
 
     dsn = pg_dsn
 
@@ -553,7 +558,7 @@ def test_staged_copy_live_postgres(spark, pg_dsn):
         [(1, "plain"), (2, "comma, quote\" and\nnewline"), (3, None), (4, "")],
         "id int, label string",
     )
-    staged_copy(df, dsn, "dg_spark_copy_smoke", num_partitions=2)
+    write_sql_table(df.repartition(2), "dg_spark_copy_smoke", "pg", EmptyIndexProvider(), dsn=dsn)
 
     conn = _connect(dsn)
     try:
@@ -567,6 +572,103 @@ def test_staged_copy_live_postgres(spark, pg_dsn):
     finally:
         conn.close()
     assert got == [(1, "plain"), (2, 'comma, quote" and\nnewline'), (3, None), (4, "")]
+
+
+def _pg_rows(dsn, sql):
+    from datagouv_tools_spark.sinks.pg_copy import _connect
+
+    conn = _connect(dsn)
+    try:
+        cur = conn.cursor()
+        cur.execute(sql)
+        rows = [tuple(r) for r in cur.fetchall()]
+        cur.close()
+        return rows
+    finally:
+        conn.close()
+
+
+def _pg_drop(dsn, table):
+    from datagouv_tools_spark.sinks.pg_copy import _connect
+
+    conn = _connect(dsn)
+    try:
+        cur = conn.cursor()
+        cur.execute(f'DROP TABLE IF EXISTS "{table}"')
+        cur.close()
+        conn.commit()
+    finally:
+        conn.close()
+
+
+def _pg_state(dsn, table):
+    """(sorted rows, index names, staging tables left) of ``table``."""
+    return (
+        sorted(_pg_rows(dsn, f'SELECT nom FROM "{table}"')),
+        sorted(_pg_rows(dsn, f"SELECT indexname FROM pg_indexes WHERE tablename = '{table}'")),
+        _pg_rows(dsn, "SELECT tablename FROM pg_tables WHERE tablename LIKE '%\\_\\_staging'"),
+    )
+
+
+def test_write_sql_table_failed_copy_keeps_old_table_live(spark, pg_dsn):
+    """One COPY partition fails mid-load (a UDF raises on one row): the
+    load raises, and the table loaded before keeps its rows and its
+    index, and no staging table is left behind."""
+    from pyspark.sql import functions as F
+
+    from datagouv_tools_spark.schema.ddl import DecesIndexProvider
+    from datagouv_tools_spark.sinks.sink import write_sql_table
+
+    table = "dg_spark_swap_fail"
+    old = spark.createDataFrame([("KEEP",), ("ME",)], "nom string")
+    write_sql_table(old, table, "pg", DecesIndexProvider(), dsn=pg_dsn)
+    before = _pg_state(pg_dsn, table)
+    assert before == ([("KEEP",), ("ME",)], [(f"nom_{table}_idx",)], [])
+
+    def fail_on_boom(v):
+        if v == "BOOM":
+            raise ValueError("bad row")
+        return v
+
+    new = spark.createDataFrame([(f"N{i}",) for i in range(20)] + [("BOOM",)], "nom string")
+    new = new.repartition(2).select(F.udf(fail_on_boom, "string")("nom").alias("nom"))
+    try:
+        with pytest.raises(Exception, match="bad row"):
+            write_sql_table(new, table, "pg", DecesIndexProvider(), dsn=pg_dsn)
+        assert _pg_state(pg_dsn, table) == before
+    finally:
+        _pg_drop(pg_dsn, table)
+
+
+def test_write_sql_table_readers_see_old_table_until_swap_live(spark, pg_dsn, monkeypatch):
+    """While the COPY runs, a second connection still reads the old
+    rows; once the load returns it reads the new ones."""
+    from datagouv_tools_spark.schema.ddl import DecesIndexProvider
+    from datagouv_tools_spark.sinks import pg_copy
+    from datagouv_tools_spark.sinks.sink import write_sql_table
+
+    table = "dg_spark_swap_seen"
+    count = f'SELECT COUNT(*) FROM "{table}"'
+    write_sql_table(
+        spark.createDataFrame([("OLD",)] * 3, "nom string"), table, "pg",
+        DecesIndexProvider(), dsn=pg_dsn,
+    )
+    seen = []
+    copy_dataframe = pg_copy.copy_dataframe
+
+    def spy(df, dsn, target, *args):
+        copy_dataframe(df, dsn, target, *args)
+        seen.append(int(_pg_rows(pg_dsn, count)[0][0]))
+
+    monkeypatch.setattr(pg_copy, "copy_dataframe", spy)
+    try:
+        new = spark.createDataFrame([("NEW",)] * 5, "nom string").repartition(2)
+        write_sql_table(new, table, "pg", DecesIndexProvider(), dsn=pg_dsn)
+        assert seen == [3]
+        assert int(_pg_rows(pg_dsn, count)[0][0]) == 5
+        assert _pg_state(pg_dsn, table)[1:] == ([(f"nom_{table}_idx",)], [])
+    finally:
+        _pg_drop(pg_dsn, table)
 
 
 # --- format-agnostic table IO (sources/formats.py) ------------------------
@@ -657,7 +759,9 @@ def test_copy_csv_adversarial_strings_roundtrip_live(spark, pg_dsn):
     backslashes, unicode, the empty-vs-NULL distinction) must survive
     Spark -> rows_to_csv_chunks -> COPY FROM STDIN -> SELECT back via
     the CLI transport byte-for-byte."""
-    from datagouv_tools_spark.sinks.pg_copy import _connect, staged_copy
+    from datagouv_tools_spark.schema.ddl import EmptyIndexProvider
+    from datagouv_tools_spark.sinks.pg_copy import _connect
+    from datagouv_tools_spark.sinks.sink import write_sql_table
 
     nasty = [
         (1, "plain"),
@@ -674,7 +778,9 @@ def test_copy_csv_adversarial_strings_roundtrip_live(spark, pg_dsn):
         (12, "\\"),
     ]
     df = spark.createDataFrame(nasty, "id int, label string")
-    staged_copy(df, pg_dsn, "dg_spark_copy_nasty", num_partitions=2)
+    write_sql_table(
+        df.repartition(2), "dg_spark_copy_nasty", "pg", EmptyIndexProvider(), dsn=pg_dsn
+    )
     conn = _connect(pg_dsn)
     try:
         cur = conn.cursor()
@@ -691,8 +797,8 @@ def test_copy_csv_adversarial_strings_roundtrip_live(spark, pg_dsn):
 def test_psql_cli_connection_batches_are_atomic(pg_dsn):
     """PsqlCliConnection queues DDL until commit() and replays it under
     --single-transaction: if any statement in the batch fails, NONE of
-    the batch's effects may persist (the staged_copy swap relies on
-    drop+rename being atomic)."""
+    the batch's effects may persist (the swap that ends a staged load
+    relies on drop+rename being atomic)."""
     import pytest
 
     from datagouv_tools_spark.sinks.pg_copy import PsqlCliConnection
@@ -729,6 +835,15 @@ def test_split_dsn_password_forms():
     assert _split_dsn_password("postgresql://u@h/db") == (
         "postgresql://u@h/db",
         None,
+    )
+    # the host is kept as written: IPv6 brackets, a socket directory
+    assert _split_dsn_password("postgresql://u:p@[::1]:5432/db") == (
+        "postgresql://u@[::1]:5432/db",
+        "p",
+    )
+    assert _split_dsn_password("postgresql://u:p@%2Ftmp/db") == (
+        "postgresql://u@%2Ftmp/db",
+        "p",
     )
     assert _split_dsn_password("host=h dbname=db password=sekret user=u") == (
         "host=h dbname=db user=u",
@@ -822,6 +937,11 @@ def test_write_sql_table_closes_only_the_connection_it_opened(spark, monkeypatch
     with pytest.raises(RuntimeError, match="boom"):
         load(dsn=dsn)
     failing.close.assert_called_once()
+    # the aborted transaction is rolled back before the staging table
+    # is dropped, so the DROP can run on a DB-API driver
+    failing.rollback.assert_called_once()
+    execute = failing.cursor.return_value.execute
+    assert execute.call_args == mock.call('DROP TABLE IF EXISTS "t__staging"')
 
     # the psql CLI transport cannot run executemany: refused before any
     # statement is sent, and the connection is still closed
