@@ -38,42 +38,49 @@ def test_query_runs(spark, sf_dir, name):
     assert df.count() >= 0
 
 
-def test_no_query_returns_nested_or_decimal_types(spark, sf_dir):
-    """Two checks on each declared query's output schema, built once
-    per query for both (building all of them is the slow part):
+@pytest.fixture(scope="module")
+def query_schemas(spark, sf_dir):
+    """Each declared query's output schema, built once for the two
+    schema checks below (building all of them is the slow part)."""
+    return {name: fn(spark, sf_dir).schema for name, fn in QUERIES.items()}
 
-    - No nested types. The driver's pandas canonicalizer cannot hash
-      array/map/struct cells (``TypeError: unhashable type`` — the two
-      CORRECTNESS_r03 reds): every declared query must emit scalar
-      columns only. Flatten arrays to q25/q50/q75-style scalars or
-      ``array_join`` strings (see customer_acctbal_quartiles /
-      user_event_type_arrays).
-    - No decimals. The driver's value hasher mishandled a
-      DECIMAL(38,0) output in r05 (``events_distinct_sketch`` red while
-      Spark==DuckDB==Python were bit-identical locally): decimals are
-      fine as INTERNAL exact arithmetic but must never cross the
-      harness — surface them as BIGINT (split hi/lo if wider than
-      2^63), double (via dround), or string."""
+
+def test_no_query_returns_nested_types(query_schemas):
+    """The driver's pandas canonicalizer cannot hash array/map/struct
+    cells (``TypeError: unhashable type`` — the two CORRECTNESS_r03
+    reds): every declared query must emit scalar columns only. Flatten
+    arrays to q25/q50/q75-style scalars or ``array_join`` strings (see
+    customer_acctbal_quartiles / user_event_type_arrays)."""
     from pyspark.sql import types as T
 
     nested = (T.ArrayType, T.MapType, T.StructType)
-    nested_offenders, decimal_offenders = [], []
-    for name, fn in QUERIES.items():
-        schema = fn(spark, sf_dir).schema
+    offenders = []
+    for name, schema in query_schemas.items():
         bad = [f.name for f in schema.fields if isinstance(f.dataType, nested)]
         if bad:
-            nested_offenders.append((name, bad))
+            offenders.append((name, bad))
+    assert not offenders, offenders
+
+
+def test_no_query_returns_decimal_types(query_schemas):
+    """The driver's value hasher mishandled a DECIMAL(38,0) output in
+    r05 (``events_distinct_sketch`` red while Spark==DuckDB==Python were
+    bit-identical locally): decimals are fine as INTERNAL exact
+    arithmetic but must never cross the harness — surface them as
+    BIGINT (split hi/lo if wider than 2^63), double (via dround), or
+    string."""
+    from pyspark.sql import types as T
+
+    offenders = []
+    for name, schema in query_schemas.items():
         bad = [
             f.name
             for f in schema.fields
             if isinstance(f.dataType, T.DecimalType)
         ]
         if bad:
-            decimal_offenders.append((name, bad))
-    assert not nested_offenders and not decimal_offenders, {
-        "nested": nested_offenders,
-        "decimal": decimal_offenders,
-    }
+            offenders.append((name, bad))
+    assert not offenders, offenders
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE))
