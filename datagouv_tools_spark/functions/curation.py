@@ -20,6 +20,7 @@ from datagouv_tools_spark.functions.xhash import md5_hash60
 
 __all__ = [
     "QUALITY_STOPWORDS",
+    "SPLITS",
     "quality_logit",
     "split_assignment",
     "reassembled_kept_text",
@@ -60,6 +61,10 @@ def quality_logit(text_col: str = "text") -> Column:
     )
 
 
+#: Every split name ``split_assignment`` can return, in bucket order.
+SPLITS: tuple[str, ...] = ("train", "val", "test")
+
+
 def split_assignment(id_col: str = "doc_id", seed: str = "split42") -> Column:
     """The deterministic 80/10/10 train/val/test assignment
     (doc_split_assignment): seeded md5 bucket of the id — stable across
@@ -70,10 +75,11 @@ def split_assignment(id_col: str = "doc_id", seed: str = "split42") -> Column:
         ),
         F.lit(100),
     )
+    train, val, test = SPLITS
     return (
-        F.when(bucket < 80, F.lit("train"))
-        .when(bucket < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
+        F.when(bucket < 80, F.lit(train))
+        .when(bucket < 90, F.lit(val))
+        .otherwise(F.lit(test))
     )
 
 

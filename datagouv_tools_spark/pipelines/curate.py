@@ -34,12 +34,17 @@ reassembly — the floor for a transform that rewrites documents).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from datagouv_tools_spark.functions.curation import (
+    SPLITS,
     mixing_accept,
     mixing_rate_expr,
     quality_logit,
@@ -97,9 +102,9 @@ def curate_corpus(
     did my document go" and to re-run a stage with different knobs
     without re-deriving its input. Derived as anti-joins of adjacent
     stage outputs on ``id_col``, so the funnel's own lineage is the
-    single source of truth; costs one extra pass over the persisted
-    stage results, nothing over raw text beyond what the funnel
-    already moves.
+    single source of truth. It is a second write; the dedup and scrub
+    stages are cached (MEMORY_AND_DISK) on this path only, so it reads
+    them instead of re-running the segment lineage.
 
     ``mix_rates`` (source → acceptance rate, the frozen artifact from
     ``functions.curation.source_mixing_rates``) inserts the domain-
@@ -108,138 +113,146 @@ def curate_corpus(
     not recomputed from this corpus — so the streaming funnel applying
     the same table yields the identical corpus.
 
-    The dedup/scrub stage results are persisted (MEMORY_AND_DISK)
-    before their counts: without it, each ``count()`` plus the final
-    write would re-execute the segment-explode + winner-join lineage —
-    the pipeline's dominant, text-moving cost — three separate times."""
-    from pyspark.storagelevel import StorageLevel
-
-    n_input = docs.count()
+    Without ``rejects_dir`` the partitioned write is the funnel's only
+    action: every stage count, and the per-split counts, is a
+    ``pyspark.sql.Observation`` filled while that write runs, and
+    nothing is persisted or read back."""
+    docs, n_input = _counted(docs)
 
     # 1. exact dedup — the library operator (operators/dedup.py), not a
     # reimplementation: the min-id-representative rule has one home
-    deduped = dedup_fingerprint(docs, text_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    deduped = dedup_fingerprint(docs, text_col, id_col)
+    kept, n_dedup = _counted(deduped)
+
+    # 2. boilerplate scrub: reassemble from kept segments only
+    marks = segment_dedup_marks(
+        kept, id_col, text_col, seg_len=seg_len,
+        keep_cols=keep_cols, keep_seg_text=True,
     )
+    scrubbed = (
+        marks.groupBy(id_col, *keep_cols)
+        .agg(reassembled_kept_text().alias(text_col))
+        .filter(F.col(text_col) != "")
+    )
+    kept, n_scrub = _counted(scrubbed)
+    # (reject_stage, dropped rows); the joins are analysed eagerly, so
+    # they are built only when the rejects write will run
+    rejected = [] if rejects_dir is None else [
+        ("exact_dup", docs.join(deduped.select(id_col), id_col, "left_anti")),
+        ("scrubbed_empty", deduped.join(scrubbed.select(id_col), id_col, "left_anti")),
+    ]
+
+    # 3. quality filter (the shared pinned classifier), then the
+    # optional domain mixing against the frozen rate table
+    for stage, keep in _doc_filters(id_col, text_col, mix_rates):
+        rejected.append((stage, kept.filter(~keep)))
+        kept = kept.filter(keep)
+
+    # 4. optional deterministic PPS cap per source
+    sampled = sample_per_source is not None
+    if sampled:
+        from datagouv_tools_spark.functions.text import token_count
+        from datagouv_tools_spark.operators.sampling import pps_systematic
+
+        after_mix, n_quality = _counted(kept)
+        kept = pps_systematic(
+            after_mix,
+            "source",
+            id_col,
+            token_count(text_col) + F.lit(1),
+            k=sample_per_source,
+        )
+
+    # 5. split + 6. write (partitioned by split); the split counts are
+    # observed on the rows the write takes in
+    final, split_n = _observed(
+        kept.withColumn("split", split_assignment(id_col)),
+        {s: F.count(F.when(F.col("split") == s, 1)) for s in SPLITS},
+    )
+    # the rejects write re-reads the dedup and scrub stages: cache them
+    # for it rather than run the segment lineage a second time
+    cached = [] if rejects_dir is None else [deduped, scrubbed]
+    for df in cached:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        n_dedup = deduped.count()
-
-        # 2. boilerplate scrub: reassemble from kept segments only
-        marks = segment_dedup_marks(
-            deduped, id_col, text_col, seg_len=seg_len,
-            keep_cols=keep_cols, keep_seg_text=True,
-        )
-        scrubbed = (
-            marks.groupBy(id_col, *keep_cols)
-            .agg(reassembled_kept_text().alias(text_col))
-            .filter(F.col(text_col) != "")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            n_scrub = scrubbed.count()
-
-            # 3. quality filter (the shared pinned classifier)
-            q_pass = scrubbed.filter(quality_logit(text_col) >= 0.0)
-
-            # 3b. optional domain mixing against the frozen rate table
-            if mix_rates is not None:
-                kept = q_pass.filter(
-                    mixing_accept(mixing_rate_expr(mix_rates), id_col)
+        final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
+        if rejects_dir is not None:
+            if sampled:
+                # the cap dropped what the write did not take in; read
+                # back with the known schema, as an empty write leaves
+                # no file
+                written = docs.sparkSession.read.schema(final.schema).parquet(
+                    out_dir
                 )
-            else:
-                kept = q_pass
-            after_mix = kept
-
-            # 4. optional deterministic PPS cap per source; the
-            # pre-sample quality count is cheap here (filter over the
-            # persisted scrub stage)
-            n_quality = None
-            if sample_per_source is not None:
-                n_quality = kept.count()
-                from datagouv_tools_spark.functions.text import token_count
-                from datagouv_tools_spark.operators.sampling import (
-                    pps_systematic,
-                )
-
-                kept = pps_systematic(
-                    kept,
-                    "source",
-                    id_col,
-                    token_count(text_col) + F.lit(1),
-                    k=sample_per_source,
-                )
-
-            # 5. split + 6. write (partitioned by split); n_quality and
-            # split counts both come from the WRITTEN output — one
-            # execution of the post-scrub lineage, and the report
-            # describes what actually landed on disk
-            final = kept.withColumn("split", split_assignment(id_col))
-            final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
-            out = docs.sparkSession.read.parquet(out_dir)
-            split_counts = {
-                r["split"]: r["n"]
-                for r in out.groupBy("split")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-
-            if rejects_dir is not None:
-                cols = [id_col, *keep_cols, text_col]
-
-                def _tag(df: DataFrame, stage: str) -> DataFrame:
-                    return df.select(*cols).withColumn(
-                        "reject_stage", F.lit(stage)
-                    )
-
-                rejects = _tag(
-                    docs.join(deduped.select(id_col), id_col, "left_anti"),
-                    "exact_dup",
-                ).unionByName(
-                    _tag(
-                        deduped.join(
-                            scrubbed.select(id_col), id_col, "left_anti"
-                        ),
-                        "scrubbed_empty",
-                    )
-                ).unionByName(
-                    _tag(
-                        scrubbed.filter(quality_logit(text_col) < 0.0),
-                        "quality",
+                rejected.append(
+                    (
+                        "pps_cap",
+                        after_mix.join(written.select(id_col), id_col, "left_anti"),
                     )
                 )
-                if mix_rates is not None:
-                    rejects = rejects.unionByName(
-                        _tag(
-                            q_pass.filter(
-                                ~mixing_accept(
-                                    mixing_rate_expr(mix_rates), id_col
-                                )
-                            ),
-                            "mixing",
-                        )
-                    )
-                if sample_per_source is not None:
-                    rejects = rejects.unionByName(
-                        _tag(
-                            after_mix.join(
-                                out.select(id_col), id_col, "left_anti"
-                            ),
-                            "pps_cap",
-                        )
-                    )
-                rejects.write.mode("overwrite").partitionBy(
-                    "reject_stage"
-                ).parquet(rejects_dir)
-        finally:
-            scrubbed.unpersist()
+            cols = [id_col, *keep_cols, text_col]
+            reduce(
+                DataFrame.unionByName,
+                [
+                    df.select(*cols).withColumn("reject_stage", F.lit(stage))
+                    for stage, df in rejected
+                ],
+            ).write.mode("overwrite").partitionBy("reject_stage").parquet(
+                rejects_dir
+            )
     finally:
-        deduped.unpersist()
+        for df in cached:
+            df.unpersist()
+    split_counts = {s: n for s, n in split_n().items() if n}
     n_out = sum(split_counts.values())
-    if sample_per_source is None:
-        return CurationReport(n_input, n_dedup, n_scrub, n_out, split_counts)
     return CurationReport(
-        n_input, n_dedup, n_scrub, n_quality, split_counts, n_after_sample=n_out
+        n_input(), n_dedup(), n_scrub(), n_quality() if sampled else n_out,
+        split_counts, n_after_sample=n_out if sampled else None,
     )
+
+
+def _observed(
+    df: DataFrame, aggs: dict[str, Column]
+) -> tuple[DataFrame, Callable[[], dict[str, int]]]:
+    """``df`` with ``aggs`` observed by its next action, and a reader
+    of their values to call once that action has returned.
+
+    Spark drops an observed node from the executed plan when it proves
+    the subtree empty, statically or through AQE, and the observation
+    then holds no values. The reader computes that stage's aggregates
+    with an explicit action instead: it never takes a missing value for
+    zero, since AQE also prunes join sides that are not empty."""
+    obs = Observation()
+    exprs = [agg.alias(name) for name, agg in aggs.items()]
+
+    def read() -> dict[str, int]:
+        try:
+            return obs.get
+        except Py4JJavaError:  # unfilled: the node was not executed
+            return df.agg(*exprs).first().asDict()
+
+    return df.observe(obs, *exprs), read
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
+    """``_observed`` for the row count of one funnel stage."""
+    df, read = _observed(df, {"n": F.count(F.lit(1))})
+    return df, lambda: read()["n"]
+
+
+def _doc_filters(
+    id_col: str, text_col: str, mix_rates: dict[str, float] | None
+) -> list[tuple[str, Column]]:
+    """The per-document stages after the scrub, in order, as
+    (reject_stage, keep predicate): the quality threshold, then the
+    optional frozen domain-mixing acceptance. Both funnels apply these,
+    so the streamed corpus keeps the same documents as the batch one."""
+    filters = [("quality", quality_logit(text_col) >= 0.0)]
+    if mix_rates is not None:
+        filters.append(
+            ("mixing", mixing_accept(mixing_rate_expr(mix_rates), id_col))
+        )
+    return filters
 
 
 def stream_curate(
@@ -278,15 +291,11 @@ def stream_curate(
     from datagouv_tools_spark.streaming.scrub_gate import stream_scrub
 
     def post(cleaned: DataFrame) -> DataFrame:
-        out = (
-            cleaned.filter(F.col("cleaned_text") != "")
-            .withColumnRenamed("cleaned_text", text_col)
-            .filter(quality_logit(text_col) >= 0.0)
+        out = cleaned.filter(F.col("cleaned_text") != "").withColumnRenamed(
+            "cleaned_text", text_col
         )
-        if mix_rates is not None:
-            out = out.filter(
-                mixing_accept(mixing_rate_expr(mix_rates), id_col)
-            )
+        for _, keep in _doc_filters(id_col, text_col, mix_rates):
+            out = out.filter(keep)
         return out.withColumn("split", split_assignment(id_col))
 
     return stream_scrub(

@@ -144,8 +144,9 @@ class SqlSink:
                 run(dialect.copy_from_csv(target))
             run(dialect.analyze(target))
             executor.commit()
-            for index in built:
-                run(dialect.drop_index(index), dialect.create_index(index))
+            for index in built:  # a fresh staging table has no index to drop
+                drop = dialect.drop_index(index) if target == table else None
+                run(drop, dialect.create_index(index))
             if target != table:
                 run(*dialect.swap_in(target, table, zip(built, indices)))
             executor.commit()

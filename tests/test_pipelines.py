@@ -1008,3 +1008,143 @@ def test_curate_rejects_side_channel_partitions_every_drop(
     }
     # the knobs exercised here must actually attribute drops
     assert {"quality", "mixing", "pps_cap"} <= stages, stages
+
+
+def _counted_curation_report(docs, sample_per_source=None, mix_rates=None):
+    """The funnel report computed the slow, obvious way: the same
+    library stages as curate_corpus, each counted with its own action."""
+    from datagouv_tools_spark.functions.curation import (
+        mixing_accept,
+        mixing_rate_expr,
+        quality_logit,
+        reassembled_kept_text,
+        split_assignment,
+    )
+    from datagouv_tools_spark.functions.text import token_count
+    from datagouv_tools_spark.operators.dedup import (
+        dedup_fingerprint,
+        segment_dedup_marks,
+    )
+    from datagouv_tools_spark.operators.sampling import pps_systematic
+    from datagouv_tools_spark.pipelines.curate import CurationReport
+
+    keep_cols = ("source", "lang")
+    deduped = dedup_fingerprint(docs, "text", "doc_id")
+    scrubbed = (
+        segment_dedup_marks(
+            deduped, "doc_id", "text", keep_cols=keep_cols, keep_seg_text=True
+        )
+        .groupBy("doc_id", *keep_cols)
+        .agg(reassembled_kept_text().alias("text"))
+        .filter(F.col("text") != "")
+    )
+    kept = scrubbed.filter(quality_logit("text") >= 0.0)
+    if mix_rates is not None:
+        kept = kept.filter(mixing_accept(mixing_rate_expr(mix_rates), "doc_id"))
+    n_quality = kept.count()
+    if sample_per_source is not None:
+        kept = pps_systematic(
+            kept, "source", "doc_id", token_count("text") + F.lit(1),
+            k=sample_per_source,
+        )
+    split_counts = {
+        r["split"]: r["count"]
+        for r in kept.groupBy(split_assignment("doc_id").alias("split"))
+        .count()
+        .collect()
+    }
+    n_out = sum(split_counts.values())
+    return CurationReport(
+        docs.count(), deduped.count(), scrubbed.count(),
+        n_quality, split_counts,
+        n_after_sample=None if sample_per_source is None else n_out,
+    )
+
+
+@pytest.mark.parametrize(
+    "sample_per_source, mix, rejects",
+    [(None, False, False), (2, False, False), (None, True, False),
+     (None, False, True), (2, True, True)],
+    ids=["default", "sample", "mix", "rejects", "all"],
+)
+def test_curate_observed_report_equals_counted_report(
+    spark, sf_dir, tmp_path, sample_per_source, mix, rejects
+):
+    """The stage counts curate_corpus observes during its one write are
+    the counts that explicit count()s over the same stages return, and
+    the split counts are what landed on disk."""
+    from datagouv_tools_spark.functions.curation import source_mixing_rates
+    from datagouv_tools_spark.pipelines.curate import curate_corpus
+    from datagouv_tools_spark.sources.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    rates = (
+        source_mixing_rates(docs, {"src0": 0.02}, default_share=0.01)
+        if mix else None
+    )
+    out = str(tmp_path / "out")
+    got = curate_corpus(
+        docs, out, sample_per_source=sample_per_source, mix_rates=rates,
+        rejects_dir=str(tmp_path / "rejects") if rejects else None,
+    )
+    assert got == _counted_curation_report(docs, sample_per_source, rates)
+    written = {
+        r["split"]: r["count"]
+        for r in spark.read.parquet(out).groupBy("split").count().collect()
+    }
+    assert written == got.split_counts and written
+
+
+@pytest.mark.parametrize(
+    "rejects, sample_per_source",
+    [(False, None), (True, None), (True, 2)],
+    ids=["plain", "rejects", "rejects_sample"],
+)
+@pytest.mark.parametrize(
+    "empty",
+    [lambda d: d.limit(0), lambda d: d.filter(F.col("doc_id") < 0)],
+    ids=["limit0", "runtime_filter"],
+)
+def test_curate_corpus_with_no_document_left(
+    spark, sf_dir, tmp_path, empty, rejects, sample_per_source
+):
+    """An input that is empty when planned (limit 0) or only when run (a
+    filter no row passes) yields an all-zero report and a written, empty
+    out_dir; the pps_cap rejects read back that empty out_dir. Spark
+    drops observed nodes it proves empty, so some of these counts come
+    from the explicit fallback, not from a zero assumed."""
+    from datagouv_tools_spark.pipelines.curate import CurationReport, curate_corpus
+    from datagouv_tools_spark.sources.catalog import load_table
+
+    out, rej = tmp_path / "out", tmp_path / "rejects"
+    report = curate_corpus(
+        empty(load_table(spark, sf_dir, "documents")), str(out),
+        sample_per_source=sample_per_source,
+        rejects_dir=str(rej) if rejects else None,
+    )
+    assert report == CurationReport(
+        0, 0, 0, 0, {}, n_after_sample=None if sample_per_source is None else 0
+    )
+    assert (out / "_SUCCESS").exists()
+    assert (rej / "_SUCCESS").exists() == rejects
+
+
+def test_curate_corpus_default_path_runs_only_its_write(spark, sf_dir, tmp_path):
+    """With default options the partitioned write is curate_corpus's
+    only action: no count, collect, persist or read-back adds a job.
+    Nine jobs is that one write (one per AQE query stage) on this
+    fixture; any extra action pushes the count above it."""
+    from datagouv_tools_spark.pipelines.curate import curate_corpus
+    from datagouv_tools_spark.sources.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    sc, group = spark.sparkContext, "curate_corpus_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        report = curate_corpus(docs, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert report.n_after_quality > 0
+    assert len(jobs) <= 9, len(jobs)

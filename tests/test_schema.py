@@ -418,10 +418,8 @@ def test_write_sql_table_pg_dry_run_stages_and_swaps(spark):
         "(FORMAT CSV, HEADER TRUE, ENCODING 'UTF_8')",
         'ANALYZE "stock_etablissement__staging"',
         "COMMIT",
-        'DROP INDEX IF EXISTS "siret_stock_etablissement__staging_idx"',
         'CREATE INDEX "siret_stock_etablissement__staging_idx" '
         'ON "stock_etablissement__staging" USING hash ("siret")',
-        'DROP INDEX IF EXISTS "code_postal_etablissement_stock_etablissement__staging_idx"',
         'CREATE INDEX "code_postal_etablissement_stock_etablissement__staging_idx" '
         'ON "stock_etablissement__staging" USING btree ("code_postal_etablissement")',
         'DROP TABLE IF EXISTS "stock_etablissement"',
