@@ -14,8 +14,9 @@ from datagouv_tools_spark.queries import ORACLE, QUERIES
 from datagouv_tools_spark.sources.catalog import TESTDATA_TABLES, table_path
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 from paritycheck import compare  # noqa: E402
 
 

@@ -26,10 +26,8 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REPEATS = 3
 
@@ -69,64 +67,43 @@ HEAVY_BATCH = [
 
 
 def main(argv: list[str]) -> int:
+    from harness import is_streaming, load_context, merge_record, select, timed
     from scalecheck import ensure_sf1
 
     from datagouv_tools_spark.queries import QUERIES
     from datagouv_tools_spark.session import get_spark
 
+    names = select(
+        argv, QUERIES, default=HEAVY_BATCH + [n for n in QUERIES if is_streaming(n)]
+    )
     sf1 = os.environ.get("SPARK_GRAFT_SF1_DIR") or ensure_sf1()
-    names = [a for a in argv if not a.startswith("--")]
-    if not names:
-        names = HEAVY_BATCH + [n for n in QUERIES if "stream" in n]
-    unknown = [n for n in names if n not in QUERIES]
-    if unknown:
-        print(f"unknown queries: {unknown}", file=sys.stderr)
-        return 2
-
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("benchsf1")
     spark.sparkContext.setLogLevel("ERROR")
 
-    ordered = [n for n in names if "stream" not in n] + [
-        n for n in names if "stream" in n
-    ]
     minima: dict[str, float] = {}
-    for name in ordered:
-        fn = QUERIES[name]
+    for name in names:
         spark.sparkContext.setJobDescription(f"benchsf1:{name}")
-        fn(spark, sf1).collect()  # warmup (codegen, listing)
-        samples = []
-        for _ in range(REPEATS):
-            t0 = time.perf_counter()
-            fn(spark, sf1).collect()
-            samples.append(time.perf_counter() - t0)
+        samples = timed(lambda: QUERIES[name](spark, sf1).collect(), REPEATS)
         minima[name] = round(min(samples), 4)
         print(f"{name} cpus={cpus}: {minima[name]}", file=sys.stderr)
     spark.sparkContext.setJobDescription(None)
 
     out = os.environ.get("SPARK_GRAFT_BENCH_SF1", "BENCH_SF1.json")
-    data: dict = {"sf": 1.0, "sf_dir": sf1, "repeats": REPEATS, "cpus": {}}
-    if os.path.exists(out):
-        with open(out) as fh:
-            data = json.load(fh)
-    data.setdefault("cpus", {}).setdefault(str(cpus), {}).update(minima)
+    data = merge_record(out, {
+        "sf": 1.0, "sf_dir": sf1, "repeats": REPEATS,
+        "cpus": {str(cpus): minima}, "load_context": load_context(),
+    })
     # low/high core ratio per query when two core counts are present
     counts = sorted(data["cpus"], key=int)
     if len(counts) >= 2:
-        lo, hi = counts[0], counts[-1]
-        ratios = {
-            n: round(data["cpus"][lo][n] / data["cpus"][hi][n], 2)
-            for n in data["cpus"][hi]
-            if n in data["cpus"][lo] and data["cpus"][hi][n] > 0
-        }
-        data["ratio_low_over_high"] = ratios
-        data["cpus_low"], data["cpus_high"] = int(lo), int(hi)
-    data["load_context"] = {
-        "loadavg": [round(x, 2) for x in os.getloadavg()],
-        "box_cpus": os.cpu_count(),
-    }
-    with open(out, "w") as fh:
-        json.dump(data, fh, indent=1, sort_keys=True)
+        lo, hi = data["cpus"][counts[0]], data["cpus"][counts[-1]]
+        merge_record(out, {
+            "ratio_low_over_high": {
+                n: round(lo[n] / hi[n], 2) for n in hi if n in lo and hi[n] > 0
+            },
+            "cpus_low": int(counts[0]), "cpus_high": int(counts[-1]),
+        })
     print(json.dumps({"metric": "benchsf1", "cpus": cpus,
                       "total_min": round(sum(minima.values()), 2),
                       "n": len(minima), "out": out}))

@@ -7,8 +7,10 @@ lifecycle and the corpus-curation funnel — the surfaces that parse
 bytes, not parquet. It synthesizes 1x/10x/100x fixture corpora (the
 generation cost is NOT timed), drives each pipeline through its real
 public entry point end-to-end (parse -> stage -> typed cast -> parquet
-write), and records min-of-REPEATS wall time per size plus time-ratio
-verdicts.
+write), and records min-of-REPEATS wall time per size, after one
+untimed warm-up call, plus time-ratio verdicts. Each pipeline's row is
+merged into the record with its own load context, so a subset run
+keeps the other pipelines' rows.
 
 Pipelines covered:
 - import_sirene   — staged single-archive path (driver unzip -> schema'd
@@ -45,12 +47,12 @@ Env: SPARK_GRAFT_ETLSCALE (output JSON, default ETLSCALE.json),
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
 import sys
 import tempfile
-import time
 import zipfile
 from pathlib import Path
 
@@ -69,6 +71,8 @@ nombrePeriodes,Périodes,2,Numérique,5
 trancheEffectifs,Tranche,2,Texte,6
 """
 
+PIPELINES = ("sirene", "sirene_distributed", "fantoir", "deces", "curate")
+SF01_DOCS = "/root/testdata/sf0.1/documents.parquet"
 SIRENE_BASE_ROWS = 5_000
 DECES_BASE_ROWS = 10_000
 FANTOIR_BASE_GROUPS = 2_000
@@ -195,7 +199,7 @@ def _make_docs(spark, base: Path, ratio: int) -> str:
     from pyspark.sql import functions as F
 
     out = str(base / f"docs_x{ratio}.parquet")
-    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    docs = spark.read.parquet(SF01_DOCS)
     n = docs.count()
     reps = spark.range(ratio).withColumnRenamed("id", "rep")
     scaled = (
@@ -214,18 +218,6 @@ def _make_docs(spark, base: Path, ratio: int) -> str:
     return out
 
 
-def _timed(fn, out_root: Path, label: str) -> float:
-    best = None
-    for r in range(REPEATS):
-        out_dir = out_root / f"{label}_rep{r}"
-        t0 = time.perf_counter()
-        fn(str(out_dir))
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-        shutil.rmtree(out_dir, ignore_errors=True)
-    return best
-
-
 def _verdict(time_ratio: float, data_ratio: int) -> str:
     if time_ratio <= 0.3 * data_ratio:
         return "FLAT/SUBLINEAR"
@@ -235,23 +227,29 @@ def _verdict(time_ratio: float, data_ratio: int) -> str:
 
 
 def main() -> int:
+    from harness import load_context, merge_record, select, timed
+
     from datagouv_tools_spark.session import get_spark
 
-    only = set(sys.argv[1:])
+    names = select(sys.argv[1:], PIPELINES)
     spark = get_spark("etlscale")
     spark.sparkContext.setLogLevel("ERROR")
     work = Path(tempfile.mkdtemp(prefix="etlscale_"))
     report: dict[str, dict] = {}
 
     def run(name: str, build_fixture, drive, rows_fn):
-        if only and name not in only:
+        if name not in names:
             return
         entry = {"sizes": {}, "repeats": REPEATS}
         for ratio in RATIOS:
             fixture = build_fixture(ratio)
-            secs = _timed(
-                lambda out: drive(fixture, out), work, f"{name}_x{ratio}"
-            )
+            # every call writes a fresh dir, removed after the samples
+            outs = work / f"{name}_x{ratio}"
+            reps = itertools.count()
+            secs = min(timed(
+                lambda: drive(fixture, str(outs / f"rep{next(reps)}")), REPEATS
+            ))
+            shutil.rmtree(outs, ignore_errors=True)
             rows = rows_fn(ratio)
             entry["sizes"][f"x{ratio}"] = {
                 "rows": rows,
@@ -264,7 +262,7 @@ def main() -> int:
             tr = entry["sizes"][f"x{ratio}"]["secs_min"] / t1
             entry[f"x{ratio}_time_ratio"] = round(tr, 2)
             entry[f"x{ratio}_verdict"] = _verdict(tr, ratio)
-        report[name] = entry
+        report[name] = {**entry, "load_context": load_context()}
         print(
             f"{name}: x10 {entry['x10_time_ratio']} "
             f"({entry['x10_verdict']}), x100 {entry['x100_time_ratio']} "
@@ -333,29 +331,20 @@ def main() -> int:
 
         curate_corpus(spark.read.parquet(fixture), out)
 
-    base_docs = spark.read.parquet(
-        "/root/testdata/sf0.1/documents.parquet"
-    ).count()
     run(
         "curate",
         lambda ratio: _make_docs(spark, work, ratio),
         drive_curate,
-        lambda ratio: base_docs * ratio,
+        lambda ratio: spark.read.parquet(SF01_DOCS).count() * ratio,
     )
 
-    payload = {
+    # rows of pipelines this run did not select keep their last record
+    merge_record(os.environ.get("SPARK_GRAFT_ETLSCALE", "ETLSCALE.json"), {
         "metric": "etl_scale_curves",
         "unit": "sec",
         "ratios": list(RATIOS),
         "pipelines": report,
-        "load_context": {
-            "loadavg": [round(x, 2) for x in os.getloadavg()],
-            "cpus": os.cpu_count(),
-        },
-    }
-    out = os.environ.get("SPARK_GRAFT_ETLSCALE", "ETLSCALE.json")
-    with open(out, "w") as fh:
-        json.dump(payload, fh, indent=1, sort_keys=True)
+    })
     print(json.dumps({k: {r: v for r, v in e.items() if "verdict" in r or "ratio" in str(r)} for k, e in report.items()}))
     shutil.rmtree(work, ignore_errors=True)
     bad = [

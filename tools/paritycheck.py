@@ -76,13 +76,20 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    import os
 
-    sys.path.insert(0, "/root/repo")
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    # this checkout's code, wherever it lives
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
+    from harness import select
+
     from datagouv_tools_spark.session import get_spark
     from datagouv_tools_spark.sources.catalog import TESTDATA_TABLES, table_path
+
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    names = select(sys.argv[2:], queries)
 
     spark = get_spark("paritycheck")
     con = duckdb.connect()
@@ -91,14 +98,10 @@ def main() -> int:
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(sf_dir, name)}')"
         )
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     n_pass = n_fail = n_weak = 0
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
+    for name in names:
         try:
-            spark_pdf = fn(spark, sf_dir).toPandas()
+            spark_pdf = queries[name](spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {exc}")
             n_fail += 1

@@ -36,6 +36,16 @@ kill 100 TB runs and writes one JSON report (PLANAUDIT.json):
   side of a BroadcastNestedLoopJoin. The repo's BNLJ are 1-row
   scalars / literal-bounded probe sets; anything else hard-fails
   (plans/inspect.unbounded_bnlj_sides).
+- `build_rpcs` (informational): py4j round-trips (`send_command` calls)
+  while the query's DataFrame is BUILT, without the plan walks above.
+  Every Column operator, `F.lit` and conf access is one round-trip. A
+  throwaway build of the first query runs first, so table-load memos
+  do not bill it.
+- `build_jobs` (informational): Spark jobs the build runs before the
+  query's own action (Python-side loops, convergence counts, checkpoints),
+  read from a job group set around the build. Streaming micro-batches
+  run in their own job groups, so for a streaming query this is a
+  lower bound.
 
 Usage:
     python tools/planaudit.py                # all queries at sf0.001
@@ -83,6 +93,8 @@ def audit(plan: str) -> dict:
 
 
 def main() -> int:
+    from harness import merge_record, select
+
     from datagouv_tools_spark.plans.inspect import (
         physical_plan,
         scaling_broadcast_tables,
@@ -92,9 +104,35 @@ def main() -> int:
     from datagouv_tools_spark.queries import QUERIES
     from datagouv_tools_spark.session import get_spark
 
+    names = select(sys.argv[1:], QUERIES, default=sorted(QUERIES))
     spark = get_spark("planaudit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    names = sys.argv[1:] or sorted(QUERIES)
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    rpcs = 0
+
+    def counted(*args, **kwargs):
+        nonlocal rpcs
+        rpcs += 1
+        return send(*args, **kwargs)
+
+    def build(name: str) -> tuple[object, int, int]:
+        """The query's DataFrame, its build round-trips and build jobs."""
+        nonlocal rpcs
+        sc.setLocalProperty("spark.jobGroup.id", name)
+        rpcs, client.send_command = 0, counted
+        try:
+            df = QUERIES[name](spark, SF_DIR)
+        finally:
+            client.send_command = send
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, rpcs, len(sc.statusTracker().getJobIdsForGroup(name))
+
+    # throwaway build, in no job group: table-load memos must not bill
+    # the first query
+    QUERIES[names[0]](spark, SF_DIR)
     report: dict[str, dict] = {}
     totals = {
         "cartesian": 0,
@@ -105,10 +143,12 @@ def main() -> int:
         "broadcast_scaling": 0,
         "spw_scaling": 0,
         "bnlj_unbounded": 0,
+        "build_rpcs": 0,
+        "build_jobs": 0,
     }
     for name in names:
         try:
-            df = QUERIES[name](spark, SF_DIR)
+            df, n_rpcs, n_jobs = build(name)
             row = audit(physical_plan(df, mode="simple"))
         except Exception as exc:  # pragma: no cover - audit robustness
             row = {"error": str(exc)[:200]}
@@ -126,6 +166,7 @@ def main() -> int:
                     row[key] = gate(df)
                 except Exception as exc:  # pragma: no cover
                     row[key] = [f"audit-error: {str(exc)[:120]}"]
+            row.update(build_rpcs=n_rpcs, build_jobs=n_jobs)
         report[name] = row
         for k in totals:
             v = row.get(k, 0)
@@ -152,11 +193,15 @@ def main() -> int:
         "total_broadcast_scaling": totals["broadcast_scaling"],
         "total_spw_scaling": totals["spw_scaling"],
         "total_bnlj_unbounded": totals["bnlj_unbounded"],
+        "total_build_rpcs": totals["build_rpcs"],
+        "total_build_jobs": totals["build_jobs"],
     }
     print(json.dumps({"summary": summary}))
-    out = os.environ.get("SPARK_GRAFT_PLANAUDIT", "PLANAUDIT.json")
-    with open(out, "w") as fh:
-        json.dump({"summary": summary, "queries": report}, fh, indent=1)
+    merge_record(
+        os.environ.get("SPARK_GRAFT_PLANAUDIT", "PLANAUDIT.json"),
+        {"summary": summary, "queries": dict(sorted(report.items()))},
+        fresh=True,
+    )
     return (
         0
         if totals["cartesian"] == 0

@@ -27,8 +27,8 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -146,151 +146,79 @@ def ensure_sf1() -> str:
     return SF1_DIR
 
 
-def x1000_main(argv: list[str]) -> int:
-    from datagouv_tools_spark import queries as q
-    from datagouv_tools_spark.session import get_spark
-
-    names = [a for a in argv if not a.startswith("--")] or X1000_DEFAULT
-    sf1 = ensure_sf1()
-    spark = get_spark("scalecheck", master="local[32]", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    rows = {}
-    flagged = []
-    for name in names:
-        fn = q.QUERIES[name]
-        row = {"query": name}
-        for label, d in (("sf0.001", "/root/testdata/sf0.001"), ("sf1", sf1)):
-            fn(spark, d).collect()  # warmup
-            ts = []
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, d).collect()
-                ts.append(time.time() - t0)
-            row[label + "_min"] = round(min(ts), 3)
-        ratio = row["sf1_min"] / max(row["sf0.001_min"], 1e-9)
-        row["x1000_ratio"] = round(ratio, 2)
-        # 1000x data: <3 = still overhead-bound; <500 sublinear; <1500
-        # ~linear; beyond that the plan has a super-linear term
-        row["x1000_verdict"] = (
-            "flat" if ratio < 3 else "sublinear" if ratio < 500 else
-            "linear" if ratio < 1500 else "SUPERLINEAR"
-        )
-        if row["x1000_verdict"] == "SUPERLINEAR":
-            flagged.append(name)
-        rows[name] = row
-        print(json.dumps(row))
-    out = os.environ.get("SPARK_GRAFT_SCALECURVES", "SCALECURVES.json")
-    if os.path.exists(out):
-        with open(out) as fh:
-            data = json.load(fh)
-        for name, row in rows.items():
-            data.setdefault("queries", {}).setdefault(name, {}).update(
-                {k: v for k, v in row.items() if k.startswith("x1000")
-                 or k == "sf1_min"}
-            )
-        data.setdefault("summary", {})["x1000"] = {
-            "n": len(rows),
-            "superlinear": flagged,
-            "verdicts": {
-                v: sum(
-                    1 for r in rows.values() if r["x1000_verdict"] == v
-                )
-                for v in ("flat", "sublinear", "linear", "SUPERLINEAR")
-            },
-        }
-        with open(out, "w") as fh:
-            json.dump(data, fh, indent=1)
-    print(json.dumps({"x1000_superlinear": flagged}))
-    return 1 if flagged else 0
+def verdict(ratio: float, data_ratio: int) -> str:
+    """Time growth against data growth: < 3x is still overhead-bound;
+    under half the data ratio sublinear; under 1.5x it ~linear; beyond
+    that the plan has a super-linear term."""
+    if ratio < 3:
+        return "flat"
+    if ratio < 0.5 * data_ratio:
+        return "sublinear"
+    return "linear" if ratio < 1.5 * data_ratio else "SUPERLINEAR"
 
 
 def main(argv: list[str]) -> int:
-    from datagouv_tools_spark import queries as q
+    from harness import load_context, merge_record, select, timed
+
+    from datagouv_tools_spark.queries import QUERIES
     from datagouv_tools_spark.session import get_spark
 
-    if "--x1000" in argv:
-        return x1000_main([a for a in argv if a != "--x1000"])
-    if "--all" in argv:
-        names = [n for n in q.QUERIES if "stream" not in n]
-    elif [a for a in argv if not a.startswith("--")]:
-        names = [a for a in argv if not a.startswith("--")]
+    x1000 = "--x1000" in argv
+    names = select(argv, QUERIES, default=(
+        X1000_DEFAULT if x1000 else
+        [n for n in QUERIES if "stream" not in n] if "--all" in argv else DEFAULT
+    ))
+    if x1000:
+        sizes = [("sf0.001", "/root/testdata/sf0.001"), ("sf1", ensure_sf1())]
+        repeats, data_ratio, ratio_key, vkey = 2, 1000, "x1000_ratio", "x1000_verdict"
     else:
-        names = DEFAULT
-    unknown = [n for n in names if n not in q.QUERIES]
-    if unknown:
-        print(f"unknown queries: {unknown}", file=sys.stderr)
-        return 2
-
+        sizes = [(sf, f"/root/testdata/{sf}") for sf in SFS]
+        repeats, data_ratio, ratio_key, vkey = 3, 100, "x100_ratio", "verdict"
     spark = get_spark("scalecheck", master="local[32]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
 
-    flagged = []
     report: dict[str, dict] = {}
     for name in names:
-        fn = q.QUERIES[name]
         row: dict = {"query": name}
-        for sf in SFS:
-            d = f"/root/testdata/{sf}"
-            fn(spark, d).collect()  # warmup (codegen + file listing)
-            ts = []
-            for _ in range(3):
-                t0 = time.time()
-                fn(spark, d).collect()
-                ts.append(time.time() - t0)
-            row[sf] = round(sorted(ts)[1], 3)
+        for label, d in sizes:
+            ts = timed(lambda: QUERIES[name](spark, d).collect(), repeats)
+            row[label] = round(statistics.median(ts), 3)
             # min is the least contention-polluted sample on this box
             # (±2x ambient swings, SCALE.md §20) — the RATIO verdict
             # keys off minima so a loaded moment at one sf doesn't
             # fake a superlinear curve.
-            row[sf + "_min"] = round(min(ts), 3)
-        ratio = row["sf0.1_min"] / max(row["sf0.001_min"], 1e-9)
-        row["x100_ratio"] = round(ratio, 2)
-        # 100x data growing >50x wall = the data term is ~linear and
-        # already dominant; >150x = super-linear, investigate the plan
-        row["verdict"] = (
-            "flat" if ratio < 3 else "sublinear" if ratio < 50 else
-            "linear" if ratio < 150 else "SUPERLINEAR"
-        )
-        if row["verdict"] == "SUPERLINEAR":
-            flagged.append(name)
+            row[label + "_min"] = round(min(ts), 3)
+        ratio = row[sizes[-1][0] + "_min"] / max(row[sizes[0][0] + "_min"], 1e-9)
+        row[ratio_key] = round(ratio, 2)
+        row[vkey] = verdict(ratio, data_ratio)
         report[name] = row
         print(json.dumps(row))
     summary = {
         "n": len(names),
-        "superlinear": flagged,
+        "superlinear": [n for n, r in report.items() if r[vkey] == "SUPERLINEAR"],
         "verdicts": {
-            v: sum(1 for r in report.values() if r["verdict"] == v)
+            v: sum(1 for r in report.values() if r[vkey] == v)
             for v in ("flat", "sublinear", "linear", "SUPERLINEAR")
         },
-        "load_context": {
-            "loadavg": [round(x, 2) for x in os.getloadavg()],
-            "cpus": os.cpu_count(),
-        },
+        "load_context": load_context(),
     }
     print(json.dumps({"summary": summary}))
     out = os.environ.get("SPARK_GRAFT_SCALECURVES")
-    if out is None and "--all" in argv:
-        out = "SCALECURVES.json"
-    if out is None and "--merge" in argv:
-        # refresh a few changed queries in place without clobbering
-        # the full-sweep record (r11)
-        out = "SCALECURVES.json"
-        if os.path.exists(out):
-            with open(out) as fh:
-                prior = json.load(fh)
-            merged = prior.get("queries", {})
-            merged.update(report)
-            with open(out, "w") as fh:
-                json.dump(
-                    {"summary": prior.get("summary", summary),
-                     "queries": merged},
-                    fh, indent=1,
-                )
-            return 1 if flagged else 0
-    if out:
-        with open(out, "w") as fh:
-            json.dump({"summary": summary, "queries": report}, fh, indent=1)
-    return 1 if flagged else 0
+    if x1000:
+        merge_record(out or "SCALECURVES.json", {
+            "queries": {n: {k: v for k, v in r.items()
+                            if k.startswith("x1000") or k == "sf1_min"}
+                        for n, r in report.items()},
+            "summary": {"x1000": summary},
+        })
+    elif "--merge" in argv:
+        # refresh a few changed queries in place; the full-sweep
+        # summary stays (r11)
+        merge_record(out or "SCALECURVES.json", {"queries": report})
+    elif out or "--all" in argv:
+        merge_record(out or "SCALECURVES.json",
+                     {"summary": summary, "queries": report}, fresh=True)
+    return 1 if summary["superlinear"] else 0
 
 
 if __name__ == "__main__":

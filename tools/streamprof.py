@@ -14,7 +14,7 @@ data, not wall-clock guesses:
   decomposes into named jobs.
 
 Usage: python tools/streamprof.py <query> [query ...]
-Writes STREAMPROF.json {query: {runs, batches: [...], jobs: [...]}}.
+Merges {query: {wall_s, batches: [...], jobs: [...]}} into STREAMPROF.json.
 The profiled run is the SECOND execution (first warms codegen, fixture
 memos and the streaming engine, mirroring bench.py's min-of-repeats).
 """
@@ -73,18 +73,17 @@ def parse_event_log(evdir: str, t0_ms: float, t1_ms: float) -> list[dict]:
 
 
 def main(argv: list[str]) -> int:
+    from harness import merge_record, select, timed
     from pyspark.sql.streaming import StreamingQueryListener
 
     from datagouv_tools_spark.queries import QUERIES
     from datagouv_tools_spark.session import get_spark
 
-    names = [a for a in argv if not a.startswith("--")]
-    if not names:
-        names = [
-            "doc_scrub_stream",
-            "orders_join_ivm_stream",
-            "events_stream_orphan_clicks",
-        ]
+    names = select(argv, QUERIES, default=[
+        "doc_scrub_stream",
+        "orders_join_ivm_stream",
+        "events_stream_orphan_clicks",
+    ])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(EVLOG_DIR, exist_ok=True)
     spark = get_spark(
@@ -116,14 +115,18 @@ def main(argv: list[str]) -> int:
     spark.streams.addListener(Capture())
 
     report: dict[str, dict] = {}
+    t0 = 0.0
     for name in names:
-        fn = QUERIES[name]
-        fn(spark, sf_dir).collect()  # warmup: codegen + fixture memo
-        progresses.clear()
-        t0 = time.time() * 1000
-        w0 = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        wall = time.perf_counter() - w0
+
+        def profiled() -> None:
+            # the one timed run after the warm-up: only its batches and
+            # jobs are kept
+            nonlocal t0
+            progresses.clear()
+            t0 = time.time() * 1000
+            QUERIES[name](spark, sf_dir).collect()
+
+        (wall,) = timed(profiled, 1)
         time.sleep(2)  # let listener events drain
         t1 = time.time() * 1000
         batches = [
@@ -134,6 +137,7 @@ def main(argv: list[str]) -> int:
             }
             for p in progresses
         ]
+        jobs = parse_event_log(EVLOG_DIR, t0, t1)
         report[name] = {
             "wall_s": round(wall, 3),
             "batches": batches,
@@ -141,15 +145,14 @@ def main(argv: list[str]) -> int:
                 (b["durationMs"] or {}).get("triggerExecution", 0)
                 for b in batches
             ),
-            "jobs": parse_event_log(EVLOG_DIR, t0, t1),
+            "jobs": jobs,
+            "n_jobs": len(jobs),
         }
-        report[name]["n_jobs"] = len(report[name]["jobs"])
         print(json.dumps({name: {k: report[name][k] for k in
                                  ("wall_s", "trigger_total_ms", "n_jobs")}}),
               file=sys.stderr)
     out = os.environ.get("SPARK_GRAFT_STREAMPROF", "STREAMPROF.json")
-    with open(out, "w") as fh:
-        json.dump(report, fh, indent=1)
+    merge_record(out, report)
     print(json.dumps({"out": out, "queries": list(report)}))
     spark.stop()
     return 0
