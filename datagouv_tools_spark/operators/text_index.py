@@ -196,17 +196,16 @@ def stream_text_index_append(
     """Start the continuous text-index maintenance stream (availableNow
     drains the backlog and stops; a production stream runs a
     processing-time trigger with the same callback)."""
+    from datagouv_tools_spark.streaming.source import start_stream
     from datagouv_tools_spark.streaming.store import run_key_for_checkpoint
 
-    return (
+    return start_stream(
         doc_stream.writeStream.foreachBatch(
             foreach_batch_text_index_appender(
                 index, run_key_for_checkpoint(checkpoint)
             )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ).trigger(availableNow=True),
+        checkpoint,
     )
 
 

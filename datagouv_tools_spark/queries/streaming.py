@@ -166,6 +166,30 @@ def events_stream_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _two_file_fixture(prefix: str, first: DataFrame, second: DataFrame) -> str:
+    """Write ``first`` and ``second`` as one parquet file each, ``f1``
+    and ``f2`` under a fresh temp dir, and return the dir. The dir is
+    removed when the interpreter exits, since the fixture caches below
+    hold it for the process's life."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    src = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, src, True)
+    # deterministic batch order: FileStreamSource sorts by mtime — pin
+    # f1 strictly earlier so batch 0 is always ``first``
+    t0 = 1_600_000_000
+    for sub, df, ts_ in (("f1", first, t0), ("f2", second, t0 + 100)):
+        # coalesce(1): a 2-FILE fixture is the point (one micro-batch
+        # per file) — never copy this into a production write path
+        df.coalesce(1).write.parquet(f"{src}/{sub}")
+        for name in os.listdir(f"{src}/{sub}"):
+            os.utime(f"{src}/{sub}/{name}", (ts_, ts_))
+    return src
+
+
 #: process-lifetime cache of the two-file replay fixture (src dir +
 #: split id) per sf_dir — the fixture is harness scaffolding (a real
 #: stream's source files pre-exist), so repeated invocations (bench
@@ -176,30 +200,18 @@ _SCRUB_STREAM_FIXTURE: dict[str, str] = {}
 
 
 def _scrub_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import tempfile
-
     if sf_dir in _SCRUB_STREAM_FIXTURE:
         return _SCRUB_STREAM_FIXTURE[sf_dir]
     docs = t(spark, sf_dir, "documents")
     split_id = docs.agg(
         F.percentile_approx("doc_id", 0.5, 1000000)
     ).collect()[0][0]
-    src = tempfile.mkdtemp(prefix="scrub_stream_src_")
-    # coalesce(1): a 2-FILE fixture is the point (one micro-batch per
-    # file) — never copy this into a production write path
-    docs.filter(F.col("doc_id") < split_id).select("doc_id", "text").coalesce(
-        1
-    ).write.parquet(f"{src}/f1")
-    docs.filter(F.col("doc_id") >= split_id).select("doc_id", "text").coalesce(
-        1
-    ).write.parquet(f"{src}/f2")
-    # deterministic batch order: FileStreamSource sorts by mtime — pin
-    # f1 strictly earlier so batch 0 is always the low-doc_id half
-    t0 = 1_600_000_000
-    for sub, ts_ in (("f1", t0), ("f2", t0 + 100)):
-        for name in os.listdir(f"{src}/{sub}"):
-            os.utime(f"{src}/{sub}/{name}", (ts_, ts_))
+    docs = docs.select("doc_id", "text")
+    src = _two_file_fixture(
+        "scrub_stream_src_",
+        docs.filter(F.col("doc_id") < split_id),
+        docs.filter(F.col("doc_id") >= split_id),
+    )
     _SCRUB_STREAM_FIXTURE[sf_dir] = src
     return src
 
@@ -293,9 +305,6 @@ def _join_ivm_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
     the initial load (inserts of both base snapshots), file 2 the
     two-sided delta. Restricted to o_orderkey%4==1 — the full two-sided
     semantics at a quarter of the replay volume."""
-    import os
-    import tempfile
-
     if sf_dir in _JOIN_IVM_STREAM_FIXTURE:
         return _JOIN_IVM_STREAM_FIXTURE[sf_dir]
     orders = (
@@ -344,15 +353,7 @@ def _join_ivm_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
         .unionByName(cdc(li.filter(F.col("l_suppkey") % 3 == 0), "b", "I"))
         .unionByName(cdc(b_old.filter(F.col("l_partkey") % 11 == 0), "b", "D"))
     )
-    src = tempfile.mkdtemp(prefix="join_ivm_stream_src_")
-    # coalesce(1): a 2-FILE fixture is the point (one micro-batch per
-    # file) — never copy this into a production write path
-    load.coalesce(1).write.parquet(f"{src}/f1")
-    delta.coalesce(1).write.parquet(f"{src}/f2")
-    t0 = 1_600_000_000
-    for sub, ts_ in (("f1", t0), ("f2", t0 + 100)):
-        for name in os.listdir(f"{src}/{sub}"):
-            os.utime(f"{src}/{sub}/{name}", (ts_, ts_))
+    src = _two_file_fixture("join_ivm_stream_src_", load, delta)
     _JOIN_IVM_STREAM_FIXTURE[sf_dir] = src
     return src
 
@@ -404,6 +405,7 @@ def orders_join_ivm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         join_maintain_batch,
         read_join_store,
     )
+    from datagouv_tools_spark.streaming.source import start_stream
 
     src = _join_ivm_stream_fixture(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="join_ivm_stream_")
@@ -415,7 +417,7 @@ def orders_join_ivm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    q = (
+    q = start_stream(
         stream.writeStream.foreachBatch(
             lambda b, i: join_maintain_batch(
                 b,
@@ -426,10 +428,8 @@ def orders_join_ivm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ["o_orderpriority"],
                 ["l_linenumber", "l_extendedprice"],
             )
-        )
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+        ).trigger(availableNow=True),
+        f"{tmp}/ckpt",
     )
     q.awaitTermination()
     view = read_join_store(spark, f"{tmp}/store", "view")
@@ -649,27 +649,16 @@ def _scd2_stream_fixture(spark: SparkSession, sf_dir: str) -> str:
     batch 0 is the early half, batch 1 the late half (the
     log-compacted-topic ordering contract), pinned via mtimes exactly
     like _scrub_stream_fixture."""
-    import os
-    import tempfile
-
     if sf_dir in _SCD2_STREAM_FIXTURE:
         return _SCD2_STREAM_FIXTURE[sf_dir]
     ev = t(spark, sf_dir, "events").filter(F.col("user_id") < 20)
     split_ts = ev.agg(F.percentile_approx("ts", 0.5, 1000000)).collect()[0][0]
-    src = tempfile.mkdtemp(prefix="scd2_stream_src_")
-    cols = ["user_id", "event_type", "ts", "event_id"]
-    # coalesce(1): a 2-FILE fixture is the point (one micro-batch per
-    # file) — never copy this into a production write path
-    ev.filter(F.col("ts") < split_ts).select(*cols).coalesce(1).write.parquet(
-        f"{src}/f1"
+    ev = ev.select("user_id", "event_type", "ts", "event_id")
+    src = _two_file_fixture(
+        "scd2_stream_src_",
+        ev.filter(F.col("ts") < split_ts),
+        ev.filter(F.col("ts") >= split_ts),
     )
-    ev.filter(F.col("ts") >= split_ts).select(*cols).coalesce(1).write.parquet(
-        f"{src}/f2"
-    )
-    t0 = 1_600_000_000
-    for sub, ts_ in (("f1", t0), ("f2", t0 + 100)):
-        for name in os.listdir(f"{src}/{sub}"):
-            os.utime(f"{src}/{sub}/{name}", (ts_, ts_))
     _SCD2_STREAM_FIXTURE[sf_dir] = src
     return src
 
@@ -719,6 +708,7 @@ def user_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_intervals,
         scd2_batch,
     )
+    from datagouv_tools_spark.streaming.source import start_stream
 
     src = _scd2_stream_fixture(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="scd2_stream_")
@@ -730,16 +720,14 @@ def user_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    q = (
+    q = start_stream(
         stream.writeStream.foreachBatch(
             lambda b, i: scd2_batch(
                 b.sparkSession, b, f"{tmp}/base", f"{tmp}/intervals",
                 n_buckets=8,
             )
-        )
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+        ).trigger(availableNow=True),
+        f"{tmp}/ckpt",
     )
     q.awaitTermination()
     iv = read_intervals(spark, f"{tmp}/intervals")

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from datagouv_tools_spark.operators.ann_index import AnnIndex, index_append
+from datagouv_tools_spark.streaming.source import start_stream
 from datagouv_tools_spark.streaming.store import (
     applied_batch_ids,
     apply_once,
@@ -78,13 +79,9 @@ def stream_index_append(
     rows matching the index meta) into ``index``. ``available_now=True``
     drains the current backlog and stops (the test/replay mode); False
     runs continuously."""
-    writer = (
-        vec_stream.writeStream.foreachBatch(
-            foreach_batch_index_appender(index, run_key_for_checkpoint(checkpoint))
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
+    writer = vec_stream.writeStream.foreachBatch(
+        foreach_batch_index_appender(index, run_key_for_checkpoint(checkpoint))
+    ).outputMode("append")
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(writer, checkpoint)

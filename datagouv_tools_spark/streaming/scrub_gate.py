@@ -41,6 +41,7 @@ from pyspark.sql.streaming import StreamingQuery
 from datagouv_tools_spark.functions.curation import reassembled_kept_text
 from datagouv_tools_spark.operators.dedup import segment_dedup_marks
 from datagouv_tools_spark.streaming import store
+from datagouv_tools_spark.streaming.source import start_stream
 from datagouv_tools_spark.streaming.util import fan_out_batch
 
 __all__ = ["scrub_gate_batch", "stream_scrub"]
@@ -213,14 +214,13 @@ def stream_scrub(
 ) -> StreamingQuery:
     """Start the scrub stream (availableNow: drain backlog and stop);
     ``kwargs`` go to :func:`scrub_gate_batch`."""
-    return (
+    return start_stream(
         doc_stream.writeStream.foreachBatch(
             lambda b, i: scrub_gate_batch(
                 b, store_path, out_path, batch_id=i, **kwargs
             )
         )
-        .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        checkpoint,
     )

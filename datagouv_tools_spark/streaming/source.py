@@ -11,15 +11,31 @@ streaming DataFrame (micro-batched by file, ``maxFilesPerTrigger``).
 test/oracle harness for streaming operators. At 100 TB the same
 pipelines write to kafka/parquet sinks with ``processingTime``
 triggers; only this runner is test-only.
+
+``start_stream`` is the one place the engine starts a stream. It picks
+the checkpoint manager by the checkpoint's filesystem: a local
+(``file:``) checkpoint uses Hadoop's FileSystem-API manager, whose
+log-file commit is one ``rename(2)``, while every other scheme (hdfs,
+s3a, abfs, a non-local ``fs.defaultFS``) keeps Spark's default
+FileContext manager. Without the native Hadoop library, the default
+manager forks ``readlink`` on every local rename and ``chmod`` on
+every create; those forks were a quarter of a small replay's CPU.
+Both managers write a temp file, rename it and keep ``.crc`` files,
+so a checkpoint written by either resumes under the other.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import re
+import threading
 import uuid
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -29,7 +45,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-__all__ = ["events_raw_schema", "read_events_stream", "run_to_memory"]
+__all__ = [
+    "events_raw_schema",
+    "read_events_stream",
+    "run_to_memory",
+    "start_stream",
+]
 
 
 def _events_ts_is_nanos(sf_dir: str) -> bool:
@@ -265,11 +286,13 @@ def run_to_memory(
 
     ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
     stream's state stores (captured at first start, immutable for the
-    checkpoint's lifetime): a fresh bounded replay doesn't need one
-    state store per session core — every state-store instance costs a
-    per-batch open/commit, and stream-stream joins keep FOUR stores per
-    partition — but starving a stateful operator of partitions
-    serializes its (often Python-side) per-row work. The default
+    checkpoint's lifetime; :func:`start_stream` sets it for the
+    ``start()`` call only, so the session keeps its own value): a fresh
+    bounded replay doesn't need one state store per session core —
+    every state-store instance costs a per-batch open/commit, and
+    stream-stream joins keep FOUR stores per partition — but starving
+    a stateful operator of partitions serializes its (often
+    Python-side) per-row work. The default
     ``"auto"`` sizes from the source's file bytes
     (:func:`auto_state_partitions`): tiny test replays get the minimal
     2, data-bearing replays fan out. Pass an int to pin, or None to
@@ -288,23 +311,115 @@ def run_to_memory(
                 f"{state_partitions!r}"
             )
         state_partitions = auto_state_partitions(df)
-    conf_key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(conf_key)
-    if state_partitions is not None:
-        spark.conf.set(conf_key, str(state_partitions))
+    q = start_stream(
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True),
+        state_partitions=state_partitions,
+    )
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        q.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set(conf_key, old)
+        q.stop()
     return spark.table(name)
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+#: Hadoop FileSystem-API checkpoint manager: Spark 4.1 moved it into
+#: the ``checkpointing`` package, and Spark rejects a start whose
+#: manager class it cannot load, so the first loadable name wins.
+_FS_MANAGER_CLASSES = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager",
+    "org.apache.spark.sql.execution.streaming."
+    "FileSystemBasedCheckpointFileManager",
+)
+#: Serializes start windows: the overrides are session-global, and two
+#: interleaved save/restore pairs would leave one thread's value set.
+_START_LOCK = threading.Lock()
+
+
+@functools.cache
+def _fs_manager_class() -> str | None:
+    """The FileSystem manager name the gateway JVM loads, or None. Asked
+    once per process: the gateway JVM outlives its SparkContexts."""
+    utils = SparkContext._jvm.org.apache.spark.util.Utils
+    return next((c for c in _FS_MANAGER_CLASSES if utils.classIsLoadable(c)), None)
+
+
+def _uri_scheme(path: str) -> str | None:
+    """Scheme of a Hadoop path string: the text before a ``:`` that
+    comes before any ``/`` (``Path``'s rule), lower-cased."""
+    m = re.match(r"([A-Za-z][A-Za-z0-9+.-]*):", path)
+    return m.group(1).lower() if m else None
+
+
+def _checkpoint_scheme(
+    checkpoint: str | None, session_root: str | None, default_fs: str | None
+) -> str:
+    """Filesystem scheme of the checkpoint a starting query will use:
+    the explicit ``checkpoint``, else one under the session's
+    ``spark.sql.streaming.checkpointLocation`` root, else Spark's local
+    temp dir. A scheme-less path (the temp dir is one) resolves against
+    ``fs.defaultFS``, as Hadoop resolves a ``Path``."""
+    path = checkpoint or session_root
+    return (path and _uri_scheme(path)) or _uri_scheme(default_fs or "") or "file"
+
+
+def _checkpoint_manager(spark: SparkSession, checkpoint: str | None) -> str | None:
+    """The manager class :func:`start_stream` sets, or None to leave the
+    session's choice alone: a manager the caller set stays, and only a
+    ``file`` checkpoint gets the FileSystem manager."""
+    conf = spark.conf
+    if conf.get(_MANAGER_KEY, None) is not None:
+        return None
+    default_fs = spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+    root = conf.get("spark.sql.streaming.checkpointLocation", None)
+    if _checkpoint_scheme(checkpoint, root, default_fs) != "file":
+        return None
+    return _fs_manager_class()
+
+
+def start_stream(
+    writer: DataStreamWriter,
+    checkpoint: str | None = None,
+    state_partitions: int | None = None,
+) -> StreamingQuery:
+    """Start ``writer``'s query with the checkpoint manager its
+    checkpoint's filesystem calls for (module docstring).
+
+    ``checkpoint`` becomes the ``checkpointLocation`` option; without
+    one the query checkpoints under the session root or a temp dir.
+    ``state_partitions``, when given, pins
+    ``spark.sql.shuffle.partitions`` for the query's state.
+
+    Both overrides hold for the ``start()`` call only, inside one
+    process-wide lock, and the session's own values come back after
+    it: the query keeps them for its whole life because
+    ``StreamExecution`` clones the session at start. The window never
+    covers ``awaitTermination()``, so a batch body may start a stream
+    of its own."""
+    spark = writer._spark
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with _START_LOCK:
+        overrides = {}
+        if state_partitions is not None:
+            overrides[_SHUFFLE_KEY] = str(state_partitions)
+        manager = _checkpoint_manager(spark, checkpoint)
+        if manager is not None:
+            overrides[_MANAGER_KEY] = manager
+        conf = spark.conf
+        saved = {k: conf.get(k, None) for k in overrides}
+        for k, v in overrides.items():
+            conf.set(k, v)
+        try:
+            return writer.start()
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
