@@ -702,6 +702,7 @@ def user_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per batch O(touched buckets' events) — an hour's CDC
     touches an hour's keys, not the table's history; serving reads are
     partition-pruned by the same bucket hash."""
+    import shutil
     import tempfile
 
     from datagouv_tools_spark.streaming.scd2_maintain import (
@@ -731,11 +732,17 @@ def user_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     iv = read_intervals(spark, f"{tmp}/intervals")
-    return iv.select(
-        "user_id",
-        F.col("event_type").alias("state"),
-        "island",
-        "valid_from",
-        "valid_to",
-        "n_events",
-    ).orderBy("user_id", "valid_from")
+    result = (
+        iv.select(
+            "user_id",
+            F.col("event_type").alias("state"),
+            "island",
+            "valid_from",
+            "valid_to",
+            "n_events",
+        )
+        .orderBy("user_id", "valid_from")
+        .localCheckpoint()
+    )
+    shutil.rmtree(tmp, ignore_errors=True)
+    return result

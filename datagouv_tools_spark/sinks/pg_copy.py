@@ -3,11 +3,19 @@
 Spark's JDBC writer only does batched INSERT; the reference's COPY FROM
 STDIN is ~10× faster for bulk loads. The cluster-correct shape:
 
-    df.foreachPartition(partition → psycopg.copy_expert(COPY ..., csv))
+    df.mapInArrow(partition's record batches → Arrow CSV → COPY ...)
 
 Each executor task opens its own connection and streams its partition
 as CSV — the reference's "one connection per consumer thread"
-(import_fantoir.py:242-249) generalized to N partitions.
+(import_fantoir.py:242-249) generalized to N partitions. The rows never
+become Python objects: Arrow's CSV writer renders each record batch in
+PostgreSQL's CSV dialect (NULL unquoted and empty, ``''`` as ``""``,
+doubled quotes, raw newlines inside quoted fields, ISO dates and
+timestamps, exact decimals, round-trip floats with ``nan``/``inf``).
+The two types it renders differently from COPY's input syntax are
+projected JVM-side first (``_copy_columns``): bytea as ``\\x`` hex,
+day-time intervals in the day-plus-time text the sink has always
+stored. An empty partition opens no connection.
 
 Driver dispatch: psycopg 3 (``cursor.copy()`` context) when present,
 else pg8000 — the reference's own driver (reference setup.py) — whose
@@ -15,9 +23,13 @@ DB-API cursor streams COPY via ``execute(sql, stream=file_like)``,
 else the ``psql`` CLI (``PsqlCliConnection``): the identical CSV byte
 stream is piped to ``psql -c "COPY ... FROM STDIN"``'s stdin, one
 subprocess per partition stream — for environments that ship the
-PostgreSQL client binary but no Python driver. The CSV serialization,
-COPY statement text, and per-driver call sequences are additionally
-unit-tested against mocked connections (the reference's
+PostgreSQL client binary but no Python driver. The transport runs the
+client binary itself, not Debian's Perl ``pg_wrapper`` in front of it,
+whenever the DSN pins the server (``_psql_binaries``): the wrapper costs
+about 15 of the ~20 ms of CPU a psql process takes. It always passes
+``-X``, so no ``psqlrc`` can add output to a captured result. The CSV
+serialization, COPY statement text, and per-driver call sequences are
+additionally unit-tested against mocked connections (the reference's
 tests/sql/test_postgres.py pattern), and the whole load runs live in
 ``tests/test_schema.py::test_write_sql_table_copy_live_postgres``
 against a real server (PGHOST, or one the tests start).
@@ -28,9 +40,10 @@ session settings that fix how dates, intervals and bytea are rendered,
 and yields the server's bytes (psql CLI: the captured stdout; psycopg 3:
 iterating ``cursor.copy``; pg8000: ``execute(sql, stream=<writable>)``).
 ``csv_batches`` decodes COPY-CSV bytes into Arrow record batches, so
-the read side of the CSV dialect lives next to its write side
-(``rows_to_csv_chunks``). ``sources/pg_read.py`` pulls each slice of a
-distributed read through the two.
+the transport speaks one CSV dialect, through Arrow in both directions
+(``csv_chunks`` writes it). ``sources/pg_read.py`` pulls each slice of
+a distributed read through the two, and the psql cursor's row fetch
+goes through them as well.
 
 Transactionality at scale: per-partition COPY commits once per
 partition, which loses the single commit point of the reference. So
@@ -43,54 +56,76 @@ and a failed partition leaves the old table as it was (SURVEY §7.4).
 
 from __future__ import annotations
 
+import functools
 import io
 import itertools
+import re
 from typing import Iterable, Iterator
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datagouv_tools_spark.schema.ddl import PostgresDialect
 
 __all__ = [
-    "rows_to_csv_chunks", "copy_partition", "copy_dataframe", "copy_out", "csv_batches",
+    "csv_chunks", "copy_partition", "copy_dataframe", "copy_out", "csv_batches",
 ]
 
-_CHUNK_BYTES = 1 << 20
 
-
-def _csv_field(v) -> str:
-    """One COPY-CSV field with PostgreSQL's NULL/empty distinction:
-    NULL → unquoted empty; empty string → quoted ``""`` (csv.writer's
-    QUOTE_MINIMAL writes '' unquoted, which COPY would load as NULL —
-    silent data corruption for text columns); anything containing a
-    delimiter, quote, or newline is quoted with '""' doubling."""
-    if v is None:
-        return ""
-    s = str(v)
-    if s == "" or any(c in s for c in ',"\n\r'):
-        return '"' + s.replace('"', '""') + '"'
-    return s
-
-
-def rows_to_csv_chunks(
-    rows: Iterable[Row], chunk_bytes: int = _CHUNK_BYTES
-) -> Iterator[bytes]:
-    """Serialize rows to CSV byte chunks suitable for COPY FROM STDIN
-    (FORMAT CSV, no header — column order fixed by the DataFrame).
+def csv_chunks(batches) -> Iterator[bytes]:
+    """COPY-CSV bytes (FORMAT CSV, no header — column order fixed by the
+    batches' schema) of Arrow record batches, one chunk per batch.
 
     Framing is validated end-to-end by a second, non-Python parser:
     tests round-trip the exact streamed bytes through DuckDB's
     ``read_csv`` (tests/test_schema.py)."""
-    buf = io.StringIO()
-    for row in rows:
-        buf.write(",".join(_csv_field(v) for v in row))
-        buf.write("\n")
-        if buf.tell() >= chunk_bytes:
-            yield buf.getvalue().encode("utf-8")
-            buf.seek(0)
-            buf.truncate()
-    if buf.tell():
-        yield buf.getvalue().encode("utf-8")
+    import pyarrow as pa
+    from pyarrow import csv
+
+    options = csv.WriteOptions(include_header=False, quoting_style="needed")
+    for batch in batches:
+        sink = pa.BufferOutputStream()
+        csv.write_csv(batch, sink, options)
+        yield sink.getvalue().to_pybytes()
+
+
+def _timedelta_text(col: Column) -> Column:
+    """A day-time interval as Python's ``str(timedelta)`` (``-1 day,
+    23:00:00``, ``2 days, 0:00:00.000500``): floored days, then a
+    non-negative time of day. PostgreSQL reads it as the same interval,
+    where Arrow would write bare microseconds, which it reads as
+    seconds."""
+    secs = col.cast(T.DayTimeIntervalType(3, 3)).cast("decimal(20,6)")
+    days = F.floor(secs / 86400)
+    t = secs - days * 86400
+    micros = (t % 1 * 1_000_000).cast("int")
+    return F.concat(
+        F.when(days != 0, F.concat(days, F.when(F.abs(days) == 1, " day, ").otherwise(" days, ")))
+        .otherwise(""),
+        F.floor(t / 3600), F.lit(":"),
+        F.lpad(F.floor(t / 60 % 60).cast("string"), 2, "0"), F.lit(":"),
+        F.lpad(F.floor(t % 60).cast("string"), 2, "0"),
+        F.when(micros != 0, F.concat(F.lit("."), F.lpad(micros.cast("string"), 6, "0")))
+        .otherwise(""),
+    )
+
+
+def _copy_columns(schema: T.StructType) -> list[Column]:
+    """The columns of ``schema`` as COPY reads them, named by position
+    (COPY matches columns by order, and ``mapInArrow`` cannot take a
+    name with a dot or backtick): bytea as ``\\x`` + hex (Arrow writes
+    the raw bytes), day-time intervals as ``_timedelta_text``; every
+    other type as Arrow's CSV writer renders it."""
+    cols = []
+    for i, f in enumerate(schema.fields):
+        c = F.col("`" + f.name.replace("`", "``") + "`")
+        if isinstance(f.dataType, T.BinaryType):
+            c = F.concat(F.lit("\\x"), F.hex(c))
+        elif isinstance(f.dataType, T.DayTimeIntervalType):
+            c = _timedelta_text(c)
+        cols.append(c.alias(f"_{i}"))
+    return cols
 
 
 def _parse_dsn(dsn: str) -> dict:
@@ -123,9 +158,7 @@ def _connect(dsn: str):
         return pg8000.dbapi.connect(**_parse_dsn(dsn))
     except ImportError:
         pass
-    import shutil
-
-    if shutil.which("psql"):
+    if _psql_binaries():
         return PsqlCliConnection(dsn)
     raise ImportError(
         "PostgreSQL COPY fast path needs psycopg, pg8000, or the psql "
@@ -133,42 +166,70 @@ def _connect(dsn: str):
     )
 
 
-_COPY_TEXT_UNESCAPE = {
-    "n": "\n",
-    "t": "\t",
-    "r": "\r",
-    "b": "\b",
-    "f": "\f",
-    "v": "\v",
-    "\\": "\\",
-}
+#: where Debian's postgresql-client-<version> packages put their binaries
+_PG_LIB = "/usr/lib/postgresql"
 
 
-def _parse_copy_text(out: str) -> list[tuple]:
-    """Parse ``COPY ... TO STDOUT`` text-format output: tab-separated
-    fields, ``\\N`` for NULL, backslash escapes for control bytes —
-    the only psql output format that round-trips NULL-vs-empty and
-    embedded newlines losslessly."""
+@functools.lru_cache(maxsize=None)
+def _psql_binaries() -> tuple[str, str] | None:
+    """``(psql, direct)``: the ``psql`` on PATH, and the binary to run
+    for a DSN that pins its server — resolved once per process, None
+    when there is no psql.
 
-    def unescape(field: str):
-        if field == "\\N":
-            return None
-        chars: list[str] = []
-        i = 0
-        while i < len(field):
-            if field[i] == "\\" and i + 1 < len(field):
-                chars.append(_COPY_TEXT_UNESCAPE.get(field[i + 1], field[i + 1]))
-                i += 2
-            else:
-                chars.append(field[i])
-                i += 1
-        return "".join(chars)
+    On Debian, ``psql`` is a link to ``postgresql-common/pg_wrapper``,
+    a Perl script that picks a cluster, may export ``PGHOST``,
+    ``PGPORT`` and ``PGDATABASE`` defaults, and then always execs the
+    newest ``<_PG_LIB>/<version>/bin/psql``. That binary is ``direct``;
+    elsewhere ``direct`` is ``psql`` itself."""
+    import glob
+    import os
+    import shutil
 
-    return [
-        tuple(unescape(f) for f in line.split("\t"))
-        for line in out.split("\n")
-        if line != ""
-    ]
+    psql = shutil.which("psql")
+    if psql is None:
+        return None
+    if os.path.realpath(psql).endswith("/postgresql-common/pg_wrapper"):
+        def version(path: str) -> list[int]:
+            return [int(v) for v in path.split("/")[-3].split(".") if v.isdigit()]
+
+        found = glob.glob(f"{_PG_LIB}/*/bin/psql")
+        if found:
+            return psql, max(found, key=version)
+    return psql, psql
+
+
+def _pins_server(dsn: str) -> bool:
+    """Whether ``dsn`` sets host, port and dbname and names no service,
+    so no ``PGHOST``/``PGPORT``/``PGDATABASE`` default can change where
+    it connects.
+
+    >>> _pins_server("postgresql://u@localhost:5432/db")
+    True
+    >>> _pins_server("postgresql://u@localhost/db")
+    False
+    >>> _pins_server("postgresql://u@h:5432/db?service=s")
+    False
+    >>> _pins_server("host=h port=5432 dbname=db user=u")
+    True
+    >>> _pins_server("dbname=db")
+    False
+    """
+    from urllib.parse import parse_qsl, urlsplit
+
+    if dsn.startswith(("postgresql://", "postgres://")):
+        parts = urlsplit(dsn)
+        try:
+            port = parts.port
+        except ValueError:  # not a number: leave it to libpq
+            port = None
+        keys = {"host": parts.hostname, "port": port, "dbname": parts.path.lstrip("/")}
+        keys.update(parse_qsl(parts.query))
+    else:
+        keys = {
+            m.group(1): m.group(2)
+            for m in re.finditer(r"(\w+)\s*=\s*('(?:[^'\\]|\\.)*'|\S+)", dsn)
+        }
+    return "service" not in keys and all(keys.get(k) for k in ("host", "port", "dbname"))
 
 
 def _split_dsn_password(dsn: str) -> tuple[str, str | None]:
@@ -186,7 +247,6 @@ def _split_dsn_password(dsn: str) -> tuple[str, str | None]:
     >>> _split_dsn_password("postgresql://u:p@[::1]:5432/db")
     ('postgresql://u@[::1]:5432/db', 'p')
     """
-    import re
     from urllib.parse import unquote, urlsplit, urlunsplit
 
     if dsn.startswith(("postgresql://", "postgres://")):
@@ -224,7 +284,7 @@ class PsqlCliCursor:
         s = sql.lstrip()
         first = s.split(None, 1)[0].upper() if s else ""
         if first in self._FETCH_PREFIXES:
-            # lossless fetch path: route the query through COPY TEXT.
+            # lossless fetch path: the query's COPY-CSV, read by Arrow.
             # COPY's grammar only admits SELECT/VALUES/WITH, so SHOW
             # and TABLE are rewritten to their exact SELECT equivalents
             q = s.rstrip(";").rstrip()
@@ -233,9 +293,15 @@ class PsqlCliCursor:
                 q = f"SELECT current_setting('{setting}')"
             elif first == "TABLE":
                 q = "SELECT * FROM " + q.split(None, 1)[1]
-            self._conn._flush()
-            out = self._conn._run_capture(f"COPY ({q}) TO STDOUT")
-            self._rows = _parse_copy_text(out)
+            # no output settings: values as the session renders them,
+            # and SHOW reports the session's own setting
+            body = b"".join(copy_out(self._conn, q, settings=()))
+            columns = [f"c{i}" for i in range(_csv_width(body))]
+            self._rows = [
+                row
+                for batch in csv_batches([body], columns)
+                for row in zip(*(col.to_pylist() for col in batch.columns))
+            ]
         else:
             # queue DDL/DML; conn.commit() flushes the whole batch in
             # ONE transaction (psql --single-transaction), so the swap
@@ -275,7 +341,8 @@ class PsqlCliConnection:
     Statements queue until ``commit()``, which replays them inside one
     ``psql --single-transaction`` invocation; COPY streams the chunk
     iterator straight into the subprocess's stdin. All the byte-level
-    framing (``rows_to_csv_chunks``) is shared with the driver paths."""
+    framing (``csv_chunks``, ``csv_batches``) is shared with the driver
+    paths."""
 
     def __init__(self, dsn: str):
         # never put credentials in argv: process listings on shared
@@ -284,9 +351,13 @@ class PsqlCliConnection:
         # in the subprocess environment instead.
         self._dsn, self._password = _split_dsn_password(dsn)
         self._pending: list[str] = []
+        psql, direct = _psql_binaries() or ("psql", "psql")
+        self._psql = direct if _pins_server(self._dsn) else psql
 
     def _argv(self, *extra: str) -> list[str]:
-        return ["psql", self._dsn, "-v", "ON_ERROR_STOP=1", "-q", *extra]
+        # -X: no psqlrc, whose settings (\timing, \set ECHO ...) would
+        # print into a captured COPY stream
+        return [self._psql, self._dsn, "-X", "-v", "ON_ERROR_STOP=1", "-q", *extra]
 
     def _env(self) -> dict[str, str]:
         import os
@@ -425,19 +496,21 @@ _COPY_OUT_SETTINGS = (
 )
 
 
-def copy_out(conn, query: str) -> Iterator[bytes]:
+def copy_out(
+    conn, query: str, settings: Iterable[str] = _COPY_OUT_SETTINGS
+) -> Iterator[bytes]:
     """Yield the UTF-8 COPY-CSV bytes of ``query``'s rows (the dialect
-    ``csv_batches`` reads) on an open connection, after
-    ``_COPY_OUT_SETTINGS``, dispatching like ``_copy_with_connection``:
-    the psql CLI and pg8000 hand back the whole stream at once,
-    psycopg 3 yields it block by block as the server sends it."""
+    ``csv_batches`` reads) on an open connection, after ``settings``,
+    dispatching like ``_copy_with_connection``: the psql CLI and pg8000
+    hand back the whole stream at once, psycopg 3 yields it block by
+    block as the server sends it."""
     copy_sql = f"COPY ({query}) TO STDOUT (FORMAT csv, ENCODING 'UTF8')"
     cur = conn.cursor()
     try:
         if hasattr(cur, "copy_stdout"):  # psql CLI transport
-            yield cur.copy_stdout(copy_sql, _COPY_OUT_SETTINGS)
+            yield cur.copy_stdout(copy_sql, settings)
             return
-        for setting in _COPY_OUT_SETTINGS:
+        for setting in settings:
             cur.execute(setting)
         if hasattr(cur, "copy"):  # psycopg 3
             with cur.copy(copy_sql) as copy:
@@ -490,12 +563,36 @@ def csv_batches(chunks: Iterable[bytes], columns: list[str]):
     )
 
 
-def copy_partition(dsn: str, copy_sql: str, rows: Iterable[Row], connect=None) -> None:
-    """Executor-side body: one connection, one COPY stream per
-    partition. ``connect`` is injectable for tests."""
+#: one COPY-CSV field: quoted (``""`` an escaped quote) or bare
+_CSV_FIELD = re.compile(rb'"(?:[^"]|"")*"|[^,"\n]*')
+
+
+def _csv_width(body: bytes) -> int:
+    """Fields in the first record of a COPY-CSV ``body`` — the column
+    count of a result whose columns the caller does not know.
+
+    >>> _csv_width(b'1,"a,\\n""b",\\n2,x,y\\n')
+    3
+    >>> _csv_width(b"\\n")
+    1
+    """
+    width, pos = 1, _CSV_FIELD.match(body).end()
+    while body[pos : pos + 1] == b",":
+        width, pos = width + 1, _CSV_FIELD.match(body, pos + 1).end()
+    return width
+
+
+def copy_partition(dsn: str, copy_sql: str, batches, connect=None) -> None:
+    """Executor-side body: one connection, one COPY stream of the
+    partition's Arrow record batches, one commit. A partition without
+    rows opens no connection. ``connect`` is injectable for tests."""
+    chunks = csv_chunks(b for b in batches if b.num_rows)
+    first = next(chunks, None)
+    if first is None:
+        return
     conn = (connect or _connect)(dsn)
     try:
-        _copy_with_connection(conn, copy_sql, rows_to_csv_chunks(rows))
+        _copy_with_connection(conn, copy_sql, itertools.chain([first], chunks))
         conn.commit()
     finally:
         conn.close()
@@ -503,12 +600,13 @@ def copy_partition(dsn: str, copy_sql: str, rows: Iterable[Row], connect=None) -
 
 def copy_dataframe(df: DataFrame, dsn: str, table: str, num_partitions: int | None = None) -> None:
     """Distributed COPY: every partition streams concurrently."""
-    dialect = PostgresDialect()
-    copy_sql = dialect.copy_from_csv(table, header=False)
+    copy_sql = PostgresDialect().copy_from_csv(table, header=False)
     if num_partitions:
         df = df.repartition(num_partitions)
 
-    def run(partition: Iterable[Row]) -> None:
-        copy_partition(dsn, copy_sql, partition)
+    def run(batches):
+        copy_partition(dsn, copy_sql, batches)
+        return iter(())
 
-    df.foreachPartition(run)
+    # the output is empty: collect() only runs every partition's COPY
+    df.select(_copy_columns(df.schema)).mapInArrow(run, "done boolean").collect()

@@ -110,3 +110,27 @@ def pg_dsn():
     finally:
         sh(f"{pg_ctl} -D {d}/data -m immediate stop")
         shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture
+def git_snapshot(tmp_path) -> dict[str, str]:
+    """``GIT_DIR``/``GIT_WORK_TREE`` of a throwaway repository under
+    ``tmp_path`` whose HEAD commits this tree as it is on disk, so a
+    ``git`` subprocess given them works the same in a checkout and in
+    an exported tree (``git archive``), and writes nothing to the tree."""
+    import os
+    import subprocess
+    from pathlib import Path
+
+    env = {
+        "GIT_DIR": str(tmp_path / "snapshot.git"),
+        "GIT_WORK_TREE": str(Path(__file__).resolve().parent.parent),
+    }
+    for args in (
+        ["init", "-q"],
+        ["add", "-A"],
+        ["-c", "user.name=tests", "-c", "user.email=tests@localhost",
+         "-c", "commit.gpgsign=false", "commit", "-q", "--no-verify", "-m", "snapshot"],
+    ):
+        subprocess.run(["git", *args], env={**os.environ, **env}, check=True, capture_output=True)
+    return env

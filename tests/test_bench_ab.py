@@ -17,10 +17,11 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 
-def test_ab_self_compare_shape(tmp_path):
+def test_ab_self_compare_shape(tmp_path, git_snapshot):
     out = tmp_path / "ab.json"
     env = dict(
         os.environ,
+        **git_snapshot,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_AB_PASSES="1",
         SPARK_GRAFT_AB_QUERIES="q6_forecast_revenue",

@@ -70,6 +70,18 @@ _HOSTILE_TEXT = [
 ]
 
 
+def _csv(rows, columns) -> bytes:
+    """The COPY-CSV bytes the load path writes for ``rows`` of text."""
+    import pyarrow as pa
+
+    from datagouv_tools_spark.sinks.pg_copy import csv_chunks
+
+    batch = pa.record_batch(
+        [pa.array(col, pa.string()) for col in zip(*rows)], names=columns
+    )
+    return b"".join(csv_chunks([batch]))
+
+
 def _load(df, dsn: str, table: str) -> None:
     """Load ``df`` into ``table`` through the import pipelines' sink."""
     from datagouv_tools_spark.schema.ddl import EmptyIndexProvider
@@ -99,12 +111,10 @@ def test_csv_batches_decode_postgres_csv_at_any_chunk_boundary():
     The COPY-in serializer writes the same CSV dialect as the server.
     With one column, PostgreSQL writes a NULL as an empty line, which
     must read as a NULL row, not be skipped."""
-    from datagouv_tools_spark.sinks.pg_copy import rows_to_csv_chunks
-
     two = [(str(i), v) for i, v in enumerate(_HOSTILE_TEXT)]
     one = [(v,) for v in [None, *_HOSTILE_TEXT, None]]
     for rows, columns in ((two, ["id", "s"]), (one, ["s"])):
-        body = b"".join(rows_to_csv_chunks(rows))
+        body = _csv(rows, columns)
         for size in (1, 3, 7, len(body)):
             chunks = [body[i : i + size] for i in range(0, len(body), size)]
             got = [
@@ -113,7 +123,7 @@ def test_csv_batches_decode_postgres_csv_at_any_chunk_boundary():
                 for d in b.to_pylist()
             ]
             assert got == rows, (columns, size)
-    assert b"\n\n" in b"".join(rows_to_csv_chunks(one))
+    assert b"\n\n" in _csv(one, ["s"])
     # an empty slice yields no batch (Arrow rejects an empty CSV)
     assert list(csv_batches(iter([b"", b""]), ["id", "s"])) == []
 
@@ -122,12 +132,10 @@ def test_csv_batches_decode_rows_larger_than_arrows_default_block():
     """Rows of several MiB decode whether the stream arrives as one
     chunk (psql CLI, pg8000) or in small pieces (psycopg 3). Arrow's
     default 1 MiB block raises 'straddling object' on either."""
-    from datagouv_tools_spark.sinks.pg_copy import rows_to_csv_chunks
-
     big = "x" * (3 << 20)
     hexed = "\\x" + "ab" * (3 << 20)  # a 3 MiB bytea is 6 MiB of hex
     rows = [("1", big), ("2", None), ("3", hexed), ("4", 'q"' + big)]
-    body = b"".join(rows_to_csv_chunks(rows))
+    body = _csv(rows, ["id", "s"])
     for size in (1 << 16, len(body)):
         chunks = [body[i : i + size] for i in range(0, len(body), size)]
         got = [
@@ -517,3 +525,27 @@ def test_slice_predicates_tile_exactly_property():
         assert sum(1 for p in preds if matches(p, None)) == 1
 
     check()
+
+
+def test_psqlrc_output_never_reaches_a_read_live(spark, pg_dsn, tmp_path, monkeypatch):
+    """A psqlrc that prints (``\\timing on`` writes a ``Time: ...`` line
+    to stdout after each command) changes neither the catalog query
+    behind schema inference nor a sliced read-back, in the driver or in
+    the Python workers."""
+    from datagouv_tools_spark.sources.pg_read import pg_table_schema
+
+    rc = tmp_path / "psqlrc"
+    rc.write_text("\\timing on\n\\pset footer on\n")
+    table = "dg_spark_read_psqlrc"
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(20)], "id int, s string")
+    _load(df, pg_dsn, table)
+    monkeypatch.setenv("PSQLRC", str(rc))
+    monkeypatch.setitem(spark.sparkContext.environment, "PSQLRC", str(rc))
+    try:
+        assert pg_table_schema(pg_dsn, table) == T.StructType(
+            [T.StructField("id", T.IntegerType()), T.StructField("s", T.StringType())]
+        )
+        got = read_pg_parallel(spark, pg_dsn, table, partition_column="id", num_partitions=2)
+        assert Counter(got.collect()) == Counter(df.collect())
+    finally:
+        _drop_table(pg_dsn, table)

@@ -3,7 +3,9 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import io
+from decimal import Decimal as D
 
 import pytest
 from pyspark.sql import types as T
@@ -184,7 +186,7 @@ def test_copy_partition_pg8000_streams_csv():
     """pg8000 cursors have no .copy() — the loader must dispatch to
     execute(copy_sql, stream=<file-like>) and the stream must yield the
     partition's CSV bytes."""
-    from pyspark.sql import Row
+    import pyarrow as pa
 
     from datagouv_tools_spark.sinks.pg_copy import copy_partition
 
@@ -207,23 +209,25 @@ def test_copy_partition_pg8000_streams_csv():
         def close(self):
             calls.append(("conn.close",))
 
-    rows = [Row(a=1, b="x"), Row(a=None, b='say "hi"')]
+    batch = pa.record_batch({"a": [1, None], "b": ["x", 'say "hi"']})
     copy_partition(
         "postgresql://u@h/db",
         'COPY "t" FROM STDIN WITH (FORMAT CSV)',
-        rows,
+        [batch],
         connect=lambda dsn: Conn(),
     )
     assert [c[0] for c in calls] == ["execute", "cursor.close", "commit", "conn.close"]
     _, sql, body = calls[0]
     assert sql.startswith('COPY "t" FROM STDIN')
-    assert body == b'1,x\n,"say ""hi"""\n'  # NULL -> empty unquoted field
+    # NULL -> empty unquoted field; Arrow quotes every string value
+    assert body == b'1,"x"\n,"say ""hi"""\n'
 
 
 def test_copy_partition_psycopg_uses_copy_context():
     """psycopg 3 cursors expose .copy(sql) as a context manager; chunks
-    are written through it and the connection commits once."""
-    from pyspark.sql import Row
+    are written through it and the connection commits once. A partition
+    without rows opens no connection."""
+    import pyarrow as pa
 
     from datagouv_tools_spark.sinks.pg_copy import copy_partition
 
@@ -257,16 +261,19 @@ def test_copy_partition_psycopg_uses_copy_context():
         def close(self):
             calls.append(("conn.close",))
 
-    copy_partition(
-        "postgresql://u@h/db",
-        'COPY "t" FROM STDIN WITH (FORMAT CSV)',
-        [Row(a=1)],
-        connect=lambda dsn: Conn(),
-    )
+    copy_sql = 'COPY "t" FROM STDIN WITH (FORMAT CSV)'
+    batch = pa.record_batch({"a": [1]})
+    copy_partition("postgresql://u@h/db", copy_sql, [batch], connect=lambda dsn: Conn())
     assert [c[0] for c in calls] == [
         "copy", "write", "copy.exit", "cursor.close", "commit", "conn.close",
     ]
     assert calls[1][1] == b"1\n"
+
+    def no_connection(dsn):
+        raise AssertionError("an empty partition connected")
+
+    for batches in ([], [batch.slice(0, 0)]):
+        copy_partition("postgresql://u@h/db", copy_sql, batches, connect=no_connection)
 
 
 def test_copy_out_psycopg_iterates_copy_blocks():
@@ -463,7 +470,8 @@ def test_copy_csv_bytes_roundtrip_duckdb(spark, tmp_path):
 
     from datagouv_tools_spark.sinks.pg_copy import (
         _ChunkStream,
-        rows_to_csv_chunks,
+        _copy_columns,
+        csv_chunks,
     )
 
     df = spark.createDataFrame(
@@ -478,10 +486,11 @@ def test_copy_csv_bytes_roundtrip_duckdb(spark, tmp_path):
         "id int, label string, x double, ts timestamp_ntz",
     )
     rows = df.orderBy("id").collect()
+    table = df.select(_copy_columns(df.schema)).orderBy("id").toArrow()
 
-    # chunk_bytes=16 forces many tiny chunks; read(7) forces misaligned
+    # one-row batches force many tiny chunks; read(7) forces misaligned
     # reassembly — the worst case a DB driver would exercise
-    stream = _ChunkStream(rows_to_csv_chunks(rows, chunk_bytes=16))
+    stream = _ChunkStream(csv_chunks(table.to_batches(max_chunksize=1)))
     got = bytearray()
     while True:
         piece = stream.read(7)
@@ -531,11 +540,11 @@ def test_copy_csv_empty_string_vs_null():
     """PostgreSQL COPY CSV semantics: unquoted empty = NULL, quoted
     "" = empty string. csv.writer's QUOTE_MINIMAL conflates them (both
     unquoted) — the serializer must not."""
-    from pyspark.sql import Row
+    import pyarrow as pa
 
-    from datagouv_tools_spark.sinks.pg_copy import rows_to_csv_chunks
+    from datagouv_tools_spark.sinks.pg_copy import csv_chunks
 
-    body = b"".join(rows_to_csv_chunks([Row(a=1, b=""), Row(a=2, b=None)]))
+    body = b"".join(csv_chunks([pa.record_batch({"a": [1, 2], "b": ["", None]})]))
     assert body == b'1,""\n2,\n'
 
 
@@ -755,7 +764,7 @@ def test_copy_csv_adversarial_strings_roundtrip_live(spark, pg_dsn):
     """Adversarial text through the real COPY path: every CSV-framing
     and COPY-TEXT-escaping hazard (delimiters, quotes, CR/LF, tabs,
     backslashes, unicode, the empty-vs-NULL distinction) must survive
-    Spark -> rows_to_csv_chunks -> COPY FROM STDIN -> SELECT back via
+    Spark -> Arrow CSV (csv_chunks) -> COPY FROM STDIN -> SELECT back via
     the CLI transport byte-for-byte."""
     from datagouv_tools_spark.schema.ddl import EmptyIndexProvider
     from datagouv_tools_spark.sinks.pg_copy import _connect
@@ -790,6 +799,99 @@ def test_copy_csv_adversarial_strings_roundtrip_live(spark, pg_dsn):
     finally:
         conn.close()
     assert got == nasty
+
+
+#: five values per Spark type of ``SQL_TYPES``, each column with a NULL
+_VALUES_BY_TYPE = {
+    "smallint": [-32768, 0, 32767, 7, None],
+    "int": [-(2**31), 0, 2**31 - 1, 7, None],
+    "bigint": [-(2**63), 0, 2**63 - 1, 7, None],
+    "decimal(38,9)": [
+        D("-12345678901234567890123456789.123456789"), D("0.000000001"),
+        D("0E-9"), D("1.5"), None,
+    ],
+    "decimal(19,2)": [D("-99999999999999999.99"), D("0.10"), D("0.00"), D("1"), None],
+    "float": [0.1, float("nan"), float("inf"), float("-inf"), None],
+    "double": [1e-300, float("nan"), float("inf"), float("-inf"), None],
+    "string": ["plain", "", 'q"uote, comma\nnew\rline', "\\N back\\slash", None],
+    "binary": [
+        bytearray(b"\x00\xff"), bytearray(b""), bytearray(b',"\n\r\\'),
+        bytearray(b"abc"), None,
+    ],
+    "timestamp_ntz": [
+        dt.datetime(1999, 12, 31, 23, 59, 59, 999999), dt.datetime(2024, 1, 2, 3, 4, 5),
+        dt.datetime(1900, 1, 1), dt.datetime(2024, 2, 29, 12, 0, 0, 500), None,
+    ],
+    "timestamp": [
+        dt.datetime(1999, 12, 31, 23, 59, 59, 999999), dt.datetime(2024, 1, 2, 3, 4, 5),
+        dt.datetime(1900, 1, 1), dt.datetime(2024, 7, 1, 12, 0, 0, 500), None,
+    ],
+    "date": [dt.date(1970, 1, 1), dt.date(2024, 2, 29), dt.date(1, 1, 1), dt.date(9999, 12, 31), None],
+    "interval day to second": [
+        dt.timedelta(days=1, hours=2), dt.timedelta(hours=-1),
+        dt.timedelta(days=-3, microseconds=5), dt.timedelta(0), None,
+    ],
+    "boolean": [True, False, True, False, None],
+}
+
+
+def test_write_sql_table_every_sql_type_roundtrip_live(spark, pg_dsn):
+    """One column of each Spark type in ``SQL_TYPES`` goes through the
+    COPY load and reads back equal: NULL, '' and text COPY escapes,
+    NaN and ±inf, tz and NTZ timestamps, bytea (read back as ``\\x``
+    hex) and a day-time interval, which the DDL stores as text in
+    ``str(timedelta)`` form. The same interval into an ``interval``
+    column holds the same duration."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from datagouv_tools_spark.schema.ddl import EmptyIndexProvider
+    from datagouv_tools_spark.sinks.sink import write_sql_table
+    from datagouv_tools_spark.sources.pg_read import read_pg_parallel
+
+    types = list({t.spark_type.simpleString(): t.spark_type for t in SQL_TYPES.values()})
+    assert sorted(types) == sorted(_VALUES_BY_TYPE)
+    columns = {f"c{i}": name for i, name in enumerate(types)}
+    rows = [
+        (k, *(_VALUES_BY_TYPE[name][k] for name in columns.values())) for k in range(5)
+    ]
+    ddl = ", ".join(f"{c} {name}" for c, name in columns.items())
+    df = spark.createDataFrame(rows, f"id int, {ddl}")
+    iv = next(c for c, name in columns.items() if name.startswith("interval"))
+    df = df.withColumn("iv_pg", F.col(iv).alias("iv_pg", metadata={"sql_type": "interval"}))
+    table = "dg_spark_copy_types"
+    write_sql_table(df.repartition(3), table, "pg", EmptyIndexProvider(), dsn=pg_dsn)
+    try:
+        back = read_pg_parallel(spark, pg_dsn, table, partition_column="id", num_partitions=2)
+        got = sorted(tuple(r)[:-1] for r in back.collect())
+        micros = _pg_rows(
+            pg_dsn, f'SELECT id, (EXTRACT(EPOCH FROM iv_pg) * 1000000)::bigint FROM "{table}"'
+        )
+    finally:
+        _pg_drop(pg_dsn, table)
+
+    def as_read(name, v):
+        if v is None:
+            return None
+        if name == "binary":
+            return "\\x" + bytes(v).hex()
+        if name.startswith("interval"):
+            return str(v)
+        return v
+
+    def key(v):  # NaN never equals itself
+        return "nan" if isinstance(v, float) and math.isnan(v) else v
+
+    want = sorted(  # Spark's own values: a float column holds float32s
+        (r[0], *(as_read(name, v) for name, v in zip(columns.values(), r[1:-1])))
+        for r in df.collect()
+    )
+    assert [tuple(map(key, r)) for r in got] == [tuple(map(key, r)) for r in want]
+    ivs = _VALUES_BY_TYPE["interval day to second"]
+    assert sorted((int(k), v if v is None else int(v)) for k, v in micros) == [
+        (k, v if v is None else v // dt.timedelta(microseconds=1)) for k, v in enumerate(ivs)
+    ]
 
 
 def test_psql_cli_connection_batches_are_atomic(pg_dsn):
@@ -854,6 +956,59 @@ def test_split_dsn_password_forms():
     conn = PsqlCliConnection("postgresql://u:topsecret@h:5432/db")
     assert all("topsecret" not in a for a in conn._argv("-c", "SELECT 1"))
     assert conn._env()["PGPASSWORD"] == "topsecret"
+
+
+def test_psql_transport_runs_the_client_binary_behind_debians_wrapper(
+    tmp_path, monkeypatch, request
+):
+    """On a Debian layout (``psql`` a link to ``postgresql-common/
+    pg_wrapper``) a DSN that pins host, port and dbname runs the newest
+    versioned binary, which the wrapper would exec anyway; a DSN that
+    leaves any of them (or a service) open keeps the wrapper and its
+    defaults. Without the wrapper ``psql`` runs as found. Every
+    invocation passes ``-X``."""
+    import os
+
+    from datagouv_tools_spark.sinks import pg_copy
+    from datagouv_tools_spark.sinks.pg_copy import PsqlCliConnection
+
+    def executable(path):
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text("#!/bin/sh\n")
+        path.chmod(0o755)
+        return str(path)
+
+    wrapper = executable(tmp_path / "share/postgresql-common/pg_wrapper")
+    bindir = tmp_path / "bin"
+    bindir.mkdir()
+    (bindir / "psql").symlink_to(wrapper)
+    lib = tmp_path / "lib/postgresql"
+    for version in ("9.6", "10", "16", "15"):
+        executable(lib / version / "bin/psql")
+    monkeypatch.setenv("PATH", str(bindir))
+    monkeypatch.setattr(pg_copy, "_PG_LIB", str(lib))
+    request.addfinalizer(pg_copy._psql_binaries.cache_clear)
+    pg_copy._psql_binaries.cache_clear()
+
+    def binary(dsn):
+        argv = PsqlCliConnection(dsn)._argv("-c", "SELECT 1")
+        assert argv[2] == "-X", argv
+        return argv[0]
+
+    psql, direct = str(bindir / "psql"), str(lib / "16/bin/psql")
+    assert binary("postgresql://u:pw@h:5432/db") == direct
+    assert binary("host=h port=5432 dbname=db user=u password=pw") == direct
+    for dsn in (
+        "postgresql://u@h/db", "postgresql://u@:5432/db", "postgresql://u@h:5432",
+        "postgresql://u@h:5432/db?service=s", "service=s host=h port=5432 dbname=db",
+        "dbname=db",
+    ):
+        assert binary(dsn) == psql, dsn
+
+    os.remove(bindir / "psql")
+    executable(bindir / "psql")
+    pg_copy._psql_binaries.cache_clear()
+    assert binary("postgresql://u@h:5432/db") == psql
 
 
 def test_psql_cli_fetch_prefixes_and_loud_fetchall(pg_dsn):

@@ -217,3 +217,21 @@ def test_stream_fixture_dirs_removed_at_exit(tmp_path, sf_dir):
     assert os.path.dirname(src) == str(tmp_path)
     assert not os.path.exists(src)
     assert not [d for d in os.listdir(tmp_path) if d.startswith("scd2_stream_src_")]
+
+
+def test_user_scd2_stream_removes_its_work_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A call's store, intervals and checkpoint dir is gone when it
+    returns; the result was materialized first and still reads."""
+    import tempfile
+
+    from datagouv_tools_spark.queries.streaming import (
+        _scd2_stream_fixture,
+        user_scd2_stream,
+    )
+
+    _scd2_stream_fixture(spark, sf_dir)  # the per-process source, made elsewhere
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got = user_scd2_stream(spark, sf_dir)
+    assert os.listdir(tmp_path) == []
+    rows = got.collect()
+    assert rows and rows == sorted(rows, key=lambda r: (r.user_id, r.valid_from))

@@ -25,7 +25,7 @@ from scalecheck import verdict  # noqa: E402
 BAD = "no_such_query"
 
 
-def test_every_cli_rejects_unknown_names_before_any_work(tmp_path):
+def test_every_cli_rejects_unknown_names_before_any_work(tmp_path, git_snapshot):
     outputs = {
         "SPARK_GRAFT_BENCH_FULL": tmp_path / "bench_full.json",
         "SPARK_GRAFT_BENCH_AB": tmp_path / "ab.json",
@@ -47,7 +47,7 @@ def test_every_cli_rejects_unknown_names_before_any_work(tmp_path):
         "bench": (["bench.py"], {"SPARK_GRAFT_BENCH_QUERIES": f"q1_pricing_summary,{BAD}"}),
         "bench --against": (
             ["bench.py", "--against", "HEAD"],
-            {"SPARK_GRAFT_AB_QUERIES": f"q1_pricing_summary,{BAD}"},
+            {"SPARK_GRAFT_AB_QUERIES": f"q1_pricing_summary,{BAD}", **git_snapshot},
         ),
         "benchsf1": (["tools/benchsf1.py", "q1_pricing_summary", BAD], {}),
         "scalecheck": (["tools/scalecheck.py", BAD], {}),
