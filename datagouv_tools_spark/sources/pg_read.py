@@ -71,24 +71,30 @@ def _quote_ident(name: str) -> str:
     return '"' + name.replace('"', '""') + '"'
 
 
-def pg_table_schema(dsn: str, table: str) -> T.StructType:
-    """Infer a Spark schema for a PostgreSQL table from
-    ``information_schema.columns`` (driver-side, one catalog query)."""
+def _fetchall(dsn: str, sql: str) -> list[tuple]:
+    """The rows of one driver-side query, on a connection of its own."""
     from datagouv_tools_spark.sinks.pg_copy import _connect
 
     conn = _connect(dsn)
     try:
         cur = conn.cursor()
-        lit = table.replace("'", "''")
-        cur.execute(
-            "SELECT column_name, data_type, numeric_precision, numeric_scale"
-            " FROM information_schema.columns"
-            f" WHERE table_name = '{lit}' AND table_schema = 'public'"
-            " ORDER BY ordinal_position"
-        )
-        rows = cur.fetchall()
+        cur.execute(sql)
+        return cur.fetchall()
     finally:
         conn.close()
+
+
+def pg_table_schema(dsn: str, table: str) -> T.StructType:
+    """Infer a Spark schema for a PostgreSQL table from
+    ``information_schema.columns`` (driver-side, one catalog query)."""
+    lit = table.replace("'", "''")
+    rows = _fetchall(
+        dsn,
+        "SELECT column_name, data_type, numeric_precision, numeric_scale"
+        " FROM information_schema.columns"
+        f" WHERE table_name = '{lit}' AND table_schema = 'public'"
+        " ORDER BY ordinal_position",
+    )
     if not rows:
         raise ValueError(f"table {table!r} not found in PostgreSQL catalog")
     fields = []
@@ -179,16 +185,8 @@ def read_pg_parallel(
         slices = [predicate or None]
     else:
         if lower_bound is None or upper_bound is None:
-            from datagouv_tools_spark.sinks.pg_copy import _connect
-
             q = _quote_ident(partition_column)
-            conn = _connect(dsn)
-            try:
-                cur = conn.cursor()
-                cur.execute(f"SELECT MIN({q}), MAX({q}) FROM {_quote_ident(table)}")
-                lo, hi = cur.fetchall()[0]
-            finally:
-                conn.close()
+            ((lo, hi),) = _fetchall(dsn, f"SELECT MIN({q}), MAX({q}) FROM {_quote_ident(table)}")
             if lo is None:  # empty table (or all-NULL keys)
                 lower_bound, upper_bound = 0, 1
             else:
@@ -224,9 +222,9 @@ def read_pg_parallel(
 
     # JVM-side casts to the inferred schema (inside codegen; the Python
     # boundary above only shuttles strings)
-    casted = [
-        F.col(f.name).cast(f.dataType).alias(f.name) if not isinstance(f.dataType, T.StringType)
-        else F.col(f.name)
-        for f in schema.fields
-    ]
-    return raw.select(casted)
+    # backticked: a name with a dot is one column, not a struct field
+    cols = [F.col("`" + f.name.replace("`", "``") + "`") for f in schema.fields]
+    return raw.select([
+        c if isinstance(f.dataType, T.StringType) else c.cast(f.dataType).alias(f.name)
+        for c, f in zip(cols, schema.fields)
+    ])

@@ -549,3 +549,25 @@ def test_psqlrc_output_never_reaches_a_read_live(spark, pg_dsn, tmp_path, monkey
         assert Counter(got.collect()) == Counter(df.collect())
     finally:
         _drop_table(pg_dsn, table)
+
+
+def test_read_pg_parallel_dotted_and_backticked_column_names_live(spark, pg_dsn):
+    """A column named ``a.b`` is one column, not a struct field, and a
+    backtick in a name is a character of it: both load and read back by
+    name, over one slice and over two."""
+    table = "dg_spark_read_names"
+    schema = T.StructType([
+        T.StructField("id", T.IntegerType()),
+        T.StructField("a.b", T.IntegerType()),
+        T.StructField("x`y", T.StringType()),
+    ])
+    df = spark.createDataFrame([(i, i * 10, f"v{i}") for i in range(6)], schema)
+    _load(df, pg_dsn, table)
+    try:
+        for n, kwargs in ((1, {}), (2, {"partition_column": "id", "num_partitions": 2})):
+            got = read_pg_parallel(spark, pg_dsn, table, **kwargs)
+            assert got.schema == schema
+            assert got.rdd.getNumPartitions() == n
+            assert Counter(got.collect()) == Counter(df.collect())
+    finally:
+        _drop_table(pg_dsn, table)

@@ -208,3 +208,15 @@ def test_scrub_reassembly_matches_bruteforce(spark, texts, seg_len):
         .collect()
     }
     assert got == expect, f"texts={texts!r} seg_len={seg_len}"
+
+
+@given(st.dictionaries(
+    st.sampled_from(["host", "port", "dbname", "user", "password", "options"]),
+    st.text(max_size=20),
+))
+def test_conninfo_roundtrips_through_the_dsn_parser(params):
+    """Any text value, quotes, backslashes, spaces and newlines
+    included, reads back from the key=value text ``_conninfo`` writes."""
+    from datagouv_tools_spark.sinks.pg_copy import _conninfo, _dsn_params
+
+    assert _dsn_params(_conninfo(params)) == params

@@ -125,3 +125,31 @@ def test_merge_record_keeps_rows_of_other_names(tmp_path):
 )
 def test_scalecheck_verdict_rule(data_ratio, table):
     assert [verdict(r, data_ratio) for r, _ in table] == [v for _, v in table]
+
+
+def test_streamprof_reads_only_its_own_applications_event_log(tmp_path):
+    """Job IDs restart at 0 in every application: a second application's
+    log in the same dir, with the same job IDs, must not lend its end
+    times to the profiled one's jobs."""
+    from streamprof import parse_event_log
+
+    def log(path, events):
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text("".join(json.dumps(ev) + "\n" for ev in events))
+
+    def job(job_id, start, end):
+        return [
+            {"Event": "SparkListenerJobStart", "Job ID": job_id, "Submission Time": start,
+             "Properties": {"spark.job.description": f"job {job_id}"}},
+            {"Event": "SparkListenerJobEnd", "Job ID": job_id, "Completion Time": end},
+        ]
+
+    old, new, live = "local-1700000000000", "local-1700000100000", "local-1700000200000"
+    log(tmp_path / old, job(0, 1_000, 1_100) + job(1, 1_200, 1_300))  # not rolled
+    log(tmp_path / f"eventlog_v2_{new}/events_1_{new}", job(0, 100_000, 100_250))
+    log(tmp_path / f"eventlog_v2_{new}/events_2_{new}", job(1, 100_300, 100_400))
+    log(tmp_path / f"{live}.inprogress", job(0, 200_000, 200_050))
+    got = parse_event_log(str(tmp_path), new, 0, 300_000)
+    assert [(j["job"], j["t_ms"], j["dur_ms"]) for j in got] == [(0, 0, 250), (1, 300, 100)]
+    assert [j["dur_ms"] for j in parse_event_log(str(tmp_path), old, 0, 300_000)] == [100, 100]
+    assert [j["dur_ms"] for j in parse_event_log(str(tmp_path), live, 0, 300_000)] == [50]

@@ -31,15 +31,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 EVLOG_DIR = "/tmp/streamprof_evlog"
 
 
-def parse_event_log(evdir: str, t0_ms: float, t1_ms: float) -> list[dict]:
-    """Jobs whose submission fell inside [t0, t1], with descriptions."""
+def parse_event_log(evdir: str, app_id: str, t0_ms: float, t1_ms: float) -> list[dict]:
+    """Jobs of application ``app_id`` whose submission fell inside
+    [t0, t1], with descriptions. Job IDs restart at 0 in every
+    application, so only its own log is read: the file ``<app_id>``
+    (``.inprogress`` while it runs), or the ``events_<n>_<app_id>``
+    files that Spark 4 rolls into ``eventlog_v2_<app_id>`` by default."""
     import glob
 
     jobs: dict[int, dict] = {}
-    # Spark 4 rolls event logs into eventlog_v2_* dirs by default
-    for path in glob.glob(f"{evdir}/**/*", recursive=True):
-        if os.path.isdir(path):
-            continue
+    rolled = glob.glob(f"{evdir}/eventlog_v2_{app_id}/events_*_{app_id}")
+    rolled.sort(key=lambda path: int(os.path.basename(path).split("_")[1]))
+    single = [f"{evdir}/{app_id}{s}" for s in ("", ".inprogress")]
+    for path in [p for p in single if os.path.isfile(p)] + rolled:
         with open(path, errors="replace") as fh:
             for line in fh:
                 try:
@@ -137,7 +141,7 @@ def main(argv: list[str]) -> int:
             }
             for p in progresses
         ]
-        jobs = parse_event_log(EVLOG_DIR, t0, t1)
+        jobs = parse_event_log(EVLOG_DIR, spark.sparkContext.applicationId, t0, t1)
         report[name] = {
             "wall_s": round(wall, 3),
             "batches": batches,
