@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datagouv_tools_spark.functions.litfast import lit_bigint_array
 from datagouv_tools_spark.functions.xhash import md5_hash60
 
 __all__ = ["bloom_build", "bloom_contains", "bloom_prefilter_join"]
@@ -45,16 +46,8 @@ __all__ = ["bloom_build", "bloom_contains", "bloom_prefilter_join"]
 _BIT_VALUES = [(1 << b) - ((1 << 64) if b == 63 else 0) for b in range(64)]
 
 
-def _sql_bigint_array(values: list[int]) -> Column:
-    """One JVM-parsed array literal. Building it element-wise
-    (``F.array(*[F.lit(v) ...])``) costs one py4j round trip PER
-    element — ~4 400 driver calls per query for a 2^16-bit filter,
-    seconds of pure Python/py4j overhead before any data moves."""
-    return F.expr("array(" + ",".join(f"{v}L" for v in values) + ")")
-
-
 def _bit_of(pos: Column) -> Column:
-    return F.element_at(_sql_bigint_array(_BIT_VALUES), (pos % 64).cast("int") + 1)
+    return F.element_at(lit_bigint_array(_BIT_VALUES), (pos % 64).cast("int") + 1)
 
 
 def _positions(key: Column, m_bits: int, k: int, hash_mode: str) -> list[Column]:
@@ -106,7 +99,7 @@ def bloom_contains(
     m = m_bits if m_bits is not None else len(words) * 64
     if len(words) * 64 != m:
         raise ValueError("word list does not match m_bits")
-    arr = _sql_bigint_array(words)
+    arr = lit_bigint_array(words)
     cond = F.lit(True)
     for p in _positions(key, m, k, hash_mode):
         word = F.element_at(arr, F.floor(p / 64).cast("int") + 1)

@@ -15,15 +15,20 @@ Doubles are rendered as ``CAST('<repr>' AS DOUBLE)``: Python ``repr``
 emits the shortest string that round-trips to the same IEEE double, and
 ``Double.parseDouble`` of that string yields the bit-identical value, so
 no precision is lost crossing the text boundary.
+
+Strings holding a quote or a backslash are rendered from their UTF-8
+bytes as a hex literal (``decode(X'..', 'UTF-8')``), which no parser
+setting reads differently — ``spark.sql.parser.escapedStringLiterals``
+only changes how escapes inside quoted strings are read — and which
+constant-folds to the same string ``Literal``.
 """
 
 from __future__ import annotations
 
 import math
-import weakref
 from collections.abc import Iterable, Sequence
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -43,36 +48,14 @@ def sql_double(v: float) -> str:
     return _fmt_double(v)
 
 
-#: sessions already verified to have live backslash escapes (the
-#: default); checked once per session so ordinary strings stay 0-RPC.
-_ESC_CHECKED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-
-def _assert_live_escapes() -> None:
-    """Fail loudly if ``spark.sql.parser.escapedStringLiterals`` is on:
-    under that conf the rendered ``\\\\`` stays two literal backslashes
-    (and ``\\'`` keeps its backslash), silently changing the value."""
-    s = SparkSession.getActiveSession()
-    if s is None or s in _ESC_CHECKED:
-        return
-    v = s.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-    if str(v).lower() == "true":
-        raise RuntimeError(
-            "litfast.sql_string renders backslash/quote escapes, which "
-            "spark.sql.parser.escapedStringLiterals=true would parse as "
-            "literal characters; unset the conf or avoid the SQL-text "
-            "fast path for strings containing \\ or '"
-        )
-    _ESC_CHECKED.add(s)
-
-
 def sql_string(s: str) -> str:
-    """Escaped SQL string literal (backslash escapes are live in Spark
-    SQL string literals by default; sessions running with
-    ``escapedStringLiterals=true`` are rejected loudly)."""
-    if "\\" in s or "'" in s:
-        _assert_live_escapes()
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """SQL string literal that evaluates to ``s`` under any session
+    setting: ``'s'`` when ``s`` holds neither a quote nor a backslash,
+    otherwise ``decode(X'<UTF-8 hex>', 'UTF-8')``, so no escape is ever
+    rendered for the parser to read."""
+    if "\\" not in s and "'" not in s:
+        return "'" + s + "'"
+    return f"decode(X'{s.encode('utf-8').hex().upper()}', 'UTF-8')"
 
 
 def sql_ref(name: str) -> str:

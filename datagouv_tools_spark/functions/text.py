@@ -21,7 +21,6 @@ __all__ = [
     "quality_score",
     "lang_id",
     "fingerprint_md5",
-    "char_ngrams",
     "bpe_ish_token_count",
     "STOPWORDS",
 ]
@@ -166,17 +165,6 @@ def fingerprint_md5(col: Column | str) -> Column:
         F.regexp_replace(F.lower(_c(col)), WS + "+", " "), F.lit(" ")
     )
     return F.md5(normalized)
-
-
-def char_ngrams(col: Column | str, n: int = 3) -> Column:
-    """Character n-gram shingles of the normalized text (for MinHash /
-    Jaccard). Expression-only: substring over a generated index range."""
-    normalized = F.btrim(
-        F.regexp_replace(F.lower(_c(col)), WS + "+", " "), F.lit(" ")
-    )
-    length = F.length(normalized)
-    idx = F.sequence(F.lit(1), F.greatest(length - (n - 1), F.lit(1)))
-    return F.when(length >= n, F.transform(idx, lambda i: normalized.substr(i, F.lit(n))))
 
 
 def bpe_ish_token_count(col: Column | str) -> Column:

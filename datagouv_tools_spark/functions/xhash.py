@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["md5_hash60", "sql_md5_hash60", "token_hash_expr"]
+__all__ = ["md5_hash60", "token_hash_expr"]
 
 
 def _c(col: Column | str) -> Column:
@@ -32,11 +32,6 @@ def _c(col: Column | str) -> Column:
 def md5_hash60(col: Column | str) -> Column:
     """60-bit positive bigint from the md5 hex digest (cross-engine)."""
     return F.conv(F.substring(F.md5(_c(col)), 1, 15), 16, 10).cast("bigint")
-
-
-def sql_md5_hash60(expr: str) -> str:
-    """The DuckDB twin of ``md5_hash60`` over SQL expression ``expr``."""
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 
 
 def token_hash_expr(token: Column, token_hash: str) -> Column:

@@ -432,8 +432,9 @@ def dedup_clusters(
     (MinHash bands, SimHash, embedding cosine).
 
     Bounded local finish: if the edge set fits ``max_local_edges``
-    (proved by the same limit-collect guard as cosine_pairs_exact — one
-    action both fetches and checks the bound), union-find runs on the
+    (proved by the same bounded fetch as cosine_pairs_exact — one
+    ``toArrow()`` of ``limit(bound + 1)`` both fetches and checks the
+    bound, in one job), union-find runs on the
     driver and the labels are parallelized back; otherwise min-label
     propagation with pointer jumping runs distributed (``_cc_minlabel``:
     one |E| shuffle + one label-hop join per round, a few rounds on
@@ -478,20 +479,7 @@ def _cc_local(
     sel = pairs.select(
         F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
     ).limit(max_edges + 1)
-    # One job, not an incremental take: executeTake's partition scaling
-    # (1 -> 4 -> 16 -> ... partitions per spark.sql.limit.scaleUpFactor)
-    # is built for top-k early exit, but this probe EXPECTS to scan the
-    # whole (bounded) edge set — under the bound every scaling round is
-    # a sequential job over final-stage partitions that could have run
-    # in parallel (measured: 4-5 jobs -> 1, ~0.3-1.5 s per affected
-    # query). Over the bound, tasks still short-circuit at the
-    # per-partition LocalLimit, so the oversize probe stays one pass.
-    # Lock-scoped override window (operators/onepass.py): concurrent
-    # probes cannot race the save/restore and leave 2^30 set globally.
-    from datagouv_tools_spark.operators.onepass import one_pass_limit
-
-    with one_pass_limit(pairs.sparkSession):
-        tbl = sel.toArrow()
+    tbl = sel.toArrow()
     if tbl.num_rows > max_edges:
         return None
     rows = list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()))

@@ -38,7 +38,6 @@ from pyspark.sql import types as T
 
 __all__ = [
     "MEDIA_SCHEMA",
-    "media_table_schema",
     "attach_media_metadata",
     "decode_ppm",
     "encode_ppm",
@@ -71,17 +70,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("sha256", T.StringType()),
     ]
 )
-
-
-def media_table_schema(id_type: T.DataType = T.LongType()) -> T.StructType:
-    """Canonical multimodal table: (media_id, payload, meta)."""
-    return T.StructType(
-        [
-            T.StructField("media_id", id_type),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("meta", MEDIA_SCHEMA),
-        ]
-    )
 
 
 def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:

@@ -140,34 +140,37 @@ def cosine_pairs_exact(
     Determinism: sims are rounded half-up to ``round_to`` before the
     threshold compare, matching the SQL oracle; BLAS accumulation differs
     from sequential by ~1 ULP, invisible at 6 decimals.
+
+    This kernel BROADCASTS its input, so the input is bounded to
+    ``max_rows`` (``ValueError`` over it): it is the in-bucket /
+    in-block verifier, and corpus-scale all-pairs goes through
+    ``cosine_pairs_blocked``. The input crosses to the driver as one
+    Arrow table, ``toArrow()`` of ``limit(max_rows + 1)``, which both
+    fetches it and proves the bound in one job.
     """
     import numpy as np
     import pandas as pd
 
-    # This kernel BROADCASTS the input (driver collect): it is the
-    # in-bucket / in-block verifier, never the corpus-wide path. The
-    # guard makes that contract executable — corpus-scale all-pairs
-    # must go through cosine_pairs_blocked. One action: collecting
-    # limit(max_rows+1) both fetches the kernel input AND proves the
-    # bound (a separate count() would execute the upstream lineage
-    # twice).
-    # One job, not an incremental take (same rationale as dedup._cc_local):
-    # the guard expects to fetch the whole bounded input, so the take's
-    # 1 -> 4 -> 16 partition scaling only adds sequential job rounds.
-    # The override window is lock-scoped (operators/onepass.py) so
-    # concurrent probes cannot race the save/restore.
-    from datagouv_tools_spark.operators.onepass import one_pass_limit
-
-    with one_pass_limit(df.sparkSession):
-        rows = df.select(id_col, vec_col).limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    tbl = df.select(id_col, vec_col).limit(max_rows + 1).toArrow()
+    if tbl.num_rows > max_rows:
         raise ValueError(
             f"cosine_pairs_exact collects its input to the driver and is "
             f"bounded to {max_rows} rows; use cosine_pairs_blocked for "
             f"corpus-scale exact all-pairs"
         )
-    c_ids = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-    c_mat = np.array([r[1] for r in rows], dtype=np.float64)
+    ids, vecs = tbl.column(0).combine_chunks(), tbl.column(1).combine_chunks()
+    lens = np.diff(vecs.offsets.to_numpy())
+    if ids.null_count or vecs.null_count or np.any(lens != lens[:1]):
+        raise ValueError(
+            "cosine_pairs_exact needs non-null ids and vectors of one length"
+        )
+    c_ids = ids.to_numpy().astype(np.int64)
+    c_mat = (
+        vecs.flatten()
+        .to_numpy(zero_copy_only=False)
+        .astype(np.float64)
+        .reshape(len(vecs), int(lens[0]) if len(lens) else 0)
+    )
     with np.errstate(invalid="ignore"):
         c_norms = np.sqrt(np.einsum("ij,ij->i", c_mat, c_mat))
     bc = df.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_norms))

@@ -30,8 +30,6 @@ __all__ = [
     "read_schemas",
     "exchange_count",
     "has_broadcast_hash_join",
-    "has_shuffle_join",
-    "codegen_stage_count",
     "scaling_broadcast_tables",
     "single_partition_windows_scaling",
     "unbounded_bnlj_sides",
@@ -80,16 +78,6 @@ def exchange_count(df: DataFrame) -> int:
 
 def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
-
-
-def has_shuffle_join(df: DataFrame) -> bool:
-    plan = physical_plan(df)
-    return "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """WholeStageCodegen spans; hot paths should sit inside one."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", physical_plan(df, "simple"))))
 
 
 # --- broadcast-hint grain audit -------------------------------------

@@ -319,6 +319,56 @@ def test_cosine_pairs_exact_rejects_unbounded_input(spark, sf_dir):
         cosine_pairs_exact(emb, "vec_id", "embedding", max_rows=5).collect()
 
 
+def test_bounded_fetch_is_one_job(spark):
+    """The bounded driver fetches (``toArrow()`` of ``limit(n + 1)``) run
+    as ONE job at the default ``spark.sql.limit.initialNumPartitions``,
+    on a 16-partition input with no shuffle: the fetch scans every
+    partition at once instead of the 1 -> 4 -> 16 rounds of a take."""
+    from datagouv_tools_spark.operators.dedup import _cc_local
+    from datagouv_tools_spark.operators.similarity import cosine_pairs_exact
+
+    assert spark.conf.get("spark.sql.limit.initialNumPartitions", None) is None
+    # explode hides the row count, so the optimizer cannot drop the limit
+    ids = spark.range(0, 64, 1, numPartitions=16).select(
+        F.explode(F.array("id")).alias("id")
+    )
+    pairs = ids.select(F.col("id").alias("id_a"), (F.col("id") % 8).alias("id_b"))
+    vecs = ids.select(
+        F.col("id").alias("vec_id"),
+        F.array(F.sin("id"), F.cos("id")).alias("embedding"),
+    )
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    labels, n = jobs_of("cc_local_fetch", lambda: _cc_local(pairs, "id_a", "id_b", 1000))
+    assert labels is not None and labels.count() == 64
+    assert n == 1, n
+    _, n = jobs_of("cosine_exact_fetch", lambda: cosine_pairs_exact(vecs))
+    assert n == 1, n
+
+
+def test_cosine_pairs_exact_rejects_ragged_or_null_vectors(spark):
+    from datagouv_tools_spark.operators.similarity import cosine_pairs_exact
+
+    for rows in (
+        [(1, [1.0, 0.0]), (2, [1.0])],
+        [(1, [1.0, 0.0]), (2, None)],
+        [(1, [1.0, 0.0, 0.0]), (2, [1.0])],
+    ):
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        with pytest.raises(ValueError):
+            cosine_pairs_exact(df)
+
+
 def test_cosine_pairs_blocked_matches_exact_kernel(spark, sf_dir):
     """The distributed block-matrix decomposition must be a pure
     re-plan of the exact kernel: identical pairs, identical rounded

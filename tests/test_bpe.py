@@ -62,6 +62,28 @@ def test_merge_fold_sql_equals_column_form(spark):
         assert [r.m for r in got] == [r.m for r in want], (lft, rgt)
 
 
+def test_merge_fold_sql_under_escaped_string_literals(spark):
+    """With ``spark.sql.parser.escapedStringLiterals`` on, the parsed SQL
+    fold still equals the Column fold, for a pair holding a quote and a
+    backslash as well as for a plain one."""
+    from datagouv_tools_spark.operators.bpe import _merge_fold_sql
+
+    df = spark.createDataFrame(
+        [("o'x b\\c o'x",), ("a a a",), ("b\\c o'x b\\c",), ("a",)], "s string"
+    )
+    key = "spark.sql.parser.escapedStringLiterals"
+    for lft, rgt in [("o'x", "b\\c"), ("a", "a")]:
+        want = df.select(
+            _merge_fold(F.split("s", " "), F.lit(lft), F.lit(rgt)).alias("m")
+        ).collect()
+        spark.conf.set(key, "true")
+        try:
+            got = df.select(F.expr(_merge_fold_sql(lft, rgt)).alias("m")).collect()
+        finally:
+            spark.conf.unset(key)
+        assert [r.m for r in got] == [r.m for r in want], (lft, rgt)
+
+
 def test_merge_fold_suffix_boundary(spark):
     """A symbol that merely ENDS with the left token must not merge:
     'xa b' with pair (a, b) stays intact."""

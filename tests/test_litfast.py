@@ -83,20 +83,31 @@ def test_sql_ref_dotted_names_match_f_col(spark):
     assert via_sql == via_col
 
 
-def test_sql_string_rejects_escaped_string_literals_conf(spark):
-    import datagouv_tools_spark.functions.litfast as lf
+def test_sql_string_same_value_under_escaped_string_literals_conf(spark):
+    """A rendered string literal reads back as the Python string whether
+    ``spark.sql.parser.escapedStringLiterals`` is off or on, and inside
+    a lambda as well as at top level; a string with neither a quote nor
+    a backslash keeps its plain ``'...'`` text."""
+    from datagouv_tools_spark.functions.litfast import sql_string
 
-    assert lf.sql_string("a'b\\c") == "'a\\'b\\\\c'"
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    lf._ESC_CHECKED.discard(spark)
-    try:
-        with pytest.raises(RuntimeError):
-            lf.sql_string("a\\b")
-        # plain strings never touch the conf check
-        assert lf.sql_string("plain") == "'plain'"
-    finally:
-        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
-        lf._ESC_CHECKED.discard(spark)
+    assert sql_string("plain") == "'plain'"
+    assert sql_string("été") == "'été'"
+    assert sql_string("") == "''"
+    vals = ["a'b\\c", "a\\b", "'", "\\", "\\'", "l'été", "été", "", "plain"]
+    key = "spark.sql.parser.escapedStringLiterals"
+    for setting in ("false", "true"):
+        spark.conf.set(key, setting)
+        try:
+            row = spark.range(1).select(
+                *[F.expr(sql_string(v)).alias(f"c{i}") for i, v in enumerate(vals)],
+                F.expr(
+                    f"transform(array(1), x -> {sql_string(vals[0])})[0]"
+                ).alias("lam"),
+            ).collect()[0]
+        finally:
+            spark.conf.unset(key)
+        assert list(row)[: len(vals)] == vals, setting
+        assert row["lam"] == vals[0], setting
 
 
 def test_vectors_sql_path_dotted_and_shadowed_names(spark):
@@ -115,20 +126,3 @@ def test_vectors_sql_path_dotted_and_shadowed_names(spark):
     z = dfx.select(V.normalize("x").alias("z")).collect()[0]["z"]
     assert [round(v, 6) for v in z] == [0.6, 0.8]
 
-
-def test_one_pass_limit_restores_under_concurrency(spark):
-    import threading
-
-    from datagouv_tools_spark.operators.onepass import _KEY, one_pass_limit
-
-    def worker():
-        for _ in range(10):
-            with one_pass_limit(spark):
-                assert spark.conf.get(_KEY) == str(1 << 30)
-
-    threads = [threading.Thread(target=worker) for _ in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert spark.conf.get(_KEY, None) is None

@@ -40,10 +40,30 @@ def test_query_runs(spark, sf_dir, name):
 
 
 @pytest.fixture(scope="module")
-def query_schemas(spark, sf_dir):
-    """Each declared query's output schema, built once for the two
-    schema checks below (building all of them is the slow part)."""
-    return {name: fn(spark, sf_dir).schema for name, fn in QUERIES.items()}
+def built_queries(spark, sf_dir):
+    """Each declared query's output schema, built once for the checks
+    below (building all of them is the slow part), and the names of the
+    queries whose build calls ``operators.skew.fan_out_narrow_scan``,
+    found by a spy on that build."""
+    from datagouv_tools_spark.operators import skew
+
+    fan_out, callers, name = skew.fan_out_narrow_scan, set(), None
+
+    def spy(df):
+        callers.add(name)
+        return fan_out(df)
+
+    schemas = {}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(skew, "fan_out_narrow_scan", spy)
+        for name, fn in QUERIES.items():
+            schemas[name] = fn(spark, sf_dir).schema
+    return schemas, sorted(callers)
+
+
+@pytest.fixture(scope="module")
+def query_schemas(built_queries):
+    return built_queries[0]
 
 
 def test_no_query_returns_nested_types(query_schemas):
@@ -82,6 +102,23 @@ def test_no_query_returns_decimal_types(query_schemas):
         if bad:
             offenders.append((name, bad))
     assert not offenders, offenders
+
+
+def test_fan_out_narrow_scan_changes_no_result(spark, sf_dir, built_queries):
+    """Differential check of the narrow-scan fan-out: every query whose
+    build calls it returns the same rows with the helper replaced by the
+    identity (the plain path) as with it."""
+    from datagouv_tools_spark.operators import skew
+
+    callers = built_queries[1]
+    assert callers
+    for name in callers:
+        fast = QUERIES[name](spark, sf_dir).toPandas()
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(skew, "fan_out_narrow_scan", lambda df: df)
+            plain = QUERIES[name](spark, sf_dir).toPandas()
+        problems = compare(fast, plain)
+        assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE))

@@ -24,11 +24,10 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-EVLOG_DIR = "/tmp/streamprof_evlog"
 
 
 def parse_event_log(evdir: str, app_id: str, t0_ms: float, t1_ms: float) -> list[dict]:
@@ -89,76 +88,77 @@ def main(argv: list[str]) -> int:
         "events_stream_orphan_clicks",
     ])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(EVLOG_DIR, exist_ok=True)
-    spark = get_spark(
-        "streamprof",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": f"file://{EVLOG_DIR}",
-            # plain JSON lines: parse_event_log reads no codec
-            "spark.eventLog.compress": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # the event log lives only as long as the session that writes it
+    with tempfile.TemporaryDirectory(prefix="streamprof_evlog_") as evlog_dir:
+        spark = get_spark(
+            "streamprof",
+            extra_conf={
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": f"file://{evlog_dir}",
+                # plain JSON lines: parse_event_log reads no codec
+                "spark.eventLog.compress": "false",
+            },
+        )
+        spark.sparkContext.setLogLevel("ERROR")
 
-    progresses: list[dict] = []
+        progresses: list[dict] = []
 
-    class Capture(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
+        class Capture(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                pass
 
-        def onQueryProgress(self, event):
-            progresses.append(json.loads(event.progress.json))
+            def onQueryProgress(self, event):
+                progresses.append(json.loads(event.progress.json))
 
-        def onQueryIdle(self, event):
-            pass
+            def onQueryIdle(self, event):
+                pass
 
-        def onQueryTerminated(self, event):
-            pass
+            def onQueryTerminated(self, event):
+                pass
 
-    spark.streams.addListener(Capture())
+        spark.streams.addListener(Capture())
 
-    report: dict[str, dict] = {}
-    t0 = 0.0
-    for name in names:
+        report: dict[str, dict] = {}
+        t0 = 0.0
+        for name in names:
 
-        def profiled() -> None:
-            # the one timed run after the warm-up: only its batches and
-            # jobs are kept
-            nonlocal t0
-            progresses.clear()
-            t0 = time.time() * 1000
-            QUERIES[name](spark, sf_dir).collect()
+            def profiled() -> None:
+                # the one timed run after the warm-up: only its batches and
+                # jobs are kept
+                nonlocal t0
+                progresses.clear()
+                t0 = time.time() * 1000
+                QUERIES[name](spark, sf_dir).collect()
 
-        (wall,) = timed(profiled, 1)
-        time.sleep(2)  # let listener events drain
-        t1 = time.time() * 1000
-        batches = [
-            {
-                "batchId": p.get("batchId"),
-                "numInputRows": p.get("numInputRows"),
-                "durationMs": p.get("durationMs"),
+            (wall,) = timed(profiled, 1)
+            time.sleep(2)  # let listener events drain
+            t1 = time.time() * 1000
+            batches = [
+                {
+                    "batchId": p.get("batchId"),
+                    "numInputRows": p.get("numInputRows"),
+                    "durationMs": p.get("durationMs"),
+                }
+                for p in progresses
+            ]
+            jobs = parse_event_log(evlog_dir, spark.sparkContext.applicationId, t0, t1)
+            report[name] = {
+                "wall_s": round(wall, 3),
+                "batches": batches,
+                "trigger_total_ms": sum(
+                    (b["durationMs"] or {}).get("triggerExecution", 0)
+                    for b in batches
+                ),
+                "jobs": jobs,
+                "n_jobs": len(jobs),
             }
-            for p in progresses
-        ]
-        jobs = parse_event_log(EVLOG_DIR, spark.sparkContext.applicationId, t0, t1)
-        report[name] = {
-            "wall_s": round(wall, 3),
-            "batches": batches,
-            "trigger_total_ms": sum(
-                (b["durationMs"] or {}).get("triggerExecution", 0)
-                for b in batches
-            ),
-            "jobs": jobs,
-            "n_jobs": len(jobs),
-        }
-        print(json.dumps({name: {k: report[name][k] for k in
-                                 ("wall_s", "trigger_total_ms", "n_jobs")}}),
-              file=sys.stderr)
-    out = os.environ.get("SPARK_GRAFT_STREAMPROF", "STREAMPROF.json")
-    merge_record(out, report)
-    print(json.dumps({"out": out, "queries": list(report)}))
-    spark.stop()
+            print(json.dumps({name: {k: report[name][k] for k in
+                                     ("wall_s", "trigger_total_ms", "n_jobs")}}),
+                  file=sys.stderr)
+        out = os.environ.get("SPARK_GRAFT_STREAMPROF", "STREAMPROF.json")
+        merge_record(out, report)
+        print(json.dumps({"out": out, "queries": list(report)}))
+        spark.stop()
     return 0
 
 
