@@ -12,17 +12,35 @@ cluster:
   a-time pickling.
 - ANSI mode left at the Spark 4 default (true); ETL paths that ingest
   dirty data use ``try_*`` expressions instead of globally disabling ANSI.
+- Python workers fork from the package's ``worker_daemon`` (through
+  ``spark.python.daemon.module``), which spares each Python task the
+  re-read of every zip on its path that CPython < 3.13 does on PySpark's
+  per-task ``importlib.invalidate_caches()``; left to PySpark's own
+  daemon when workers started here could not import the package.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _workers_import_package() -> bool:
+    """Whether a Python worker daemon started by a JVM launched from here
+    can import this package: its parent directory is the working
+    directory (which ``python -m`` puts first on the worker's path),
+    on ``PYTHONPATH``, or a site-packages directory."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep) + site.getsitepackages()
+    if not os.environ.get("PYTHONSAFEPATH"):
+        paths.append(os.getcwd())
+    return any(p and os.path.realpath(p) == root for p in paths)
 
 
 def get_spark(
@@ -62,6 +80,10 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if _workers_import_package():
+        builder = builder.config(
+            "spark.python.daemon.module", "datagouv_tools_spark.worker_daemon"
+        )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

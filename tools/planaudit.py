@@ -70,7 +70,11 @@ def audit(plan: str) -> dict:
         "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", plan)),
         "python_row": len(re.findall(r"BatchEvalPython", plan)),
         "arrow_kernels": len(
-            re.findall(r"MapInPandas|ArrowEvalPython|FlatMapGroupsInPandas", plan)
+            re.findall(
+                r"MapIn(Pandas|Arrow)|Arrow(Eval|Aggregate|Window)Python"
+                r"|FlatMap(Co)?GroupsIn(Pandas|Arrow)",
+                plan,
+            )
         ),
         "exchanges": len(re.findall(r"Exchange (hash|range)partitioning", plan)),
         "python_rdd_scan": len(re.findall(r"Scan ExistingRDD", plan)),
